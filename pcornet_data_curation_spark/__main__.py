@@ -395,44 +395,41 @@ def main(argv: list[str] | None = None) -> int:
         import os
         import time as _time
 
-        from pyspark.sql import functions as F
+        import pyarrow.parquet as pq
 
         from pcornet_data_curation_spark.operators.checks import (
             DEFAULT_CHECKS,
-            run_checks,
+            evaluate_checks,
         )
-        from pcornet_data_curation_spark.operators.drift import staleness_metrics
-        from pcornet_data_curation_spark.operators.normalize import assemble_metrics
+        from pcornet_data_curation_spark.operators.drift import staleness_rows
+        from pcornet_data_curation_spark.operators.normalize import METRICS_SCHEMA
         from pcornet_data_curation_spark.plans.checkpoint import Manifest
 
         manifest_path = os.path.join(args.output, Manifest.FILENAME)
         with open(manifest_path) as f:
             manifest_data = json.load(f)
-        stored = spark.read.parquet(os.path.join(args.output, "metrics"))
+        cols = METRICS_SCHEMA.names
+        stored = pq.read_table(os.path.join(args.output, "metrics"), columns=cols)
         # replace the run-time staleness rows (age_sec ≈ 0 by
         # construction: the run had just re-marked every report) with
         # rows computed from the live manifest NOW — the only way the
         # 7-day-old-store check can observe a left-behind store
-        live = staleness_metrics(manifest_data, _time.time(), spark)
-        metrics = assemble_metrics(
-            [stored.where(F.col("dc_name") != "report_staleness"), live]
-        )
-        exceptions = run_checks(metrics, DEFAULT_CHECKS)
+        metrics = [
+            tuple(r[c] for c in cols)
+            for r in stored.to_pylist()
+            if r["dc_name"] != "report_staleness"
+        ] + staleness_rows(manifest_data, _time.time())
         # one row per check, deterministically: a check firing for
         # several categories (e.g. 12.02 per report) reports its WORST
-        # observed value, not whichever row a shuffle delivered first
+        # observed value
+        worst: dict[tuple, float] = {}
+        for r in evaluate_checks(metrics, DEFAULT_CHECKS):
+            if r[8]:
+                key = (r[0], r[2], r[9])
+                worst[key] = max(worst.get(key, r[7]), r[7])
         fired = [
-            {
-                "check_id": r["check_id"],
-                "description": r["description"],
-                "severity": r["severity"],
-                "observed": r["observed"],
-            }
-            for r in exceptions.where(F.col("exception"))
-            .groupBy("check_id", "description", "severity")
-            .agg(F.max("observed").alias("observed"))
-            .orderBy("check_id")
-            .collect()
+            {"check_id": c, "description": d, "severity": s, "observed": o}
+            for (c, d, s), o in sorted(worst.items())
         ]
         print(
             json.dumps(

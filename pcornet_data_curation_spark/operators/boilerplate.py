@@ -78,32 +78,6 @@ _EDGE_PUNCT = "^[^a-z0-9]+|[^a-z0-9]+$"
 BAD, NEAR, GOOD = 0, 1, 2
 
 
-def _line_class(line: Column, length_low: int, stopwords_high: float,
-                stopwords_low: float) -> Column:
-    """Initial jusText class for one trimmed non-empty line."""
-    low = F.lower(line)
-    marker = F.lit(False)
-    for m in MARKERS:
-        marker = marker | low.contains(m)
-    words = F.split(low, LINE_WS)
-    stop_n = F.size(
-        F.filter(
-            F.transform(words, lambda w: F.regexp_replace(w, _EDGE_PUNCT, "")),
-            lambda w: w.isin(*STOPWORDS),
-        )
-    )
-    ratio = stop_n / F.size(words)
-    return (
-        F.when(marker, F.lit(BAD))
-        .when(
-            (F.length(line) >= length_low) & (ratio >= stopwords_high),
-            F.lit(GOOD),
-        )
-        .when((ratio >= stopwords_low) & (F.size(words) >= 3), F.lit(NEAR))
-        .otherwise(F.lit(BAD))
-    )
-
-
 def trimmed_lines_col(col: Column) -> Column:
     """Non-empty, whitespace-collapsed lines of a text column (NULL
     folds to no lines)."""
@@ -125,13 +99,13 @@ def classes_col(
     """Per-line initial class array (the expensive part: one stopword
     transform per line).
 
-    Chained struct-array transforms, not one `_line_class` expression
-    per element: higher-order-function lambdas are interpreted, and an
+    Chained struct-array transforms, not one whole-class expression per
+    element: higher-order-function lambdas are interpreted, and an
     interpreted expression tree re-evaluates a subexpression per
-    REFERENCE — `_line_class` references lower(line) 8× (7 marker
+    REFERENCE — a single expression references lower(line) 8× (7 marker
     `contains` + the word split) and the word split 3× (stopword
     filter, denominator, word count), so the dominant lower/split work
-    ran ~10×/3× per line. Binding each intermediate to a struct FIELD
+    would run ~10×/3× per line. Binding each intermediate to a struct FIELD
     of the previous transform's output makes every later use a cheap
     GetStructField on a materialized value: one lower, one split, one
     per-word edge-punct regex per line. Same operators, same values —

@@ -3,16 +3,20 @@
 Reference analog: edc_prep.sas (expected-output registry vs produced,
 :56-125) + edc_report.sas (threshold checks -> exception rows with
 severity, :865-944, 11280-11361). Checks are data: a registry of
-(check_id, dc_name, statistic, op, threshold, severity) evaluated with
-one join + Column algebra over the (small) metrics table.
+(check_id, dc_name, statistic, op, threshold, severity) evaluated on
+the driver over the (small) metrics rows; `run_checks` is the same
+evaluation behind a DataFrame interface.
 """
 
 from __future__ import annotations
 
+import math
+from collections import defaultdict
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
+
+from pcornet_data_curation_spark.operators.normalize import METRICS_SCHEMA
 
 
 @dataclass(frozen=True)
@@ -119,60 +123,69 @@ DEFAULT_CHECKS: tuple[Check, ...] = (
 )
 
 
-def expected_reports_check(
-    produced: list[str], expected: list[str], spark
-) -> DataFrame:
+EXCEPTIONS_DDL = (
+    "check_id string, family string, description string, dc_name string, "
+    "category string, statistic string, threshold double, observed double, "
+    "exception boolean, severity string"
+)
+COMPLETENESS_DDL = "dc_name string, produced boolean"
+
+
+def expected_reports_check(produced: list[str], expected: list[str]) -> list[tuple]:
     """Completeness: expected report names vs produced (edc_prep.sas
-    :80-125). Returns (dc_name, produced boolean)."""
-    rows = [(name, name in set(produced)) for name in expected]
-    return spark.createDataFrame(rows, "dc_name string, produced boolean")
+    :80-125). Returns (dc_name, produced) rows."""
+    produced = set(produced)
+    return [(name, name in produced) for name in expected]
 
 
-def run_checks(metrics: DataFrame, checks: tuple[Check, ...] = DEFAULT_CHECKS) -> DataFrame:
-    """Evaluate the registry → (check_id, description, dc_name,
-    statistic, threshold, observed, exception, severity).
+def _breach(op: str, observed: float, threshold: float) -> bool:
+    """`observed <op> threshold` with Spark's ordering, where NaN is
+    larger than every other double."""
+    if math.isnan(observed):
+        return op in ("gt", "ge")
+    return {
+        "lt": observed < threshold,
+        "le": observed <= threshold,
+        "gt": observed > threshold,
+        "ge": observed >= threshold,
+    }.get(op, False)
 
-    Implemented as a broadcast join of the tiny check registry onto the
-    metrics table + per-op boolean algebra; absent metrics produce
+
+def evaluate_checks(
+    metrics: list[tuple], checks: tuple[Check, ...] = DEFAULT_CHECKS
+) -> list[tuple]:
+    """Evaluate the registry over metric rows (dc_name, variable,
+    category, statistic, resultc, resultn) → exception rows
+    (check_id, family, description, dc_name, category, statistic,
+    threshold, observed, exception, severity), ordered by check_id then
+    category (NULL first).
+
+    A check without a category applies to every metric row of its
+    (dc_name, statistic); absent metrics produce one row with
     observed=NULL, exception=false ('n/a handling for absent tables',
     edc_report.sas:11280-11361).
     """
-    spark = metrics.sparkSession
-    reg = spark.createDataFrame(
-        [
-            (c.check_id, c.description, c.dc_name, c.statistic, c.op, float(c.threshold), c.severity, c.category, c.family)
-            for c in checks
-        ],
-        "check_id string, description string, dc_name string, statistic string, "
-        "op string, threshold double, severity string, category string, family string",
-    )
-    m = metrics.select(
-        F.col("dc_name"), F.col("statistic"), F.col("category").alias("m_category"), F.col("resultn")
-    )
-    joined = F.broadcast(reg).join(
-        m,
-        (reg.dc_name == m.dc_name)
-        & (reg.statistic == m.statistic)
-        & (F.col("category").isNull() | (F.col("category") == F.col("m_category"))),
-        "left",
-    )
-    obs = F.col("resultn")
-    exc = (
-        F.when(F.col("op") == "lt", obs < F.col("threshold"))
-        .when(F.col("op") == "le", obs <= F.col("threshold"))
-        .when(F.col("op") == "gt", obs > F.col("threshold"))
-        .when(F.col("op") == "ge", obs >= F.col("threshold"))
-        .otherwise(F.lit(False))
-    )
-    return joined.select(
-        reg.check_id,
-        reg.family,
-        reg.description,
-        reg.dc_name,
-        F.col("m_category").alias("category"),
-        reg.statistic,
-        reg.threshold,
-        obs.alias("observed"),
-        F.coalesce(exc, F.lit(False)).alias("exception"),
-        reg.severity,
-    ).orderBy("check_id", "category")
+    by_key: dict[tuple, list[tuple]] = defaultdict(list)
+    for dc_name, _, category, statistic, _, resultn in metrics:
+        by_key[(dc_name, statistic)].append((category, resultn))
+    out = []
+    for c in checks:
+        head = (c.check_id, c.family, c.description, c.dc_name)
+        tail = (c.statistic, float(c.threshold))
+        hits = [
+            (cat, obs)
+            for cat, obs in by_key.get((c.dc_name, c.statistic), [])
+            if c.category is None or c.category == cat
+        ]
+        for cat, obs in hits or [(None, None)]:
+            exc = obs is not None and _breach(c.op, obs, float(c.threshold))
+            out.append((*head, cat, *tail, obs, exc, c.severity))
+    return sorted(out, key=lambda r: (r[0], r[4] is not None, r[4] or ""))
+
+
+def run_checks(metrics: DataFrame, checks: tuple[Check, ...] = DEFAULT_CHECKS) -> DataFrame:
+    """DataFrame form of `evaluate_checks` (the metrics table is small
+    by construction: it is collected to the driver)."""
+    rows = [tuple(r) for r in metrics.select(*METRICS_SCHEMA.names).collect()]
+    return metrics.sparkSession.createDataFrame(evaluate_checks(rows, checks), EXCEPTIONS_DDL)
+

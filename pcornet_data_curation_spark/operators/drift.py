@@ -6,13 +6,14 @@ comparing the current refresh against the previous one
 same data-driven check registry (operators.checks) evaluates them.
 
 All three emit rows in the normalized METRICS_SCHEMA shape and are
-appended to the run's metrics table:
+appended to the run's metrics table (staleness as driver-side rows,
+drift and trend as DataFrames over the metrics tables):
 
 * drift_metrics(now, prior)  — per shared (dc_name, variable,
   category, statistic): `<stat>__absdelta` (|now-prior|, natural for
   percentage stats) and `<stat>__relpct` (|now-prior|/max(|prior|,1)
   ×100, natural for counts), under dc_name 'drift|<orig dc_name>'.
-* staleness_metrics(manifest) — per report: stale flag (report written
+* staleness_rows(manifest) — per report: stale flag (report written
   before the newest curated bucket — a resume that recomputed data but
   died before reporting) and age in seconds, under 'report_staleness'.
 * trend_metrics(checks, now, prior) — per registered threshold check:
@@ -31,6 +32,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from pcornet_data_curation_spark.operators.checks import Check
+from pcornet_data_curation_spark.operators.normalize import METRICS_DDL
 
 _KEYS = ["dc_name", "variable", "category", "statistic"]
 
@@ -77,11 +79,11 @@ def drift_metrics(now: DataFrame, prior: DataFrame) -> DataFrame:
     )
 
 
-def staleness_metrics(manifest_data: dict, now_ts: float, spark) -> DataFrame:
-    """Per-report staleness rows from the checkpoint manifest: a report
-    is STALE when it was last written before the newest curated bucket
-    finished (possible only on a resumed run that recomputed data and
-    died before re-reporting). Also records each report's age."""
+def staleness_rows(manifest_data: dict, now_ts: float) -> list[tuple]:
+    """Per-report staleness metric rows from the checkpoint manifest: a
+    report is STALE when it was last written before the newest curated
+    bucket finished (possible only on a resumed run that recomputed data
+    and died before re-reporting). Also records each report's age."""
     buckets = manifest_data.get("buckets", {})
     newest_bucket = max(
         (v.get("finished_at", 0.0) for v in buckets.values()), default=0.0
@@ -93,11 +95,12 @@ def staleness_metrics(manifest_data: dict, now_ts: float, spark) -> DataFrame:
         rows.append((name, "age_sec", max(0.0, now_ts - ts)))
     if not rows:
         rows = [("__none__", "stale", 0.0)]
-    return spark.createDataFrame(
-        [("report_staleness", "", name, stat, str(val), val) for name, stat, val in rows],
-        "dc_name string, variable string, category string, statistic string, "
-        "resultc string, resultn double",
-    )
+    return [("report_staleness", "", name, stat, str(val), val) for name, stat, val in rows]
+
+
+def staleness_metrics(manifest_data: dict, now_ts: float, spark) -> DataFrame:
+    """DataFrame form of `staleness_rows`."""
+    return spark.createDataFrame(staleness_rows(manifest_data, now_ts), METRICS_DDL)
 
 
 def trend_metrics(

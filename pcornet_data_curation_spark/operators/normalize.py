@@ -5,78 +5,121 @@ assembly :945-961) un-pivots ~330 query outputs into a single
 `dc_norm` dataset (dc_name, table, variable, category, statistic,
 resultc/resultn) that the data-check report consumes.
 
-Here `melt_report` unpivots any report DataFrame with `stack` (pure
-Catalyst, one projection — no UDF, no driver loop), and
-`assemble_metrics` unions the melted reports.
+Reports are small Arrow tables on the driver (a few hundred rows in
+all), so the melt is a plain loop over their rows: no Spark plan, no
+union. Values are stringified exactly as Spark's `cast(x as string)`
+would, so `resultc` reads the same as when the melt ran in Spark.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-from pyspark.sql import types as T
+import math
+from decimal import ROUND_HALF_UP, Decimal
 
-METRICS_SCHEMA = (
+import pyarrow as pa
+
+_ARROW_TYPES = {
+    "string": pa.string(), "double": pa.float64(), "boolean": pa.bool_(),
+    "bigint": pa.int64(), "int": pa.int32(),
+}
+
+
+def arrow_schema(ddl: str) -> pa.Schema:
+    """Arrow schema of a flat Spark DDL string ('a bigint, b string'),
+    so a driver-written parquet file reads back with that Spark schema."""
+    return pa.schema([(n, _ARROW_TYPES[t]) for n, t in (c.split() for c in ddl.split(","))])
+
+
+def rows_table(rows: list[tuple], schema: pa.Schema) -> pa.Table:
+    return pa.Table.from_pylist([dict(zip(schema.names, r)) for r in rows], schema=schema)
+
+
+METRICS_DDL = (
     "dc_name string, variable string, category string, statistic string, "
     "resultc string, resultn double"
 )
+METRICS_SCHEMA = arrow_schema(METRICS_DDL)
+
+
+def spark_double_str(x: float) -> str:
+    """`cast(x as string)` for a Spark double (Java's Double.toString):
+    shortest round-trip digits, plain notation for 1e-3 <= |x| < 1e7,
+    otherwise `d.dddE<exp>`. Java 17 prints a longer, still
+    round-tripping digit string for a few doubles (6 in 10^4 random bit
+    patterns, nearly all beyond 1e16, plus subnormals); there the two
+    strings differ but parse to the same value."""
+    if math.isnan(x):
+        return "NaN"
+    if math.isinf(x):
+        return "Infinity" if x > 0 else "-Infinity"
+    if x == 0:
+        return "-0.0" if math.copysign(1.0, x) < 0 else "0.0"
+    sign = "-" if x < 0 else ""
+    _, digits, exp = Decimal(repr(abs(x))).as_tuple()
+    digits = list(digits)
+    while len(digits) > 1 and digits[-1] == 0:
+        digits.pop()
+        exp += 1
+    s = "".join(map(str, digits))
+    e = len(s) + exp - 1  # x = d.ddd * 10^e
+    if 1e-3 <= abs(x) < 1e7:
+        if e >= 0:
+            return f"{sign}{s[: e + 1].ljust(e + 1, '0')}.{s[e + 1:] or '0'}"
+        return f"{sign}0.{'0' * (-e - 1)}{s}"
+    return f"{sign}{s[0]}.{s[1:] or '0'}E{e}"
+
+
+def spark_round(x: float | None, scale: int) -> float | None:
+    """Spark's `round(x, scale)` on a double: HALF_UP on the decimal
+    string Java prints for x (not half-even on the binary value)."""
+    if x is None or math.isnan(x) or math.isinf(x):
+        return x
+    q = Decimal(1).scaleb(-scale)
+    return float(Decimal(spark_double_str(x)).quantize(q, rounding=ROUND_HALF_UP))
+
+
+def spark_str(value, dtype: pa.DataType) -> str | None:
+    """`cast(value as string)` for a value of Arrow type `dtype`."""
+    if value is None:
+        return None
+    if pa.types.is_boolean(dtype):
+        return "true" if value else "false"
+    if pa.types.is_floating(dtype):
+        return spark_double_str(float(value))
+    return str(value)
+
+
+def _numeric(dtype: pa.DataType) -> bool:
+    return pa.types.is_integer(dtype) or pa.types.is_floating(dtype) or pa.types.is_boolean(dtype)
 
 
 def melt_report(
-    report: DataFrame,
+    report: pa.Table,
     dc_name: str,
     id_cols: list[str],
-    value_cols: list[str] | None = None,
     variable: str = "",
-) -> DataFrame:
-    """Unpivot `value_cols` (default: all non-id columns) into
+) -> list[tuple]:
+    """Unpivot every non-id column of `report` into metric rows
     (dc_name, variable, category, statistic, resultc, resultn).
 
-    `category` = the concatenated id-column values ('|'-joined when
-    multiple, like the reference's cross-category keys); numeric values
+    `category` = the id-column values '|'-joined, NULL spelled 'NULL'
+    (the reference's cross-category keys); numeric and boolean values
     land in resultn, everything in resultc (reference stringifies
     counts then parses back, data_curation_base.sas:1109 /
     normalization.sas:337-349 — we keep both representations).
     """
-    if value_cols is None:
-        value_cols = [c for c in report.columns if c not in id_cols]
-    numeric = {
-        f.name
-        for f in report.schema.fields
-        if isinstance(f.dataType, (T.NumericType, T.BooleanType))
-    }
-    cat = (
-        F.concat_ws("|", *[F.coalesce(F.col(c).cast("string"), F.lit("NULL")) for c in id_cols])
-        if id_cols
-        else F.lit("")
-    )
-    stacked = report.select(
-        cat.alias("category"),
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(c).alias("statistic"),
-                        F.col(c).cast("string").alias("resultc"),
-                        (
-                            F.col(c).cast("double")
-                            if c in numeric
-                            else F.lit(None).cast("double")
-                        ).alias("resultn"),
-                    )
-                    for c in value_cols
-                ]
-            )
-        ).alias("_s"),
-    )
-    return stacked.select(
-        F.lit(dc_name).alias("dc_name"),
-        F.lit(variable).alias("variable"),
-        "category",
-        F.col("_s.statistic").alias("statistic"),
-        F.col("_s.resultc").alias("resultc"),
-        F.col("_s.resultn").alias("resultn"),
-    )
+    types = {f.name: f.type for f in report.schema}
+    value_cols = [c for c in report.column_names if c not in id_cols]
+    out = []
+    for row in report.to_pylist():
+        category = "|".join(
+            "NULL" if row[c] is None else spark_str(row[c], types[c]) for c in id_cols
+        )
+        for c in value_cols:
+            v, t = row[c], types[c]
+            resultn = None if v is None or not _numeric(t) else float(v)
+            out.append((dc_name, variable, category, c, spark_str(v, t), resultn))
+    return out
 
 
 def extraction_consistent_col(html_col="html", text_col="text"):
@@ -103,12 +146,3 @@ def extraction_consistent_col(html_col="html", text_col="text"):
         | (F.length(norm_text) == 0)
         | stripped_html.contains(probe)
     )
-
-
-def assemble_metrics(melted: list[DataFrame]) -> DataFrame:
-    """Union all melted reports (reference final assembly,
-    normalization.sas:945-961)."""
-    out = melted[0]
-    for m in melted[1:]:
-        out = out.unionByName(m)
-    return out

@@ -2,106 +2,96 @@
 (data_curation_print.sas: top-N per query + ods pdf; edc_report.sas
 multi-page report) recast as one Markdown file per run.
 
-Input is the tiny downstream tables only (reports/metrics/exceptions/
-completeness/lineage); the renderer never touches the fact table.
+Input is the run's small output tables, already on the driver
+(reports, exceptions, completeness, lineage rows); rendering starts no
+Spark job and never touches the fact table.
 """
 
 from __future__ import annotations
 
 import os
+from collections import defaultdict
 
-from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
+import pyarrow as pa
+
+from pcornet_data_curation_spark.operators.reports import floor_pct
 
 TOP_N = 50  # print limit parity (reference obs=50, %prnt)
 
 
-def _md_table(pdf) -> str:
-    if len(pdf) == 0:
+def _md_table(cols: list[str], rows: list) -> str:
+    if not rows:
         return "_(empty)_\n"
-    cols = list(pdf.columns)
     lines = ["| " + " | ".join(cols) + " |", "|" + "---|" * len(cols)]
-    for _, row in pdf.iterrows():
+    for row in rows:
         lines.append("| " + " | ".join("" if v is None else str(v) for v in row) + " |")
     return "\n".join(lines) + "\n"
 
 
-def render_run_report(spark: SparkSession, output_root: str) -> str:
-    """Render <output_root>/REPORT.md from the run's output tables.
+def _table(t: pa.Table, rows: list | None = None) -> str:
+    rows = [tuple(r.values()) for r in t.to_pylist()] if rows is None else rows
+    return _md_table(t.column_names, rows)
+
+
+def render_run_report(
+    output_root: str, tables: dict[str, pa.Table], lineage: list[dict]
+) -> str:
+    """Render <output_root>/REPORT.md from the run's output tables
+    (`tables`: every report by name plus 'exceptions' and
+    'completeness') and the lineage rows of every run into this root.
     Returns the file path."""
     parts: list[str] = ["# Curation run report\n"]
 
-    def read(name):
-        return spark.read.parquet(os.path.join(output_root, name))
+    meta = sorted(tuple(r.values()) for r in tables["run_metadata"].to_pylist())
+    parts += ["## Run metadata\n", _table(tables["run_metadata"], meta)]
+    parts += ["## Verdict\n", _table(tables["verdict_summary"])]
 
-    meta = read("reports/run_metadata").toPandas().sort_values("meta_key")
-    parts += ["## Run metadata\n", _md_table(meta)]
+    exceptions = tables["exceptions"]
+    n_exc = sum(exceptions.column("exception").to_pylist())
+    parts += [f"## Data checks — {n_exc} exception(s)\n", _table(exceptions)]
 
-    verdict = read("reports/verdict_summary").toPandas()
-    parts += ["## Verdict\n", _md_table(verdict)]
-
-    exceptions = read("exceptions").orderBy("check_id").toPandas()
-    n_exc = int(exceptions["exception"].sum())
-    parts += [
-        f"## Data checks — {n_exc} exception(s)\n",
-        _md_table(exceptions),
-    ]
-
-    completeness = read("completeness").orderBy("dc_name").toPandas()
-    missing = completeness[~completeness["produced"]]
+    completeness = sorted(tuple(r.values()) for r in tables["completeness"].to_pylist())
+    missing = [r for r in completeness if not r[1]]
     parts += [
         f"## Completeness — {len(missing)} missing report(s)\n",
-        _md_table(missing if len(missing) else completeness),
+        _md_table(tables["completeness"].column_names, missing or completeness),
     ]
 
-    rules = (
-        read("reports/rule_summary")
-        .groupBy("rule_id")
-        .agg(
-            F.sum("records").alias("records"),
-            F.sum("fail_records").alias("fail_records"),
-        )
-        .withColumn(
-            "fail_pct",
-            F.when(
-                F.col("records") > 0,
-                F.floor(F.col("fail_records") * 10000.0 / F.col("records")) / 100.0,
-            ).otherwise(F.lit(0.0)),
-        )
-        .orderBy(F.col("fail_records").desc(), "rule_id")
-        .limit(TOP_N)
-        .toPandas()
-    )
-    parts += ["## Rule fail rates (all buckets)\n", _md_table(rules)]
+    # rule fail rates over all buckets
+    totals: dict[str, list] = defaultdict(lambda: [0, None])
+    for r in tables["rule_summary"].to_pylist():
+        t = totals[r["rule_id"]]
+        t[0] += r["records"]
+        if r["fail_records"] is not None:
+            t[1] = (t[1] or 0) + r["fail_records"]
+    rules = sorted(
+        ((rule, rec, fail, floor_pct(fail, rec)) for rule, (rec, fail) in totals.items()),
+        key=lambda r: (r[2] is None, -(r[2] or 0), r[0]),
+    )[:TOP_N]
+    parts += [
+        "## Rule fail rates (all buckets)\n",
+        _md_table(["rule_id", "records", "fail_records", "fail_pct"], rules),
+    ]
 
-    langs = (
-        read("reports/lang_dist").orderBy("ord").limit(TOP_N).toPandas()
-    )
-    parts += ["## Language distribution\n", _md_table(langs)]
+    langs = tables["lang_dist"]  # already in valueset order
+    parts += ["## Language distribution\n", _table(langs.slice(0, TOP_N))]
+    domains = tables["domain_dist"]  # already by record_n desc, host
+    parts += ["## Domain distribution (top hosts + OTHER)\n", _table(domains.slice(0, TOP_N))]
+    parts += ["## Content duplication\n", _table(tables["dedup_summary"])]
 
-    domains = (
-        read("reports/domain_dist")
-        .orderBy(F.col("record_n").desc(), F.asc_nulls_last("host"))
-        .limit(TOP_N)
-        .toPandas()
+    stages: dict[str, list] = {}
+    for r in lineage:
+        s = stages.setdefault(r["stage"], [0.0, r["status"]])
+        s[0] += r["elapsed_sec"]
+        s[1] = max(s[1], r["status"])
+    timings = sorted(
+        ((name, round(sec, 2), status) for name, (sec, status) in stages.items()),
+        key=lambda r: -r[1],
     )
-    parts += ["## Domain distribution (top hosts + OTHER)\n", _md_table(domains)]
-
-    dedup = read("reports/dedup_summary").toPandas()
-    parts += ["## Content duplication\n", _md_table(dedup)]
-
-    lineage = (
-        read("lineage")
-        .groupBy("stage")
-        .agg(
-            F.sum("elapsed_sec").alias("elapsed_sec"),
-            F.max("status").alias("status"),
-        )
-        .orderBy(F.col("elapsed_sec").desc())
-        .toPandas()
-    )
-    lineage["elapsed_sec"] = lineage["elapsed_sec"].round(2)
-    parts += ["## Stage timings (reference %elapsed)\n", _md_table(lineage)]
+    parts += [
+        "## Stage timings (reference %elapsed)\n",
+        _md_table(["stage", "elapsed_sec", "status"], timings),
+    ]
 
     path = os.path.join(output_root, "REPORT.md")
     with open(path, "w") as f:

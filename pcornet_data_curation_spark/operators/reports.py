@@ -28,12 +28,20 @@ the tiny aggregate onto a generated domain frame afterwards, so the
 super-population join never touches the fact table. Grand totals come
 from a window over the *aggregated* frame (bounded by |domain|), not a
 second scan.
+
+The pipeline's own reports do not call these per report: the last
+section holds its five exact passes (bucket_pass, global_pass,
+host_pass, percentile_pass, cross_bucket_pass) whose small results
+plans/report_tail.py turns into the same reports on the driver.
 """
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 NULL_CATEGORY = "NULL or missing"
 OVERFLOW_CATEGORY = "Values outside of CDM specifications"
@@ -489,12 +497,6 @@ def host_col(url_col):
     return F.when(host_raw == "", F.lit(None)).otherwise(F.lower(host_raw))
 
 
-def _host_counts(df: "DataFrame", url_col: str, aggs: list) -> "DataFrame":
-    """Shared per-host aggregation core of domain_dist/domain_summary:
-    one groupBy whose partial aggregation absorbs hot hosts map-side."""
-    return df.groupBy(host_col(F.col(url_col)).alias("host")).agg(*aggs)
-
-
 def domain_dist(
     df: "DataFrame",
     url_col: str = "url",
@@ -513,14 +515,11 @@ def domain_dist(
     (never a global sort of rows); the OTHER rollup is one left_anti
     join against the broadcast 20-row top list plus a single agg.
     Unparsable urls land in the NULL host row (reference NULL-category
-    convention)."""
-    counts = _host_counts(
-        df,
-        url_col,
-        [
-            F.count(F.lit(1)).alias("record_n"),
-            F.sum(F.col("keep").cast("long")).alias("kept_n"),
-        ],
+    convention). The pipeline builds the same report on the driver from
+    `host_pass` (see `domain_tables`)."""
+    counts = df.groupBy(host_col(F.col(url_col)).alias("host")).agg(
+        F.count(F.lit(1)).alias("record_n"),
+        F.sum(F.col("keep").cast("long")).alias("kept_n"),
     )
     top = counts.orderBy(F.col("record_n").desc(), F.asc_nulls_last("host")).limit(top_n)
     top_hosts = top.select(F.col("host").alias("_th"))
@@ -548,82 +547,252 @@ def domain_dist(
     )
 
 
-def domain_summary(df: "DataFrame", url_col: str = "url", top_n: int = 20) -> "DataFrame":
-    """Scalar domain-concentration stats for the check registry (the
-    dynamic hostnames in domain_dist can't anchor threshold checks):
-    hosts_n, top1/topN share of records, null-host count. Same
-    aggregation core as domain_dist; one extra tiny sort."""
-    counts = _host_counts(df, url_col, [F.count(F.lit(1)).alias("record_n")])
-    top = counts.orderBy(F.col("record_n").desc(), F.asc_nulls_last("host")).limit(top_n)
-    agg = counts.agg(
-        F.count(F.lit(1)).alias("hosts_n"),
-        F.sum("record_n").alias("records"),
-        F.coalesce(
-            F.sum(F.when(F.col("host").isNull(), F.col("record_n"))), F.lit(0)
-        ).alias("null_host_n"),
-    )
-    topagg = top.agg(
-        F.coalesce(F.max("record_n"), F.lit(0)).alias("_top1"),
-        F.coalesce(F.sum("record_n"), F.lit(0)).alias("_topn"),
-    )
-    out = agg.crossJoin(topagg)
-    pct = lambda num: F.when(  # noqa: E731
-        F.col("records") > 0, F.floor(num * 1000000.0 / F.col("records")) / 10000.0
-    ).otherwise(F.lit(0.0))
-    return out.select(
-        "hosts_n",
-        "records",
-        "null_host_n",
-        pct(F.col("_top1")).alias("top1_share_pct"),
-        pct(F.col("_topn")).alias(f"top{top_n}_share_pct"),
-    )
+# ---------------------------------------------------------------------------
+# Reporting-tail passes: the pipeline's reports come from these few exact
+# aggregations over the curated table. Each brings a frame bounded by
+# buckets x categories / months / windows, or by top-N, to the driver
+# (Arrow, via toPandas), where the reports are assembled.
+# ---------------------------------------------------------------------------
 
 
-def referential_summary(
-    cur: "DataFrame",
+def _collect(df: DataFrame) -> list[dict]:
+    """Rows of a small aggregate frame. pandas turns a NULL long into
+    NaN; a long is never NaN, so those become None again. (A NULL
+    double stays NaN: the passes only emit doubles whose NULL is
+    implied by a count of zero.)"""
+    longs = [
+        f.name for f in df.schema.fields if isinstance(f.dataType, (T.LongType, T.IntegerType))
+    ]
+    rows = df.toPandas().to_dict("records")
+    for r in rows:
+        for c in longs:
+            r[c] = None if r[c] is None or r[c] != r[c] else int(r[c])
+    return rows
+
+
+def floor_pct(n: int | None, total: int, digits: int = 2) -> float | None:
+    """Driver-side `_pct_expr`: floor(n * 100 * 10^digits / total) /
+    10^digits, 0.0 when total is 0 — the same IEEE operations as the
+    Spark expression, so the same double."""
+    if not total > 0:
+        return 0.0
+    if n is None:
+        return None
+    return math.floor(n * (100.0 * 10**digits) / total) / 10**digits
+
+
+def bucket_pass(
+    rep: DataFrame,
+    flag_cols: list[str],
     lang_valueset: list[str],
-    text_col: str = "scrubbed_text",
-    url_col: str = "url",
-) -> "DataFrame":
-    """Referential/integrity counts over the curated table — the
-    reference EDC's orphan-record family (edc_report.sas: orphan
-    PATID/ENCOUNTERID checks) recast for the webtext schema:
+    run_date,
+    windows: list[tuple[str, object, object]],
+    url_valid,
+    lang_valid,
+) -> list[dict]:
+    """Every additive count, sum and min/max of the reports, per
+    (bucket, dim, key), in one grouped aggregation.
 
-    * kept_null_scrub_n — keep=true rows with NULL scrubbed text (a
-      kept row must carry its deliverable);
-    * cross_bucket_dup_url_n — urls present in >1 bucket directory
-      (the bucket function is a pure url hash, so this can only mean
-      store corruption / a bucketing-code change mid-run);
-    * lang_nonvalueset_n — lang_pred outside the declared valueset;
-    * kept_mean_tokens / dropped_mean_tokens / drop_keep_token_ratio —
-      filter-sanity: dropped docs averaging LONGER than kept docs
-      suggests an inverted predicate.
+    Each row fans out to the groups it belongs to: dim 'all' (key NULL),
+    'lang' (the n_pct category of lang_pred), 'ym' (month of a plausible
+    warc_ts), 'keep', 'window' (each trailing window containing
+    warc_ts) and 'url_valid' (valid urls only). All groups carry the
+    same aggregates; the driver reads each from the dim it needs.
 
-    Two aggregation passes: one over the row-level flags, one
-    url-grouped countDistinct(bucket) for the cross-bucket dup count;
-    both shuffle only (key, count) rows.
+    countDistinct(url) per group is exact across buckets: bucket is a
+    hash of url, so a url lives in one bucket and the per-bucket counts
+    add up. It is the only distinct aggregate, so Spark plans it without
+    an Expand.
     """
-    flags = cur.agg(
-        F.count(F.lit(1)).alias("records"),
-        F.sum(
-            (F.col("keep") & F.col(text_col).isNull()).cast("long")
-        ).alias("kept_null_scrub_n"),
-        F.sum(F.col(url_col).isNull().cast("long")).alias("null_url_n"),
-        F.sum(
-            (~F.col("lang_pred").isin(lang_valueset) & F.col("lang_pred").isNotNull())
-            .cast("long")
-        ).alias("lang_nonvalueset_n"),
-        F.avg(F.when(F.col("keep"), F.col("n_tokens"))).alias("kept_mean_tokens"),
-        F.avg(F.when(~F.col("keep"), F.col("n_tokens"))).alias("dropped_mean_tokens"),
+    url, lang, keep, text = F.col("url"), F.col("lang"), F.col("keep"), F.col("scrubbed_text")
+    ts, tok, ppl = F.col("warc_ts"), F.col("n_tokens"), F.col("ppl")
+    run_ts = F.lit(run_date.isoformat()).cast("timestamp")
+    pre_1900 = F.lit("1900-01-01").cast("timestamp")
+    lang_cat = (
+        F.when(F.col("lang_pred").isNull(), F.lit(NULL_CATEGORY))
+        .when(F.col("lang_pred").isin(lang_valueset), F.col("lang_pred"))
+        .otherwise(F.lit(OVERFLOW_CATEGORY))
     )
-    cross = (
-        cur.groupBy(url_col)
-        .agg(F.countDistinct("bucket").alias("_nb"))
-        .agg(F.sum((F.col("_nb") > 1).cast("long")).alias("cross_bucket_dup_url_n"))
+
+    def dim(name, key=None, where=None):
+        d = F.struct(
+            F.lit(name).alias("dim"),
+            (F.lit(None).cast("string") if key is None else key).alias("key"),
+        )
+        return d if where is None else F.when(where, d)
+
+    dims = F.filter(
+        F.array(
+            dim("all"),
+            dim("lang", lang_cat),
+            dim("ym", F.date_format(ts, "yyyy_MM"), (ts >= pre_1900) & (ts <= run_ts)),
+            dim("keep", keep.cast("string")),
+            *[
+                dim("window", F.lit(name), (ts >= F.lit(str(start)).cast("timestamp"))
+                    & (ts <= F.lit(str(end)).cast("timestamp")))
+                for name, start, end in windows
+            ],
+            dim("url_valid", where=url_valid),
+        ),
+        lambda d: d.isNotNull(),
     )
-    out = flags.crossJoin(cross)
-    ratio = F.when(
-        F.col("kept_mean_tokens").isNotNull() & (F.col("kept_mean_tokens") > 0),
-        F.coalesce(F.col("dropped_mean_tokens"), F.lit(0.0)) / F.col("kept_mean_tokens"),
-    ).otherwise(F.lit(0.0))
-    return out.withColumn("drop_keep_token_ratio", ratio)
+
+    def nsum(c):
+        return F.sum(c.cast("long"))
+
+    aggs = [
+        F.count(F.lit(1)).alias("n"),
+        F.count(url).alias("url_n"),
+        F.countDistinct(url).alias("url_distinct"),
+        nsum(url.isNull()).alias("url_null"),
+        F.sum(F.when(url_valid, 1).otherwise(0)).alias("url_valid_n"),
+        F.count(lang).alias("lang_n"),
+        nsum(lang.isNull()).alias("lang_null"),
+        F.sum(F.when(lang_valid, 1).otherwise(0)).alias("lang_valid_n"),
+        F.count(text).alias("text_n"),
+        nsum(text.isNull()).alias("text_null"),
+        *[nsum(F.col(c)).alias(c) for c in flag_cols],
+        nsum(keep).alias("kept"),
+        F.count(keep).alias("keep_n"),
+        nsum(F.col("scrub_hit")).alias("scrub_hits"),
+        nsum(~F.col("extraction_ok")).alias("mismatch_n"),
+        nsum(F.col("exact_dup")).alias("dup_n"),
+        F.count(ts).alias("ts_n"),
+        nsum(ts.isNull()).alias("ts_null"),
+        F.date_format(F.min(ts), "yyyy_MM").alias("min_ym"),
+        F.date_format(F.max(ts), "yyyy_MM").alias("max_ym"),
+        nsum(ts < pre_1900).alias("implausible_n"),
+        nsum(ts > run_ts).alias("future_n"),
+        F.count(tok).alias("tok_n"),
+        nsum(tok.isNull()).alias("tok_null"),
+        F.min(tok).alias("tok_min"),
+        F.sum(tok).alias("tok_sum"),
+        F.max(tok).alias("tok_max"),
+        F.count(ppl).alias("ppl_n"),
+        nsum(ppl.isNull()).alias("ppl_null"),
+        F.min(ppl).alias("ppl_min"),
+        F.sum(ppl).alias("ppl_sum"),
+        F.max(ppl).alias("ppl_max"),
+        nsum(keep & text.isNull()).alias("kept_null_scrub_n"),
+        nsum(~F.col("lang_pred").isin(lang_valueset) & F.col("lang_pred").isNotNull())
+        .alias("lang_nonvalueset_n"),
+        F.sum(F.when(keep, tok)).alias("kept_tok_sum"),
+        F.count(F.when(keep, tok)).alias("kept_tok_n"),
+        F.sum(F.when(~keep, tok)).alias("drop_tok_sum"),
+        F.count(F.when(~keep, tok)).alias("drop_tok_n"),
+    ]
+    exploded = rep.select("*", F.explode(dims).alias("_d")).select(
+        "*", F.col("_d.dim").alias("dim"), F.col("_d.key").alias("key")
+    )
+    return _collect(exploded.groupBy("bucket", "dim", "key").agg(*aggs))
+
+
+def global_pass(rep: DataFrame, lang_valid) -> dict:
+    """The distinct counts that do not add up across buckets (lang and
+    scrubbed_text are not functions of url), in one global aggregation."""
+    lang = F.col("lang")
+    return _collect(
+        rep.agg(
+            F.countDistinct(lang).alias("lang_distinct"),
+            F.countDistinct(F.when(lang_valid, lang)).alias("lang_valid_distinct"),
+            F.countDistinct("scrubbed_text").alias("text_distinct"),
+        )
+    )[0]
+
+
+def host_pass(rep: DataFrame, top_n: int = 20, url_col: str = "url") -> list[dict]:
+    """One query over groupBy(host): the top-N hosts by records (ties by
+    host, NULL last) plus one totals row (`total` true) carrying
+    hosts_n, the record/kept sums and the NULL-host records. Enough to
+    build domain_dist and domain_summary on the driver (`domain_tables`);
+    the host list itself never leaves the cluster."""
+    counts = rep.groupBy(host_col(F.col(url_col)).alias("host")).agg(
+        F.count(F.lit(1)).alias("record_n"),
+        F.sum(F.col("keep").cast("long")).alias("kept_n"),
+    )
+    top = counts.orderBy(F.col("record_n").desc(), F.asc_nulls_last("host")).limit(top_n)
+    none = F.lit(None).cast("long")
+    totals = counts.agg(
+        F.lit(True).alias("total"),
+        F.lit(None).cast("string").alias("host"),
+        F.sum("record_n").alias("record_n"),
+        F.sum("kept_n").alias("kept_n"),
+        F.count(F.lit(1)).alias("hosts_n"),
+        F.coalesce(F.sum(F.when(F.col("host").isNull(), F.col("record_n"))), F.lit(0))
+        .alias("null_host_n"),
+    )
+    rows = top.select(
+        F.lit(False).alias("total"), "host", "record_n", "kept_n",
+        none.alias("hosts_n"), none.alias("null_host_n"),
+    ).unionByName(totals)
+    return _collect(rows)
+
+
+def domain_tables(host_rows: list[dict], top_n: int = 20) -> tuple[list[tuple], dict]:
+    """From `host_pass` output: the domain_dist rows (host, record_n,
+    kept_n, record_pct) — the top-N hosts plus an OTHER row for the
+    rest, ordered by record_n desc then host — and the domain_summary
+    row, the scalar concentration stats the 14.x checks anchor on
+    (hostnames are dynamic): hosts_n, records, null_host_n,
+    top1_share_pct, top<N>_share_pct."""
+    tot = next(r for r in host_rows if r["total"])
+    top = sorted(
+        (r for r in host_rows if not r["total"]),
+        key=lambda r: (-r["record_n"], r["host"] is None, r["host"] or ""),
+    )
+    ranked = [(r["host"], r["record_n"], r["kept_n"]) for r in top]
+    if tot["hosts_n"] > len(top):
+        top_kept = sum(r["kept_n"] for r in top if r["kept_n"] is not None)
+        other_kept = 0 if tot["kept_n"] is None else tot["kept_n"] - top_kept
+        ranked.append(("OTHER", tot["record_n"] - sum(r[1] for r in ranked), other_kept))
+    total = sum(r[1] for r in ranked)
+    dist = sorted(
+        [(h, n, k, floor_pct(n, total)) for h, n, k in ranked],
+        key=lambda r: (-r[1], r[0] is None, r[0] or ""),
+    )
+    records = tot["record_n"]
+    top1 = max((r["record_n"] for r in top), default=0)
+    topn = sum(r["record_n"] for r in top)
+    summary = {
+        "hosts_n": tot["hosts_n"],
+        "records": records,
+        "null_host_n": tot["null_host_n"],
+        "top1_share_pct": floor_pct(top1, records or 0, 4),
+        f"top{top_n}_share_pct": floor_pct(topn, records or 0, 4),
+    }
+    return dist, summary
+
+
+def percentile_pass(rep: DataFrame, pcts: tuple[float, ...] = DEFAULT_PCTS) -> list[dict]:
+    """Exact percentiles of n_tokens and ppl over GROUPING SETS ((keep),
+    ()) in one aggregation; `gid` is 0 for the per-keep rows and 1 for
+    the grand-total row."""
+    arr = ", ".join(repr(p) for p in pcts)
+    return _collect(
+        rep.groupingSets([["keep"], []], "keep").agg(
+            F.grouping_id().alias("gid"),
+            F.expr(f"percentile(n_tokens, array({arr}))").alias("tok_p"),
+            F.expr(f"percentile(ppl, array({arr}))").alias("ppl_p"),
+        )
+    )
+
+
+def cross_bucket_pass(rep: DataFrame) -> int | None:
+    """Number of urls stored in more than one bucket directory (bucket
+    is a pure url hash, so anything but 0 means store corruption or a
+    bucketing-code change mid-run): one url-keyed aggregation."""
+    per_url = rep.groupBy("url").agg(
+        (F.min("bucket") != F.max("bucket")).alias("_split")
+    )
+    return _collect(per_url.agg(F.sum(F.col("_split").cast("long")).alias("n")))[0]["n"]
+
+
+def url_filter_pass(flagged: DataFrame) -> dict:
+    """records and dropped_n of the url pre-filter, one column-pruned
+    aggregation over its flagged frame."""
+    return _collect(
+        flagged.agg(
+            F.count(F.lit(1)).alias("records"),
+            F.sum((~F.col("url_keep")).cast("long")).alias("dropped_n"),
+        )
+    )[0]

@@ -40,7 +40,14 @@ class Manifest:
         path = os.path.join(root, cls.FILENAME)
         if os.path.exists(path):
             with open(path) as f:
-                return cls(root, n_buckets, json.load(f))
+                try:
+                    data = json.load(f)
+                except json.JSONDecodeError as e:
+                    raise ValueError(
+                        f"checkpoint manifest {path} is truncated or corrupt ({e}); "
+                        "it cannot say which buckets are done — start a fresh output_root"
+                    ) from e
+            return cls(root, n_buckets, data)
         return cls(root, n_buckets)
 
     def save(self) -> None:

@@ -6,9 +6,11 @@ elapsed, cumulative) and a progress report
 (data_curation_base.sas:2894-2995).
 
 The tracker is driver-side (stage boundaries are driver events); rows
-are tiny and written with the run manifest. Timestamps are wall-clock
-by design — lineage is telemetry, not part of the deterministic
-output contract.
+are tiny and appended to <out>/lineage as one parquet file per run.
+A stage wraps the actions it names (the pipeline's report passes
+collect inside their stage), so its elapsed time is the work, not
+the lazy plan building. Timestamps are wall-clock by design —
+lineage is telemetry, not part of the deterministic output contract.
 """
 
 from __future__ import annotations
@@ -16,6 +18,15 @@ from __future__ import annotations
 import time
 from contextlib import contextmanager
 from dataclasses import dataclass, field
+
+import pyarrow as pa
+
+from pcornet_data_curation_spark.operators.normalize import arrow_schema
+
+LINEAGE_SCHEMA = arrow_schema(
+    "stage string, partition_id int, started_at double, ended_at double, "
+    "elapsed_sec double, rows_in bigint, rows_out bigint, status string"
+)
 
 
 @dataclass
@@ -72,9 +83,5 @@ class LineageTracker:
             for r in self.rows
         ]
 
-    def to_df(self, spark):
-        return spark.createDataFrame(
-            self.to_records() or [],
-            "stage string, partition_id int, started_at double, ended_at double, "
-            "elapsed_sec double, rows_in long, rows_out long, status string",
-        )
+    def to_arrow(self) -> pa.Table:
+        return pa.Table.from_pylist(self.to_records(), schema=LINEAGE_SCHEMA)

@@ -7,21 +7,25 @@ One heavy distributed pass per run:
         ──▶ curated parquet, partitioned by url-hash bucket
              (dynamic partition overwrite ⇒ idempotent per bucket)
 
-then cheap column-pruned scans over the curated table produce the
-per-partition conformance reports, the normalized metrics table and
-the threshold exceptions — mirroring the reference's split between
-the query run (data_curation_tables.sas) and the downstream
-normalization + EDC report (normalization.sas / edc_report.sas).
+then the reporting tail (plans/report_tail.py): five exact aggregation
+passes over the curated table, projected once, bring bucket- and
+category-sized results to the driver, which builds the per-partition
+conformance reports, the normalized metrics table, the threshold
+exceptions, the completeness check and REPORT.md, and writes each once
+as a single parquet file — mirroring the reference's split between the
+query run (data_curation_tables.sas) and the downstream normalization +
+EDC report (normalization.sas / edc_report.sas).
 
 Scale design (100 TB / 10^12 docs):
-* the fact table is touched exactly once per run; everything else
-  reads the much smaller curated columns (column pruning + bucket
+* the fact table is touched exactly once per run; the report passes
+  read only the narrow curated columns (column pruning + bucket
   partition pruning do the work);
 * repartition key = (bucket, salt): url-hash buckets give resume
   granularity, the salt splits hot long-tail domains inside a bucket;
   AQE skew-join/coalesce is on in the session;
-* reports aggregate before joining domain frames — shuffles carry
-  only (category, counts) rows;
+* report passes aggregate on the cluster; what reaches the driver is
+  bounded by buckets × categories, months, windows or top-N, never by
+  hosts or urls;
 * resume filters pending buckets at the SCAN (bucket predicate), so
   a resumed run reads only unfinished data.
 """
@@ -35,30 +39,15 @@ from pyspark.sql import functions as F
 
 from pcornet_data_curation_spark.config import PipelineConfig
 from pcornet_data_curation_spark.operators import rules as R
-from pcornet_data_curation_spark.operators.checks import (
-    DEFAULT_CHECKS,
-    expected_reports_check,
-    run_checks,
-)
-from pcornet_data_curation_spark.operators.normalize import (
-    assemble_metrics,
-    extraction_consistent_col,
-    melt_report,
-)
-from pcornet_data_curation_spark.operators.reports import (
-    cont_stats,
-    dash_window_counts,
-    dash_windows,
-    minmax_profile,
-    n_pct,
-    n_pct_noref,
-    tag_profile,
-    ym_dense_fill,
-)
-from pcornet_data_curation_spark.operators.score import STAT_COLS, with_doc_stats
+from pcornet_data_curation_spark.operators.normalize import extraction_consistent_col
+from pcornet_data_curation_spark.operators.score import with_doc_stats
 from pcornet_data_curation_spark.operators.verdict import with_verdict
 from pcornet_data_curation_spark.plans.checkpoint import Manifest
 from pcornet_data_curation_spark.plans.lineage import LineageTracker
+from pcornet_data_curation_spark.plans.report_tail import (  # noqa: F401 (re-exported)
+    EXPECTED_REPORTS,
+    run_report_tail,
+)
 
 # curated-table columns kept for reporting (narrow on purpose: reports
 # never need the raw html/text again)
@@ -70,32 +59,6 @@ CURATED_STATS = [
     "lang_conf",
     "ppl",
 ]
-
-LANG_VALUESET = ["en", "de", "fr", "es", "it", "pt", "nl"]
-
-# expected-output registry (the reference's dc_tables expected-dataset
-# list, data_curation_base.sas:3093-3105): every run must produce
-# exactly these reports; completeness_check flags any gap
-EXPECTED_REPORTS = [
-    "rule_summary",
-    "pages_tag",
-    "lang_dist",
-    "warc_ym_dist",
-    "tokens_by_keep",
-    "ppl_stats",
-    "warc_minmax",
-    "verdict_summary",
-    "url_unique",
-    "scrub_summary",
-    "run_metadata",
-    "extraction_summary",
-    "dash_activity",
-    "referential_summary",
-    "domain_dist",
-    "domain_summary",
-    "dedup_summary",
-]
-
 
 def bucket_col(n_buckets: int):
     return F.pmod(F.xxhash64(F.col("url")), F.lit(n_buckets)).cast("int")
@@ -406,7 +369,7 @@ def run_pipeline(
                     manifest.mark_done(b, rows, kept)
                 manifest.save()
 
-        # ---- reporting over completed buckets (cheap, column-pruned) ----
+        # ---- reporting over completed buckets (plans/report_tail.py) ----
         done_buckets = manifest.done_buckets()
         cur = spark.read.parquet(curated_path).where(F.col("bucket").isin(done_buckets))
         # store-version guard: a store fully curated before the dedup stage
@@ -436,300 +399,10 @@ def run_pipeline(
                 "exact_dup", F.coalesce(F.col("exact_dup"), F.lit(False))
             )
 
-        reports: dict[str, DataFrame] = {}
-        with tracker.stage("report_rule_summary"):
-            # rule-level pass/fail per bucket (reference code_summary,
-            # potential_code_errors.sas:1294-1335) — single agg, flags are
-            # already materialized booleans.
-            flag_cols = [R.flag_name(r) for r in R.active_rules(cfg.rule_overrides)]
-            aggs = [F.count(F.lit(1)).alias("records")] + [
-                F.sum(F.col(c).cast("long")).alias(c) for c in flag_cols
-            ]
-            wide = cur.groupBy("bucket").agg(*aggs)
-            stack_args = ", ".join(f"'{c[5:]}', `{c}`" for c in flag_cols)
-            reports["rule_summary"] = wide.selectExpr(
-                "bucket",
-                "records",
-                f"stack({len(flag_cols)}, {stack_args}) as (rule_id, fail_records)",
-            ).withColumn(
-                "fail_pct",
-                F.when(F.col("records") > 0, F.round(F.col("fail_records") * 100.0 / F.col("records"), 2)).otherwise(0.0),
-            )
-
-        with tracker.stage("report_tag_profile"):
-            # valid_exprs = the reference %tag's _n vs valid distinction
-            # (data_curation_base.sas:600-660): validity is a per-column
-            # predicate, counted in the same single aggregation pass
-            reports["pages_tag"] = tag_profile(
-                cur,
-                ["url", "lang", "scrubbed_text"],
-                dataset="curated",
-                valid_exprs={
-                    "url": F.col("url").rlike("^https?://[^ \\t\\n\\r\\f]+$"),
-                    "lang": F.col("lang").rlike("^[a-z]{2}(-[A-Za-z]{2})?$"),
-                },
-            )
-
-        with tracker.stage("report_lang_dist"):
-            reports["lang_dist"] = n_pct(cur, "lang_pred", LANG_VALUESET, distinct_col="url")
-
-        with tracker.stage("report_ym_dist"):
-            # plausible-window rows only: future / pre-1900 outliers are
-            # counted by minmax_profile, not stretched into the dense fill
-            # (reference invalid/future split, data_curation_tables.sas:2805-2820)
-            plausible = cur.where(
-                (F.col("warc_ts") >= F.lit("1900-01-01").cast("timestamp"))
-                & (F.col("warc_ts") <= F.lit(cfg.run_date.isoformat()).cast("timestamp"))
-            )
-            ym = (
-                plausible.select(F.date_format("warc_ts", "yyyy_MM").alias("ym"))
-                .groupBy("ym")
-                .agg(F.count(F.lit(1)).alias("record_n"))
-            )
-            reports["warc_ym_dist"] = ym_dense_fill(ym)
-
-        with tracker.stage("report_cont_stats"):
-            reports["tokens_by_keep"] = cont_stats(cur, "n_tokens", group=["keep"])
-            reports["ppl_stats"] = cont_stats(cur, "ppl")
-
-        with tracker.stage("report_minmax"):
-            reports["warc_minmax"] = minmax_profile(
-                cur, "warc_ts", future_after=cfg.run_date.isoformat()
-            )
-
-        with tracker.stage("report_verdict_summary"):
-            reports["verdict_summary"] = cur.agg(
-                F.count(F.lit(1)).alias("records"),
-                F.sum(F.col("keep").cast("long")).alias("kept"),
-                F.round(F.avg(F.col("keep").cast("double")) * 100.0, 2).alias("keep_pct"),
-            )
-
-        with tracker.stage("report_url_unique"):
-            reports["url_unique"] = cur.agg(
-                F.count("url").alias("url_n"),
-                F.countDistinct("url").alias("url_distinct_n"),
-                (F.count("url") - F.countDistinct("url")).alias("dup_url_n"),
-            )
-
-        with tracker.stage("report_run_metadata"):
-            # run-level metadata (reference XTBL_L3_METADATA / DATAMART_ALL,
-            # data_curation_tables.sas:46-497): engine + config + freshness
-            reports["run_metadata"] = spark.createDataFrame(
-                [
-                    ("spark_version", spark.version),
-                    ("run_date", cfg.run_date.isoformat()),
-                    ("lookback_years", str(cfg.lookback_years)),
-                    ("lookback_cutoff", cfg.lookback_cutoff.isoformat()),
-                    ("n_buckets", str(cfg.n_buckets)),
-                    ("salt_factor", str(cfg.salt_factor)),
-                    ("output_root", cfg.output_root),
-                ],
-                "meta_key string, meta_value string",
-            )
-
-        with tracker.stage("report_dash_activity"):
-            # run-date-parameterized trailing windows (reference %dash:
-            # 1-5 yr spans ending run_date - 3 months,
-            # data_curation_base.sas:49-55, 2868-2891)
-            windows = dash_windows(
-                cfg.run_date, [(f"last_{y}y", {"years": y}) for y in (1, 2, 3, 4, 5)]
-            )
-            reports["dash_activity"] = dash_window_counts(
-                cur, "warc_ts", windows, distinct_col="url"
-            )
-
-        with tracker.stage("report_referential_summary"):
-            # orphan/integrity family (reference EDC orphan-record checks)
-            from pcornet_data_curation_spark.operators.reports import referential_summary
-
-            reports["referential_summary"] = referential_summary(cur, LANG_VALUESET)
-
-        with tracker.stage("report_domain_dist"):
-            # long-tail host distribution: top-20 + OTHER rollup, plus the
-            # scalar concentration stats the 14.x checks anchor on
-            from pcornet_data_curation_spark.operators.reports import (
-                domain_dist,
-                domain_summary,
-            )
-
-            reports["domain_dist"] = domain_dist(cur)
-            reports["domain_summary"] = domain_summary(cur)
-
-        with tracker.stage("report_dedup_summary"):
-            # content-duplicate profile (dedup stage mode recorded so the
-            # reader knows whether dup_n was measured or the stage was off)
-            dup_n = F.sum(F.col("exact_dup").cast("long"))
-            total_n = F.count(F.lit(1))
-            dedup_mode = "n/a" if legacy_no_dedup else cfg.dedup
-            reports["dedup_summary"] = cur.agg(
-                F.lit(dedup_mode).alias("mode"),
-                F.lit(cfg.dedup_method if dedup_mode not in ("off", "n/a") else "n/a").alias("method"),
-                total_n.alias("records"),
-                dup_n.alias("dup_n"),
-                F.when(total_n > 0, F.floor(dup_n * 1000000.0 / total_n) / 10000.0)
-                .otherwise(0.0)
-                .alias("dup_pct"),
-            )
-
-        if url_flagged is not None:
-            with tracker.stage("report_url_filter_summary"):
-                # one extra COLUMN-PRUNED pass over urls for the opt-in
-                # report (host parse is cheap relative to curation); the
-                # blocked-host derivation — the only shuffling part — is
-                # persisted inside url_filter and shared with the curate
-                # pass, so it is not recomputed here
-                dropped = F.sum((~F.col("url_keep")).cast("long"))
-                total = F.count(F.lit(1))
-                reports["url_filter_summary"] = url_flagged.agg(
-                    total.alias("records"),
-                    dropped.alias("dropped_n"),
-                    F.when(total > 0, F.floor(dropped * 10000.0 / total) / 100.0)
-                    .otherwise(F.lit(0.0))
-                    .alias("dropped_pct"),
-                )
-
-        with tracker.stage("report_scrub_summary"):
-            hits = F.sum(F.col("scrub_hit").cast("long"))
-            total = F.count(F.lit(1))
-            reports["scrub_summary"] = cur.agg(
-                total.alias("records"),
-                hits.alias("scrub_hits"),
-                F.when(total > 0, F.floor(hits * 10000.0 / total) / 100.0)
-                .otherwise(F.lit(0.0))
-                .alias("scrub_pct"),
-            )
-
-        with tracker.stage("report_extraction_summary"):
-            bad = F.sum((~F.col("extraction_ok")).cast("long"))
-            total = F.count(F.lit(1))
-            reports["extraction_summary"] = cur.agg(
-                total.alias("records"),
-                bad.alias("mismatch_n"),
-                F.when(total > 0, F.floor(bad * 10000.0 / total) / 100.0)
-                .otherwise(F.lit(0.0))
-                .alias("mismatch_pct"),
-            )
-
-        reports_path = os.path.join(out, "reports")
-        csv_path = os.path.join(out, "csv")
-        for name, rdf in reports.items():
-            rdf.write.mode("overwrite").parquet(os.path.join(reports_path, name))
-            if cfg.export_csv:
-                # reference &_csv=YES gate (data_curation_print.sas:121-150);
-                # reports are small aggregates, so a single CSV file each
-                from pcornet_data_curation_spark.sources.tables import export_csv
-
-                export_csv(
-                    spark.read.parquet(os.path.join(reports_path, name)),
-                    os.path.join(csv_path, name),
-                )
-            manifest.mark_report(name)
-        manifest.save()
-
-        # ---- normalize + checks (reads back the tiny report tables) ----
-        with tracker.stage("normalize_metrics"):
-            rread = {
-                name: spark.read.parquet(os.path.join(reports_path, name)) for name in reports
-            }
-            melted = [
-                melt_report(rread["rule_summary"], "rule_summary", ["bucket", "rule_id"]),
-                melt_report(rread["pages_tag"], "pages_tag", ["dataset", "tag"]),
-                melt_report(rread["lang_dist"], "lang_dist", ["category"]),
-                melt_report(rread["warc_ym_dist"], "warc_ym_dist", ["ym"]),
-                melt_report(rread["tokens_by_keep"], "tokens_by_keep", ["keep"]),
-                melt_report(rread["ppl_stats"], "ppl_stats", []),
-                melt_report(rread["warc_minmax"], "warc_minmax", ["variable"]),
-                melt_report(rread["verdict_summary"], "verdict_summary", []),
-                melt_report(rread["url_unique"], "url_unique", []),
-                melt_report(rread["scrub_summary"], "scrub_summary", []),
-                melt_report(rread["run_metadata"], "run_metadata", ["meta_key"]),
-                melt_report(rread["extraction_summary"], "extraction_summary", []),
-                melt_report(rread["dash_activity"], "dash_activity", ["window"]),
-                melt_report(rread["referential_summary"], "referential_summary", []),
-                melt_report(rread["domain_dist"], "domain_dist", ["host"]),
-                melt_report(rread["domain_summary"], "domain_summary", []),
-                melt_report(rread["dedup_summary"], "dedup_summary", ["mode"]),
-            ]
-            if "url_filter_summary" in rread:
-                melted.append(
-                    melt_report(rread["url_filter_summary"], "url_filter_summary", [])
-                )
-            # rename 'tag' melts: variable column comes from id concat; fine as category
-            metrics = assemble_metrics(melted)
-
-            # cross-run metric families (drift / staleness / trend): metric
-            # ROWS appended to the same normalized table so the data-driven
-            # check registry evaluates them like any other statistic. All
-            # inputs are tiny aggregated tables — cost independent of corpus
-            # size. Drift compares FIRST-ORDER metrics only (a prior run's
-            # own drift/trend/staleness rows are excluded on both sides).
-            from pcornet_data_curation_spark.operators.drift import (
-                drift_metrics,
-                staleness_metrics,
-                trend_metrics,
-            )
-
-            _DERIVED = ("drift|", "threshold_trend", "report_staleness")
-
-            def _first_order(m):
-                cond = ~F.col("dc_name").startswith("drift|")
-                for d in _DERIVED[1:]:
-                    cond = cond & (F.col("dc_name") != d)
-                return m.where(cond)
-
-            # staleness has TWO distinct questions with different frames of
-            # reference: `stale` (reports older than curated data — the
-            # died-mid-report inconsistency) is only observable on the
-            # PRE-RUN snapshot, because this run repairs it; `age_sec`
-            # (report older than N days, check 12.02) is about the store
-            # being LEFT BEHIND — a question an in-run evaluation can never
-            # answer in the positive (this run just re-marked every report,
-            # so age_sec ≈ 0 here by construction, and a store nobody runs
-            # never writes a metrics row). The rows below keep the metric's
-            # shape in the table; the MEANINGFUL evaluation is the
-            # standalone `python -m pcornet_data_curation_spark check`
-            # command, which recomputes staleness from the live manifest at
-            # invocation time over an existing store.
-            stale_rows = staleness_metrics(pre_run_manifest, pre_run_ts, spark).where(
-                F.col("statistic") == "stale"
-            )
-            age_rows = staleness_metrics(manifest.data, _time.time(), spark).where(
-                F.col("statistic") == "age_sec"
-            )
-            extra = [stale_rows, age_rows]
-            if cfg.prior_run_root:
-                prior_path = os.path.join(cfg.prior_run_root, "metrics")
-                try:
-                    prior = _first_order(spark.read.parquet(prior_path))
-                except Exception:
-                    prior = None  # first refresh: drift/trend report n/a
-                if prior is not None:
-                    now_fo = _first_order(metrics)
-                    extra.append(drift_metrics(now_fo, prior))
-                    extra.append(trend_metrics(DEFAULT_CHECKS, now_fo, prior))
-            metrics = assemble_metrics([metrics, *extra])
-            metrics_path = os.path.join(out, "metrics")
-            metrics.write.mode("overwrite").parquet(metrics_path)
-
-        with tracker.stage("data_checks"):
-            exceptions = run_checks(spark.read.parquet(metrics_path), DEFAULT_CHECKS)
-            exceptions_path = os.path.join(out, "exceptions")
-            exceptions.write.mode("overwrite").parquet(exceptions_path)
-
-        with tracker.stage("completeness_check"):
-            # expected-vs-produced registry (reference edc_prep.sas:80-125)
-            completeness = expected_reports_check(
-                produced=list(reports), expected=EXPECTED_REPORTS, spark=spark
-            )
-            completeness_path = os.path.join(out, "completeness")
-            completeness.write.mode("overwrite").parquet(completeness_path)
-
-        lineage_path = os.path.join(out, "lineage")
-        tracker.to_df(spark).write.mode("append").parquet(lineage_path)
-
-        from pcornet_data_curation_spark.operators.report_render import render_run_report
-
-        report_md = render_run_report(spark, out)
+        paths = run_report_tail(
+            spark, cur, cfg, manifest, tracker, url_flagged, legacy_no_dedup,
+            pre_run_manifest, pre_run_ts,
+        )
     finally:
         if url_flagged is not None:
             from pcornet_data_curation_spark.operators.dedup import unpersist_deps
@@ -742,14 +415,4 @@ def run_pipeline(
         "rows": sum(v["rows"] for v in manifest.data["buckets"].values()),
         "kept": sum(v["kept"] for v in manifest.data["buckets"].values()),
     }
-    return {
-        "curated": curated_path,
-        "reports": reports_path,
-        "metrics": metrics_path,
-        "exceptions": exceptions_path,
-        "completeness": completeness_path,
-        "lineage": lineage_path,
-        "report_md": report_md,
-        "manifest": manifest.path,
-        "stats": stats,
-    }
+    return {"curated": curated_path, **paths, "manifest": manifest.path, "stats": stats}

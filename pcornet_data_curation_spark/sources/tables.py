@@ -23,6 +23,12 @@ swapping the format touches one function.
 
 from __future__ import annotations
 
+import os
+import shutil
+import uuid
+
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 
 
@@ -80,6 +86,38 @@ def export_csv(df: DataFrame, path: str, single_file: bool = True) -> None:
     small aggregate tables, never the fact table."""
     out = df.coalesce(1) if single_file else df
     out.write.mode("overwrite").option("header", True).csv(path)
+
+
+def write_small_table(table: pa.Table, path: str) -> None:
+    """Make directory `path` hold `table` as its one parquet file — the
+    sink for driver-side outputs (reports, metrics, checks) of a few
+    hundred rows, written without a Spark job. The file is written
+    hidden, then renamed over `part-00000.parquet` (atomic on the
+    local/POSIX output root the manifest's os.replace already assumes),
+    so a reader sees the old table or the new one. Any other file in
+    the directory (a table Spark wrote there, a crashed write's hidden
+    file) is removed first. Spark and pyarrow skip hidden files."""
+    os.makedirs(path, exist_ok=True)
+    tmp = f".{uuid.uuid4().hex}.parquet"
+    pq.write_table(table, os.path.join(path, tmp))
+    for name in os.listdir(path):
+        if name not in (tmp, "part-00000.parquet"):
+            old = os.path.join(path, name)
+            if os.path.isdir(old):
+                shutil.rmtree(old)
+            else:
+                os.remove(old)
+    os.replace(os.path.join(path, tmp), os.path.join(path, "part-00000.parquet"))
+
+
+def append_small_table(table: pa.Table, path: str) -> None:
+    """Add `table` to directory `path` as one more parquet file (append
+    semantics, e.g. one lineage file per run)."""
+    os.makedirs(path, exist_ok=True)
+    name = f"part-{uuid.uuid4().hex}.parquet"
+    tmp = os.path.join(path, "." + name)
+    pq.write_table(table, tmp)
+    os.replace(tmp, os.path.join(path, name))
 
 
 def datastore_kind(spark: SparkSession, refs: list[str]) -> str:

@@ -152,7 +152,7 @@ def runs(spark, tmp_path_factory):
 def test_report_tail_matches_golden(runs):
     if WRITE:
         with open(GOLDEN, "w") as f:
-            json.dump(runs, f, indent=0, sort_keys=True)
+            json.dump(runs, f, separators=(",", ":"), sort_keys=True)
             f.write("\n")
     with open(GOLDEN) as f:
         golden = json.load(f)

@@ -249,13 +249,13 @@ def test_domain_dist_topn_other_rollup(spark):
 
 
 def test_domain_summary_concentration(spark):
-    from pcornet_data_curation_spark.operators.reports import domain_summary
+    from pcornet_data_curation_spark.operators.reports import domain_tables, host_pass
 
     rows = [("https://big.example.com/%d" % i, True) for i in range(70)] + [
         ("https://site-%d.example.com/x" % i, True) for i in range(30)
     ]
     df = spark.createDataFrame(rows, "url string, keep boolean")
-    s = domain_summary(df, top_n=5).toPandas().iloc[0]
+    _, s = domain_tables(host_pass(df, top_n=5), top_n=5)
     assert s["hosts_n"] == 31 and s["records"] == 100 and s["null_host_n"] == 0
     assert s["top1_share_pct"] == 70.0
     assert s["top5_share_pct"] == 74.0  # 70 + 4 tail singletons
@@ -265,7 +265,7 @@ def test_host_extraction_ignores_port_and_userinfo(spark):
     """One real host must count as one host regardless of port or
     userinfo decoration — otherwise the 14.x concentration checks can
     be evaded by url variation."""
-    from pcornet_data_curation_spark.operators.reports import domain_summary
+    from pcornet_data_curation_spark.operators.reports import domain_tables, host_pass
 
     rows = [
         ("https://cdn.example.com/a", True),
@@ -276,13 +276,13 @@ def test_host_extraction_ignores_port_and_userinfo(spark):
         ("https://other.example.net/x", True),
     ]
     df = spark.createDataFrame(rows, "url string, keep boolean")
-    s = domain_summary(df, top_n=5).toPandas().iloc[0]
+    _, s = domain_tables(host_pass(df, top_n=5), top_n=5)
     assert s["hosts_n"] == 2
     assert s["top1_share_pct"] == pytest.approx(83.3333, abs=0.001)
 
 
 def test_host_extraction_ipv6_lands_in_null_row(spark):
-    from pcornet_data_curation_spark.operators.reports import domain_summary
+    from pcornet_data_curation_spark.operators.reports import domain_tables, host_pass
 
     rows = [
         ("https://[2001:db8::1]/x", True),
@@ -290,7 +290,7 @@ def test_host_extraction_ipv6_lands_in_null_row(spark):
         ("https://real.example.com/z", True),
     ]
     df = spark.createDataFrame(rows, "url string, keep boolean")
-    s = domain_summary(df, top_n=5).toPandas().iloc[0]
+    _, s = domain_tables(host_pass(df, top_n=5), top_n=5)
     # the two IPv6 urls are NULL-host (not a phantom '[' host)
     assert s["hosts_n"] == 2 and s["null_host_n"] == 2
 
@@ -298,7 +298,7 @@ def test_host_extraction_ipv6_lands_in_null_row(spark):
 def test_host_extraction_userinfo_with_ipv6_not_phantom(spark):
     """Backtracking regression: 'https://alice@[::1]/x' must NOT report
     the userinfo 'alice' as a host — it is an IPv6 origin (NULL row)."""
-    from pcornet_data_curation_spark.operators.reports import domain_summary
+    from pcornet_data_curation_spark.operators.reports import domain_tables, host_pass
 
     rows = [
         ("https://alice@[2001:db8::1]/a", True),
@@ -306,5 +306,5 @@ def test_host_extraction_userinfo_with_ipv6_not_phantom(spark):
         ("https://carol@real.example.com/c", True),
     ]
     df = spark.createDataFrame(rows, "url string, keep boolean")
-    s = domain_summary(df, top_n=5).toPandas().iloc[0]
+    _, s = domain_tables(host_pass(df, top_n=5), top_n=5)
     assert s["hosts_n"] == 2 and s["null_host_n"] == 2  # real host + NULL
