@@ -1,2 +1,2 @@
 """Engine operators: scoring, rule engine, verdict, reports, dedup,
-similarity, multimodal plumbing."""
+similarity."""

@@ -2,10 +2,15 @@
 
 One heavy distributed pass per run:
 
-  pages ──filter(lookback)──▶ salted repartition on url-hash
+  pages ──lookback/noindex filter, scan projection, text repair
+        ──dedup flag──▶ salted repartition on url-hash
         ──score (one pandas-UDF pass)──▶ rule flags + verdict + scrub
         ──▶ curated parquet, partitioned by url-hash bucket
              (dynamic partition overwrite ⇒ idempotent per bucket)
+
+(`prepare_pages` and `finish_curation` are the two halves around the
+dedup flag; the streaming path composes the same two halves around its
+stateful flag.)
 
 then the reporting tail (plans/report_tail.py): five exact aggregation
 passes over the curated table, projected once, bring bucket- and
@@ -164,16 +169,12 @@ def with_near_dup_flag(df: DataFrame, threshold: float = 0.8) -> DataFrame:
     return df.join(dropped, "url", "left").na.fill({"exact_dup": False})
 
 
-def curate(
-    pages: DataFrame, cfg: PipelineConfig, precomputed_dedup: bool = False
-) -> DataFrame:
-    """The full row-level transform chain (stages 0-5), lazily planned.
-
-    precomputed_dedup=True: `pages` already carries an exact_dup column
-    (the streaming path computes it with the stateful first-seen
-    operator before curation, streaming/stateful.stream_dedup_flag) —
-    skip the batch flag computation but still honor cfg.dedup's
-    drop-mode keep fold."""
+def prepare_pages(pages: DataFrame, cfg: PipelineConfig) -> DataFrame:
+    """First half of the row-level plan, shared by `curate` and
+    `streaming.curate_stream`: lookback and noindex filters, one scan
+    projection to (url, warc_ts, text, lang, extraction_ok), then the
+    opt-in text repairs. The dedup flag goes between this and
+    `finish_curation`, so it fingerprints repaired text."""
     df = lookback_filter(pages, cfg)
     if cfg.respect_noindex and "html" in df.columns:
         # publisher opt-out re-check (stored WARCs must re-honor what
@@ -188,20 +189,11 @@ def curate(
         df = df.where(~robots_noindex_col(F.col("html")))
     # consume html AT THE SCAN: extraction_ok is derived here and html
     # dropped immediately, so the wide binary column never rides the
-    # (bucket, salt) shuffle or the Arrow round-trip of the scoring UDF
-    # (measured: carrying it through cost ~3x on the curation pass).
-    # extraction_ok evaluates against the ORIGINAL text column; the
-    # missing-text fill happens in the SAME projection (identical
-    # expression + ordering as the streaming path, both from
-    # operators/extract.missing_text_filled_col).
-    if "extraction_ok" in df.columns:
-        # already derived upstream (the streaming dedup path consumes
-        # html BEFORE its stateful shuffle, same rule as this scan)
-        extraction_ok = F.col("extraction_ok")
-    elif cfg.check_extraction:
-        extraction_ok = extraction_consistent_col()
-    else:
-        extraction_ok = F.lit(True)
+    # dedup or (bucket, salt) shuffle or the Arrow round-trip of the
+    # scoring UDF (measured: carrying it through cost ~3x on the
+    # curation pass). extraction_ok evaluates against the ORIGINAL
+    # text column; the missing-text fill happens in the SAME projection.
+    extraction_ok = extraction_consistent_col() if cfg.check_extraction else F.lit(True)
     text_expr = F.col("text")
     if cfg.extract_missing_text and "html" in df.columns:
         from pcornet_data_curation_spark.operators.extract import (
@@ -211,10 +203,9 @@ def curate(
         text_expr = missing_text_filled_col(
             preserve_lines=cfg.extract_preserve_lines
         )
-    tail_cols = ["lang"] + (["exact_dup"] if precomputed_dedup else [])
     df = df.select(
         "url", "warc_ts", text_expr.alias("text"),
-        *tail_cols, extraction_ok.alias("extraction_ok"),
+        "lang", extraction_ok.alias("extraction_ok"),
     )
     # text-repair stages (opt-in, production order: fix encoding, then
     # remove boilerplate, THEN dedup/score — so fingerprints and
@@ -222,9 +213,8 @@ def curate(
     # `text` ATTRIBUTE, not the extract expression: boilerplate
     # cleaning references its input several times and CollapseProject's
     # multi-reference guard keeps the extract chain evaluated once in
-    # the projection below. Pure Column algebra — the streaming path
-    # (curate_stream -> curate) gets both stages for free. NULL text
-    # stays NULL: missing-text rule accounting is untouched.
+    # the projection above. NULL text stays NULL: missing-text rule
+    # accounting is untouched.
     if cfg.fix_mojibake:
         from pcornet_data_curation_spark.operators.mojibake import mojibake_fix_col
 
@@ -235,23 +225,14 @@ def curate(
         )
 
         df = with_boilerplate_removed(df, "text")
-    if precomputed_dedup:
-        pass  # flag already on the rows (streaming stateful dedup)
-    elif cfg.dedup != "off":
-        # global dedup BEFORE the (bucket, salt) repartition: the
-        # dedup-shuffle output feeds straight into the range
-        # partitioner, and the survivor choice (min url) is a pure
-        # function of the full input, so a partial-bucket resume
-        # recomputes identical flags. 'flag' records exact_dup only;
-        # 'drop' also folds it into keep. Default 'off': the F1-parity
-        # contract is per-url verdicts, and dedup is a corpus-level
-        # decision the caller opts into (C4 drops, Gopher reports).
-        if cfg.dedup_method == "near":
-            df = with_near_dup_flag(df, cfg.near_threshold)
-        else:
-            df = with_exact_dup_flag(df)
-    else:
-        df = df.withColumn("exact_dup", F.lit(False))
+    return df
+
+
+def finish_curation(df: DataFrame, cfg: PipelineConfig) -> DataFrame:
+    """Second half of the row-level plan: `df` is `prepare_pages`'
+    output plus an exact_dup column. Salted repartition, doc stats,
+    rule verdict and scrub, the drop-mode keep fold, and the curated
+    projection."""
     df = salted_repartition(df, cfg)
     df = with_doc_stats(df)
     df = with_verdict(df, cfg.rule_overrides)
@@ -275,6 +256,28 @@ def curate(
         "exact_dup",
         "scrubbed_text",
     )
+
+
+def curate(pages: DataFrame, cfg: PipelineConfig) -> DataFrame:
+    """The full row-level transform chain (stages 0-5), lazily planned:
+    `prepare_pages`, the batch dedup flag, `finish_curation`."""
+    df = prepare_pages(pages, cfg)
+    if cfg.dedup != "off":
+        # global dedup BEFORE the (bucket, salt) repartition: the
+        # dedup-shuffle output feeds straight into the range
+        # partitioner, and the survivor choice (min url) is a pure
+        # function of the full input, so a partial-bucket resume
+        # recomputes identical flags. 'flag' records exact_dup only;
+        # 'drop' also folds it into keep. Default 'off': the F1-parity
+        # contract is per-url verdicts, and dedup is a corpus-level
+        # decision the caller opts into (C4 drops, Gopher reports).
+        if cfg.dedup_method == "near":
+            df = with_near_dup_flag(df, cfg.near_threshold)
+        else:
+            df = with_exact_dup_flag(df)
+    else:
+        df = df.withColumn("exact_dup", F.lit(False))
+    return finish_curation(df, cfg)
 
 
 def run_pipeline(

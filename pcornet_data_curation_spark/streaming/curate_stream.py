@@ -1,19 +1,18 @@
-"""Streaming curation: the batch row-level transforms over a
-Structured Streaming file source.
+"""Streaming curation: the batch row-level plan over a Structured
+Streaming file source.
 
-Because stages 1-5 are stateless per-row transforms (score → flags →
-verdict → scrub), they lift unchanged onto a stream; only the report
-family needs micro-batch aggregation (done per-batch via
-foreachBatch in `run_stream_once`). Checkpointing is Spark's own
-exactly-once file-sink checkpoint — the batch pipeline's manifest is
-not used here.
+The stream runs the batch stage order: `plans.pipeline.prepare_pages`
+(lookback and noindex filters, scan projection, text repair), the dedup
+flag (here the stateful `streaming.stateful.stream_dedup_flag`), then
+`plans.pipeline.finish_curation` (salted repartition, scoring, verdict,
+scrub, drop-mode keep fold). Checkpointing is Spark's own exactly-once
+file-sink checkpoint — the batch pipeline's manifest is not used here.
 
 Observability: the curated stream carries `observe()` metrics
 (records / kept / scrub_hits per micro-batch) — the streaming analog
 of the batch pipeline's verdict_summary — captured by a
-StreamingQueryListener and written to <output>/stream_metrics, so a
-long-running ingest exposes the same per-partition-of-time lineage
-the batch manifest gives per bucket.
+StreamingQueryListener and appended to <output>/stream_metrics as one
+driver-written parquet file per drain.
 """
 
 from __future__ import annotations
@@ -26,11 +25,14 @@ from pyspark.sql.streaming import StreamingQueryListener
 
 from pcornet_data_curation_spark.config import PipelineConfig
 from pcornet_data_curation_spark.datagen.pages import PAGES_DDL
-from pcornet_data_curation_spark.plans.pipeline import curate
+from pcornet_data_curation_spark.operators.normalize import arrow_schema, rows_table
+from pcornet_data_curation_spark.plans.pipeline import finish_curation, prepare_pages
+from pcornet_data_curation_spark.sources.tables import append_small_table
+from pcornet_data_curation_spark.streaming.stateful import stream_dedup_flag
 
 OBSERVATION_NAME = "curation"
 STREAM_METRICS_DDL = (
-    "batch_id long, records long, kept long, scrub_hits long"
+    "batch_id bigint, records bigint, kept bigint, scrub_hits bigint"
 )
 
 
@@ -38,18 +40,18 @@ def curate_stream(
     spark: SparkSession, input_dir: str, cfg: PipelineConfig
 ) -> DataFrame:
     """readStream over a parquet directory of pages → curated stream
-    (same columns as the batch curated table).
+    (same columns as the batch curated table), built from the batch
+    plan's two halves: `prepare_pages`, then the dedup flag, then
+    `finish_curation`.
 
     cfg.dedup on a stream: the batch stage's corpus-wide groupBy+join
     cannot run on an unbounded stream, so the flag is computed by the
-    stateful first-seen operator instead (stream_dedup_flag: state =
-    one boolean per fingerprint, survivor = first arrival rather than
-    the batch stage's global min url — see its docstring). 'flag'
-    records exact_dup; 'drop' additionally folds it into keep inside
-    curate — identical downstream semantics to the batch pipeline.
-    Near-dup mode stays batch-only: MinHash banding + connected
-    components need corpus-wide self-joins with no bounded-state
-    streaming equivalent.
+    stateful first-seen operator instead (stream_dedup_flag: survivor =
+    first arrival rather than the batch stage's global min url — see
+    its docstring); 'drop' folds it into keep in `finish_curation`, as
+    in batch. Near-dup mode stays batch-only: MinHash banding +
+    connected components need corpus-wide self-joins with no
+    bounded-state streaming equivalent.
     """
     if cfg.url_blocklist:
         # the distinct-host suffix optimization is batch-only; a
@@ -77,38 +79,12 @@ def curate_stream(
         .option("maxFilesPerTrigger", 8)
         .parquet(input_dir)
     )
+    df = prepare_pages(stream, cfg)
     if cfg.dedup != "off":
-        from pcornet_data_curation_spark.plans.pipeline import (
-            extraction_consistent_col,
-            lookback_filter,
-        )
-        from pcornet_data_curation_spark.streaming.stateful import stream_dedup_flag
-
-        # lookback BEFORE dedup, matching the batch stage order — a
-        # pre-lookback row must not consume a fingerprint's first-seen
-        # slot (curate re-applies the filter; it is idempotent). html
-        # is consumed HERE (extraction_ok derived, binary dropped) so
-        # the ~100 KB-per-row column never rides the fp-keyed state
-        # shuffle or the stateful operator's Arrow round-trip — the
-        # same consume-at-the-scan rule the batch curate applies.
-        ext = (
-            extraction_consistent_col() if cfg.check_extraction else F.lit(True)
-        )
-        text_expr = F.col("text")
-        if cfg.extract_missing_text:
-            from pcornet_data_curation_spark.operators.extract import (
-                missing_text_filled_col,
-            )
-
-            text_expr = missing_text_filled_col(
-                preserve_lines=cfg.extract_preserve_lines
-            )
-        pre = lookback_filter(stream, cfg).select(
-            "url", "warc_ts", text_expr.alias("text"), "lang",
-            ext.alias("extraction_ok"),
-        )
-        return curate(stream_dedup_flag(pre), cfg, precomputed_dedup=True)
-    return curate(stream, cfg)
+        df = stream_dedup_flag(df)
+    else:
+        df = df.withColumn("exact_dup", F.lit(False))
+    return finish_curation(df, cfg)
 
 
 class _MetricsListener(StreamingQueryListener):
@@ -187,7 +163,8 @@ def run_stream_once(
             )
     finally:
         spark.streams.removeListener(listener)
-    spark.createDataFrame(listener.rows, STREAM_METRICS_DDL).write.mode(
-        "append"
-    ).parquet(os.path.join(cfg.output_root, "stream_metrics"))
+    append_small_table(
+        rows_table(listener.rows, arrow_schema(STREAM_METRICS_DDL)),
+        os.path.join(cfg.output_root, "stream_metrics"),
+    )
     return out

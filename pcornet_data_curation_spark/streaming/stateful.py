@@ -1,24 +1,8 @@
-"""Stateful / windowed streaming operators (engine extension — the
-reference is strictly batch, SURVEY §2.9; these cover the streaming
-surface a web-scale ingest needs).
-
-* windowed_lang_counts — event-time tumbling-window aggregation with a
-  watermark for late data (the %n_pct-per-period report, streamified).
-* stream_dedup_first_seen — custom stateful operator via
-  applyInPandasWithState: emits only the FIRST occurrence of each
-  content fingerprint across micro-batches; state = fingerprints seen,
-  keyed by fingerprint (so state is a single-row marker per key and
-  the shuffle is by fingerprint — no global structure).
-* stream_sessionize — gap-based session windows per user via
-  applyInPandasWithState + event-time timeout: the streaming twin of
-  the batch lag+running-sum sessionization (queries.sessionize_events).
-  State per user = ONE open session triple; closed sessions emit as
-  soon as a larger gap arrives in-batch, or via watermark timeout when
-  the stream goes quiet — O(active users) state, never O(events).
-  Late-but-within-watermark events arriving in a LATER micro-batch
-  MERGE into the open session (start=min, last=max) instead of
-  regressing it; see stream_sessionize for the exact rules and the
-  documented divergences from the batch twin.
+"""Stateful streaming operator (engine extension — the reference is
+strictly batch, SURVEY §2.9): `stream_dedup_flag`, the exact-dedup
+flag of `streaming.curate_stream`, via applyInPandasWithState keyed by
+content fingerprint (state = one marker per fingerprint, no global
+structure).
 """
 
 from __future__ import annotations
@@ -30,72 +14,15 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-DEDUP_OUT_DDL = "fp long, url string, warc_ts timestamp"
 DEDUP_STATE_DDL = "seen boolean"
-
-
-def windowed_lang_counts(
-    pages_stream: DataFrame,
-    window: str = "1 hour",
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """Tumbling event-time window counts per declared lang, tolerating
-    `watermark` of lateness (late rows beyond it are dropped, enabling
-    state cleanup — required for an unbounded 10^12-doc stream)."""
-    return (
-        pages_stream.withWatermark("warc_ts", watermark)
-        .groupBy(F.window("warc_ts", window).alias("w"), "lang")
-        .agg(F.count(F.lit(1)).alias("record_n"))
-        .select(
-            F.col("w.start").alias("window_start"),
-            F.col("w.end").alias("window_end"),
-            "lang",
-            "record_n",
-        )
-    )
-
-
-def stream_dedup_first_seen(pages_stream: DataFrame) -> DataFrame:
-    """First-seen exact dedup across the whole stream: rows whose
-    whitespace/case-normalized fingerprint was already emitted in ANY
-    earlier micro-batch are dropped. State per fingerprint is one
-    boolean — O(distinct docs) cluster-wide, sharded by the groupBy key.
-    """
-    ws = "[ \\t\\n\\r\\f\\x0B]+"
-    fp = F.xxhash64(F.lower(F.trim(F.regexp_replace(F.col("text"), ws, " "))))
-    keyed = pages_stream.where(F.col("text").isNotNull()).select(
-        fp.alias("fp"), "url", "warc_ts"
-    )
-
-    def dedup(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            return  # fingerprint already emitted in a previous batch
-        first = None
-        for pdf in pdfs:
-            cand = pdf.sort_values(["warc_ts", "url"]).head(1)
-            first = cand if first is None else pd.concat([first, cand]).sort_values(
-                ["warc_ts", "url"]
-            ).head(1)
-        state.update((True,))
-        if first is not None:
-            yield first[["fp", "url", "warc_ts"]]
-
-    return keyed.groupBy("fp").applyInPandasWithState(
-        dedup,
-        outputStructType=DEDUP_OUT_DDL,
-        stateStructType=DEDUP_STATE_DDL,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
 
 
 def stream_dedup_flag(pages_stream: DataFrame) -> DataFrame:
     """Streaming twin of the batch exact-dedup stage (pipeline
-    `with_exact_dup_flag`), wired for curate_stream: every page row
-    passes through keyed by its whitespace/case-normalized content
-    fingerprint; the FIRST arrival of each fingerprint survives
+    `with_exact_dup_flag`), applied by curate_stream where batch
+    `curate` applies that stage: between `prepare_pages` and
+    `finish_curation`. Every row passes through keyed by its
+    whitespace/case-normalized content fingerprint; the FIRST arrival of each fingerprint survives
     (exact_dup=False) and every later arrival is flagged
     exact_dup=True. Within one micro-batch "first" is deterministic —
     min (warc_ts, url); across batches it is arrival order. State per
@@ -103,12 +30,9 @@ def stream_dedup_flag(pages_stream: DataFrame) -> DataFrame:
     by the groupBy key, the same fp-keyed co-location the batch
     stage's groupBy+join pays.
 
-    Schema-flexible: output = input columns + exact_dup, so the caller
-    controls what rides the fp-keyed state shuffle and the Arrow
-    round-trip — curate_stream derives extraction_ok and DROPS the
-    wide html binary BEFORE this operator (the batch pipeline's
-    "consume html at the scan" rule; carrying ~100 KB of html per row
-    through the widest shuffle measured ~3× on the batch pass).
+    Output = input columns + exact_dup. The input is `prepare_pages`'
+    projection, so html is already consumed and never rides the
+    fp-keyed state shuffle, and the fingerprint sees repaired text.
     Requires url and warc_ts (the in-batch ordering key) and text (the
     fingerprint source).
 
@@ -169,119 +93,4 @@ def stream_dedup_flag(pages_stream: DataFrame) -> DataFrame:
         stateStructType=DEDUP_STATE_DDL,
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-SESSION_OUT_DDL = (
-    "user_id long, session_start timestamp, session_end timestamp, events_n long"
-)
-SESSION_STATE_DDL = "start_us long, last_us long, n long"
-_US = 1_000_000
-
-
-def stream_sessionize(
-    events_stream: DataFrame,
-    gap_minutes: int = 30,
-    watermark: str = "1 hour",
-    ts_col: str = "ts",
-    user_col: str = "user_id",
-) -> DataFrame:
-    """Gap-based sessionization over an unbounded event stream.
-
-    Semantics match the batch sessionize (queries.sessionize_events):
-    a session closes when the next event for the user is more than
-    `gap_minutes` later. Sessions that close INSIDE a micro-batch emit
-    immediately; the trailing open session is held in state (one triple
-    per user) and emitted by event-time timeout once the watermark
-    passes last_event + gap — so quiet users' state is reclaimed and
-    total state is O(active users).
-
-    Out-of-order handling (events arriving in a LATER micro-batch with
-    ts at or before the open session's last event — the case
-    watermarks exist for): the batch's sorted events and the open
-    session's (start, last, n) interval are gap-merged TOGETHER as one
-    time-ordered interval sequence — the standard transitive merge, so
-    a batch like [40, 60] against an open session starting at 100 with
-    gap 50 correctly chains 40–60–100 into one session instead of
-    stranding 40 as a spurious early session (40 is within gap of 60,
-    60 within gap of 100). The final (latest) merged interval stays
-    open in state; every earlier merged interval ends more than `gap`
-    before the open one's start and emits at the end of the batch.
-
-    Residual divergences from the batch twin (which sorts the complete
-    log globally): (a) a late event landing within `gap` of a session
-    that was ALREADY emitted in an earlier batch emits as a separate
-    session rather than re-opening it — append-mode output is
-    immutable; (b) a non-final merged interval emitted at batch end
-    cannot merge with yet-later arrivals. Both affect only events
-    later than their neighbors by more than a micro-batch, and never
-    lose events.
-    """
-    gap_us = gap_minutes * 60 * _US
-    ev = events_stream.withWatermark(ts_col, watermark).select(
-        F.col(user_col).alias("user_id"), F.col(ts_col).alias("ts")
-    )
-
-    def sessionize(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        def out(rows):
-            return pd.DataFrame(
-                {
-                    "user_id": [key[0]] * len(rows),
-                    "session_start": [pd.Timestamp(s, unit="us") for s, _, _ in rows],
-                    "session_end": [pd.Timestamp(e, unit="us") for _, e, _ in rows],
-                    "events_n": [n for _, _, n in rows],
-                }
-            )
-
-        if state.hasTimedOut:
-            start, last, n = state.get
-            state.remove()
-            yield out([(start, last, n)])
-            return
-        parts = [pdf["ts"] for pdf in pdfs if len(pdf)]
-        if not parts:
-            return
-        ts = (
-            pd.concat(parts)
-            .sort_values()
-            .astype("datetime64[us]")
-            .astype("int64")
-            .to_numpy()
-        )
-        # transitive gap-merge: treat the open session's (start, last)
-        # as one more interval, merge-ordered with the sorted batch
-        # events, then run the standard interval gap-merge over the
-        # combined sequence. This is what the batch twin computes over
-        # a complete sorted log, so a late run that CHAINS up to the
-        # open session (e.g. [40, 60] against start=100, gap=50) merges
-        # instead of stranding a spurious early session.
-        items: list[tuple[int, int, int]] = [(int(t), int(t), 1) for t in ts]
-        if state.exists:
-            items.append(tuple(state.get))
-            items.sort()
-        merged: list[list[int]] = [list(items[0])]
-        for s, e, nn in items[1:]:
-            cur = merged[-1]
-            if s <= cur[1] + gap_us:
-                if e > cur[1]:
-                    cur[1] = e
-                cur[2] += nn
-            else:
-                merged.append([s, e, nn])
-        closed = [tuple(iv) for iv in merged[:-1]]
-        start, last, n = merged[-1]
-        state.update((start, last, n))
-        # event-time timeout: fires when the watermark passes the gap
-        state.setTimeoutTimestamp(last // 1000 + gap_minutes * 60 * 1000)
-        if closed:
-            yield out(closed)
-
-    return ev.groupBy("user_id").applyInPandasWithState(
-        sessionize,
-        outputStructType=SESSION_OUT_DDL,
-        stateStructType=SESSION_STATE_DDL,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
     )

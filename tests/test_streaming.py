@@ -35,244 +35,63 @@ def test_stream_matches_batch(spark, tmp_path):
     # checkpoint exists → exactly-once restart metadata present
     assert os.path.isdir(os.path.join(cfg.output_root, "stream_checkpoint"))
 
-
-def test_windowed_lang_counts_watermark(spark, tmp_path):
-    from pcornet_data_curation_spark.datagen.pages import PAGES_DDL
-    from pcornet_data_curation_spark.streaming.stateful import windowed_lang_counts
-
-    indir = str(tmp_path / "win_in")
-    pages_df(spark, 400, partitions=2).write.parquet(indir)
-    stream = spark.readStream.schema(PAGES_DDL).parquet(indir)
-    out = str(tmp_path / "win_out")
-    q = (
-        windowed_lang_counts(stream, window="30 days", watermark="1 day")
-        .writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", str(tmp_path / "win_ckpt"))
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+    # one more input: noindex, both repairs and dedup=flag — the stream
+    # must drop the noindex page and fingerprint the repaired text, as
+    # batch does
+    repair_in = str(tmp_path / "repair_in")
+    _write_noindex_mojibake_pages(spark, repair_in)
+    cfg = PipelineConfig(
+        output_root=str(tmp_path / "out_repair"), n_buckets=4, respect_noindex=True,
+        fix_mojibake=True, remove_boilerplate=True, dedup="flag",
     )
-    q.awaitTermination()
-    got = spark.read.parquet(out).toPandas()
-    # with availableNow + watermark, only windows older than the final
-    # watermark are closed/emitted; at least the early months must exist
-    assert len(got) > 0
-    assert set(got.columns) == {"window_start", "window_end", "lang", "record_n"}
-    assert (got["record_n"] > 0).all()
-
-
-def test_stream_dedup_first_seen(spark, tmp_path):
-    import pandas as pd
-    from pcornet_data_curation_spark.datagen.pages import PAGES_DDL, pages_pdf
-    from pcornet_data_curation_spark.streaming.stateful import stream_dedup_first_seen
-
-    indir = tmp_path / "dedup_in"
-    indir.mkdir()
-    base = pages_pdf(200)
-    # batch 1 = originals; batch 2 = half duplicates (same text, new url)
-    b1 = base.copy()
-    b2 = base.head(100).copy()
-    b2["url"] = b2["url"] + "?copy=1"
-    spark.createDataFrame(b1, PAGES_DDL).coalesce(1).write.parquet(str(indir / "b1"))
-    spark.createDataFrame(b2, PAGES_DDL).coalesce(1).write.parquet(str(indir / "b2"))
-
-    stream = (
-        spark.readStream.schema(PAGES_DDL)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(indir / "*"))
-    )
-    out = str(tmp_path / "dedup_out")
-    q = (
-        stream_dedup_first_seen(stream)
-        .writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", str(tmp_path / "dedup_ckpt"))
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got = spark.read.parquet(out).toPandas()
-    # exactly one row per distinct fingerprint, duplicates suppressed
-    assert got["fp"].is_unique
-    n_distinct_texts = base["text"].dropna().map(
-        lambda t: " ".join(t.lower().split())
-    ).nunique()
-    assert len(got) == n_distinct_texts
-
-
-def test_stream_sessionize_gap_splitting(spark, tmp_path):
-    """In-batch gap splitting: sessions separated by more than the gap
-    close and emit; per-session counts/spans match the batch
-    lag+running-sum sessionization semantics. The trailing open session
-    stays in state (no emission without a later batch/timeout)."""
-    import datetime as dt
-
-    import pandas as pd
-
-    from pcornet_data_curation_spark.streaming.stateful import stream_sessionize
-
-    t0 = dt.datetime(2024, 1, 1, 12, 0, 0)
-
-    def m(minutes):
-        return t0 + dt.timedelta(minutes=minutes)
-
-    rows = [
-        # user 1: session A (3 events), 60-min gap, session B (2 events), open tail
-        (1, m(0)), (1, m(5)), (1, m(10)),
-        (1, m(70)), (1, m(75)),
-        (1, m(200)),
-        # user 2: one closed session (2 events), open tail
-        (2, m(0)), (2, m(20)),
-        (2, m(300)),
+    cols = ["url", "keep", "exact_dup", "scrubbed_text"]
+    sink = run_stream_once(spark, repair_in, cfg)
+    got = spark.read.parquet(sink).select(*cols).orderBy("url").toPandas()
+    want = curate(spark.read.parquet(repair_in), cfg).select(*cols).orderBy("url").toPandas()
+    assert got.equals(want)
+    assert got["url"].tolist() == [
+        "https://ex.com/clean", "https://ex.com/mojibake", "https://ex.com/repaired",
     ]
-    indir = str(tmp_path / "ev_in")
-    spark.createDataFrame(rows, "user_id long, ts timestamp").coalesce(1).write.parquet(indir)
-
-    stream = spark.readStream.schema("user_id long, ts timestamp").parquet(indir)
-    out = str(tmp_path / "sess_out")
-    q = (
-        stream_sessionize(stream, gap_minutes=30, watermark="10 minutes")
-        .writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = (
-        spark.read.parquet(out)
-        .toPandas()
-        .sort_values(["user_id", "session_start"])
-        .reset_index(drop=True)
-    )
-    # u1 A and B close by in-batch gaps; u1's m(200) singleton closes
-    # via EVENT-TIME TIMEOUT (watermark = m(300)-10min passes
-    # m(200)+gap in the availableNow cleanup batch). u2's tail at
-    # m(300) stays open: its timeout m(330) is beyond the watermark.
-    assert got["user_id"].tolist() == [1, 1, 1, 2]
-    assert got["events_n"].tolist() == [3, 2, 1, 2]
-    spans = (
-        (got["session_end"] - got["session_start"]).dt.total_seconds() / 60
-    ).tolist()
-    assert spans == [10.0, 5.0, 0.0, 20.0]
-    assert got["session_start"].iloc[0] == pd.Timestamp(t0)
+    assert got["exact_dup"].tolist() == [False, False, True]
 
 
-def test_stream_sessionize_late_events_merge(spark, tmp_path):
-    """Cross-batch out-of-order arrivals (the case watermarks exist
-    for) MERGE into the open session instead of regressing it.
-
-    Old-bug scenario this pins down: batch 2 delivers m(95) while the
-    open session's last is m(100); an unconditional `last = t` would
-    regress last to 95, making batch 3's m(128) look like a >30-min
-    gap and emit a session with session_end < session_start. The merge
-    fold keeps (start=min, last=max), so 95 extends the session
-    backwards and 128 extends it forwards. A batch-3 straggler at
-    m(20) — more than the gap before the open start — emits as its own
-    session (documented divergence: its batch-twin neighbor closed in
-    batch 1 and append-mode output is immutable)."""
+def _write_noindex_mojibake_pages(spark, indir):
+    """One parquet file (one micro-batch), one warc_ts (so the stream's
+    first-seen survivor is the batch stage's min url): a noindex page,
+    a clean page, a cp1252-mojibake page and its repaired twin."""
     import datetime as dt
 
-    from pcornet_data_curation_spark.streaming.stateful import stream_sessionize
-
-    t0 = dt.datetime(2024, 1, 1, 12, 0, 0)
-
-    def m(minutes):
-        return t0 + dt.timedelta(minutes=minutes)
-
-    indir = str(tmp_path / "ev_in")
-    out = str(tmp_path / "sess_out")
-    ckpt = str(tmp_path / "ckpt")
-
-    def drain(batch_rows):
-        spark.createDataFrame(
-            [(1, m(x)) for x in batch_rows], "user_id long, ts timestamp"
-        ).coalesce(1).write.mode("append").parquet(indir)
-        stream = spark.readStream.schema("user_id long, ts timestamp").parquet(indir)
-        q = (
-            stream_sessionize(stream, gap_minutes=30, watermark="2 hours")
-            .writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-
-    drain([0, 10, 100])   # emits (0,10,2); open (100,100,1)
-    drain([95])           # late: merges -> open (95,100,2)
-    drain([20, 128, 300]) # 20 early-emits; 128 merges; 300 closes (95,128,3)
-
-    got = (
-        spark.read.parquet(out)
-        .toPandas()
-        .sort_values("session_start")
-        .reset_index(drop=True)
+    t = dt.datetime(2026, 1, 1, 12, 0, 0)
+    para = (
+        "The village council met in the old library on a cold evening "
+        "and agreed that the bridge over the river would be repaired "
+        "before the harvest festival, with the work paid for by the town."
     )
-    mins = lambda c: [(x - t0).total_seconds() / 60 for x in got[c]]
-    assert mins("session_start") == [0.0, 20.0, 95.0]
-    assert mins("session_end") == [10.0, 20.0, 128.0]
-    assert got["events_n"].tolist() == [2, 1, 3]
-    # invariant the old fold violated: end never precedes start
-    assert (got["session_end"] >= got["session_start"]).all()
-
-
-def test_stream_sessionize_late_chain_transitive_merge(spark, tmp_path):
-    """ADVICE r3 regression: a late run that CHAINS up to the open
-    session must merge transitively. Open session start=m(100),
-    gap=30; batch 2 delivers [55, 80]. The old per-event
-    classification saw 55 < 100-30 and stranded it as a spurious
-    early session BEFORE 80 merged and pulled start down — but
-    55–80–100 is one session (each hop ≤ gap), exactly what the
-    batch-sorted twin computes. The combined interval gap-merge must
-    produce a single (55, 100, 3) session and no early emission."""
-    import datetime as dt
-
-    from pcornet_data_curation_spark.streaming.stateful import stream_sessionize
-
-    t0 = dt.datetime(2024, 1, 1, 12, 0, 0)
-
-    def m(minutes):
-        return t0 + dt.timedelta(minutes=minutes)
-
-    indir = str(tmp_path / "ev_in")
-    out = str(tmp_path / "sess_out")
-    ckpt = str(tmp_path / "ckpt")
-
-    def drain(batch_rows):
-        spark.createDataFrame(
-            [(1, m(x)) for x in batch_rows], "user_id long, ts timestamp"
-        ).coalesce(1).write.mode("append").parquet(indir)
-        q = (
-            stream_sessionize(
-                spark.readStream.schema("user_id long, ts timestamp").parquet(indir),
-                gap_minutes=30,
-                watermark="2 hours",
-            )
-            .writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-
-    drain([100])      # open (100,100,1)
-    drain([55, 80])   # late chain: merges transitively -> open (55,100,3)
-    drain([200])      # >gap after 100: closes (55,100,3), opens (200)
-
-    got = (
-        spark.read.parquet(out)
-        .toPandas()
-        .sort_values("session_start")
-        .reset_index(drop=True)
+    accented = (
+        "At the café beside the harbour the naïve painter showed his "
+        "sketches of the façade to a crowd of visitors who had come "
+        "for the première of the new play at the theatre that week."
     )
-    mins = lambda c: [(x - t0).total_seconds() / 60 for x in got[c]]
-    assert mins("session_start") == [55.0]
-    assert mins("session_end") == [100.0]
-    assert got["events_n"].tolist() == [3]
+    broken = accented.encode("utf-8").decode("cp1252")
+    assert broken != accented
+
+    def page(body, robots=""):
+        paras = "".join(f"<p>{line}</p>" for line in body.split("\n"))
+        return f"<html><head>{robots}</head><body>{paras}</body></html>".encode()
+
+    clean = "\n".join([para] * 3)
+    twin = "\n".join([accented, para, accented])
+    moji = "\n".join([broken, para, broken])
+    hidden = "\n".join([para.replace("village", "county")] * 3)
+    rows = [
+        ("https://ex.com/noindex", t,
+         page(hidden, '<meta name="robots" content="noindex">'), hidden, "en"),
+        ("https://ex.com/clean", t, page(clean), clean, "en"),
+        ("https://ex.com/mojibake", t, page(twin), moji, "en"),
+        ("https://ex.com/repaired", t, page(twin), twin, "en"),
+    ]
+    ddl = "url string, warc_ts timestamp, html binary, text string, lang string"
+    spark.createDataFrame(rows, ddl).coalesce(1).write.parquet(indir)
 
 
 def test_stream_metrics_observed_per_batch(spark, tmp_path):
