@@ -99,6 +99,60 @@ def _add_run_args(p: argparse.ArgumentParser) -> None:
     )
 
 
+def _check(output: str) -> int:
+    """The `check` command: pyarrow and json only, no Spark session."""
+    import os
+    import time
+
+    import pyarrow.parquet as pq
+
+    from pcornet_data_curation_spark.operators.checks import (
+        DEFAULT_CHECKS,
+        evaluate_checks,
+    )
+    from pcornet_data_curation_spark.operators.drift import staleness_rows
+    from pcornet_data_curation_spark.operators.normalize import METRICS_SCHEMA
+    from pcornet_data_curation_spark.plans.checkpoint import Manifest
+
+    manifest_path = os.path.join(output, Manifest.FILENAME)
+    with open(manifest_path) as f:
+        manifest_data = json.load(f)
+    cols = METRICS_SCHEMA.names
+    stored = pq.read_table(os.path.join(output, "metrics"), columns=cols)
+    # replace the run-time staleness rows (age_sec ≈ 0 by
+    # construction: the run had just re-marked every report) with
+    # rows computed from the live manifest NOW — the only way the
+    # 7-day-old-store check can observe a left-behind store
+    metrics = [
+        tuple(r[c] for c in cols)
+        for r in stored.to_pylist()
+        if r["dc_name"] != "report_staleness"
+    ] + staleness_rows(manifest_data, time.time())
+    # one row per check, deterministically: a check firing for
+    # several categories (e.g. 12.02 per report) reports its WORST
+    # observed value
+    worst: dict[tuple, float] = {}
+    for r in evaluate_checks(metrics, DEFAULT_CHECKS):
+        if r[8]:
+            key = (r[0], r[2], r[9])
+            worst[key] = max(worst.get(key, r[7]), r[7])
+    fired = [
+        {"check_id": c, "description": d, "severity": s, "observed": o}
+        for (c, d, s), o in sorted(worst.items())
+    ]
+    print(
+        json.dumps(
+            {
+                "store": output,
+                "checks_evaluated": len(DEFAULT_CHECKS),
+                "exceptions_n": len(fired),
+                "exceptions": fired,
+            }
+        )
+    )
+    return 0
+
+
 def main(argv: list[str] | None = None) -> int:
     ap = argparse.ArgumentParser(prog="pcornet_data_curation_spark")
     sub = ap.add_subparsers(dest="cmd", required=True)
@@ -215,8 +269,9 @@ def main(argv: list[str] | None = None) -> int:
         "and a left-behind store never writes a new metrics row at all.",
     )
     k.add_argument("--output", required=True, help="existing run output root")
-    k.add_argument("--cores", type=int, default=None)
     args = ap.parse_args(argv)
+    if args.cmd == "check":
+        return _check(args.output)
 
     from pcornet_data_curation_spark.session import get_spark
 
@@ -284,37 +339,14 @@ def main(argv: list[str] | None = None) -> int:
             if args.against:
                 # incremental-crawl mode: the stream micro-batch core is
                 # batch-generic (batch in, store probe, store append)
-                import os as _os
-
                 from pcornet_data_curation_spark.streaming.neardup_stream import (
-                    SIGS_SUBDIR,
-                    _store_exists,
+                    next_batch_id,
                     stream_neardup_flag_batch,
                 )
 
                 bid = args.store_batch_id
                 if bid is None:
-                    # next free partition: a fixed default here would
-                    # clobber batch 0 and skip the store probe entirely
-                    from pyspark.sql import functions as F
-
-                    sigs = _os.path.join(args.against, SIGS_SUBDIR)
-                    if _store_exists(spark, sigs):
-                        # an all-empty seed batch commits a store dir
-                        # with no data files (schema inference raises)
-                        # or zero rows (max -> NULL) — both mean the
-                        # same thing: treat it like a fresh store
-                        try:
-                            mx = (
-                                spark.read.parquet(sigs)
-                                .agg(F.max("batch"))
-                                .first()[0]
-                            )
-                            bid = 0 if mx is None else mx + 1
-                        except Exception:
-                            bid = 0
-                    else:
-                        bid = 0
+                    bid = next_batch_id(spark, args.against)
                 out = stream_neardup_flag_batch(
                     df, bid, args.against,
                     text_col=args.text_col, id_col=args.id_col,
@@ -389,58 +421,6 @@ def main(argv: list[str] | None = None) -> int:
         unpersist_deps(out)
         n = spark.read.parquet(args.output).count()
         print(json.dumps({"op": args.op, "written": args.output, "rows": n}))
-        return 0
-
-    if args.cmd == "check":
-        import os
-        import time as _time
-
-        import pyarrow.parquet as pq
-
-        from pcornet_data_curation_spark.operators.checks import (
-            DEFAULT_CHECKS,
-            evaluate_checks,
-        )
-        from pcornet_data_curation_spark.operators.drift import staleness_rows
-        from pcornet_data_curation_spark.operators.normalize import METRICS_SCHEMA
-        from pcornet_data_curation_spark.plans.checkpoint import Manifest
-
-        manifest_path = os.path.join(args.output, Manifest.FILENAME)
-        with open(manifest_path) as f:
-            manifest_data = json.load(f)
-        cols = METRICS_SCHEMA.names
-        stored = pq.read_table(os.path.join(args.output, "metrics"), columns=cols)
-        # replace the run-time staleness rows (age_sec ≈ 0 by
-        # construction: the run had just re-marked every report) with
-        # rows computed from the live manifest NOW — the only way the
-        # 7-day-old-store check can observe a left-behind store
-        metrics = [
-            tuple(r[c] for c in cols)
-            for r in stored.to_pylist()
-            if r["dc_name"] != "report_staleness"
-        ] + staleness_rows(manifest_data, _time.time())
-        # one row per check, deterministically: a check firing for
-        # several categories (e.g. 12.02 per report) reports its WORST
-        # observed value
-        worst: dict[tuple, float] = {}
-        for r in evaluate_checks(metrics, DEFAULT_CHECKS):
-            if r[8]:
-                key = (r[0], r[2], r[9])
-                worst[key] = max(worst.get(key, r[7]), r[7])
-        fired = [
-            {"check_id": c, "description": d, "severity": s, "observed": o}
-            for (c, d, s), o in sorted(worst.items())
-        ]
-        print(
-            json.dumps(
-                {
-                    "store": args.output,
-                    "checks_evaluated": len(DEFAULT_CHECKS),
-                    "exceptions_n": len(fired),
-                    "exceptions": fired,
-                }
-            )
-        )
         return 0
 
     # run / resume share the same path: run_pipeline consults the

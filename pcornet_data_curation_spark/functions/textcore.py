@@ -34,7 +34,6 @@ import pandas as pd
 # ---------------------------------------------------------------------------
 
 WS_RE = re.compile(r"[ \t\n\r\f\x0b]+")
-LINE_RE = re.compile(r"\n")
 ALPHA_RE = re.compile(r"[A-Za-z]")
 BULLET_PREFIXES = ("-", "*", "•", "‣", "◦")
 ELLIPSIS_SUFFIXES = ("...", "…")

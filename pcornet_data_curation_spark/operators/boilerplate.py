@@ -189,37 +189,6 @@ def kept_lines_from_classes(lines: Column, cls: Column) -> Column:
     )
 
 
-def kept_lines_col(
-    lines: Column,
-    length_low: int = 70,
-    stopwords_high: float = 0.30,
-    stopwords_low: float = 0.15,
-) -> Column:
-    """Single-Column form of kept_lines_from_classes (inlines the
-    class computation 3x — use the DataFrame forms in hot paths)."""
-    return kept_lines_from_classes(
-        lines, classes_col(lines, length_low, stopwords_high, stopwords_low)
-    )
-
-
-def boilerplate_clean_col(
-    col: Column,
-    length_low: int = 70,
-    stopwords_high: float = 0.30,
-    stopwords_low: float = 0.15,
-) -> Column:
-    """Text with boilerplate lines removed — the single-Column form
-    (usable inside any projection, batch or streaming). NULL/empty
-    text yields ''. Inlines the class computation 3x; hot paths (the
-    pipeline stage) use with_boilerplate_removed instead."""
-    return F.array_join(
-        kept_lines_col(
-            trimmed_lines_col(col), length_low, stopwords_high, stopwords_low
-        ),
-        "\n",
-    )
-
-
 def with_boilerplate_removed(
     df: DataFrame,
     text_col: str = "text",
@@ -232,7 +201,7 @@ def with_boilerplate_removed(
     are staged as intermediate projected attributes so the per-line
     stopword transform runs exactly ONCE per row (CollapseProject's
     multi-reference guard refuses to inline a non-cheap alias
-    referenced more than once); the single-Column form pays it 3x.
+    referenced more than once); inlined, it would run 3x.
     Still map-only: projections add no exchange."""
     d = df.withColumn("_bp_lines", trimmed_lines_col(F.col(text_col)))
     d = d.withColumn(

@@ -4,8 +4,7 @@ Reference analog: edc_prep.sas (expected-output registry vs produced,
 :56-125) + edc_report.sas (threshold checks -> exception rows with
 severity, :865-944, 11280-11361). Checks are data: a registry of
 (check_id, dc_name, statistic, op, threshold, severity) evaluated on
-the driver over the (small) metrics rows; `run_checks` is the same
-evaluation behind a DataFrame interface.
+the driver over the (small) metrics rows.
 """
 
 from __future__ import annotations
@@ -13,10 +12,6 @@ from __future__ import annotations
 import math
 from collections import defaultdict
 from dataclasses import dataclass
-
-from pyspark.sql import DataFrame
-
-from pcornet_data_curation_spark.operators.normalize import METRICS_SCHEMA
 
 
 @dataclass(frozen=True)
@@ -138,17 +133,16 @@ def expected_reports_check(produced: list[str], expected: list[str]) -> list[tup
     return [(name, name in produced) for name in expected]
 
 
-def _breach(op: str, observed: float, threshold: float) -> bool:
-    """`observed <op> threshold` with Spark's ordering, where NaN is
+def _spark_order(x: float) -> tuple:
+    """Sort key of a double in Spark's ordering: NaN equals NaN and is
     larger than every other double."""
-    if math.isnan(observed):
-        return op in ("gt", "ge")
-    return {
-        "lt": observed < threshold,
-        "le": observed <= threshold,
-        "gt": observed > threshold,
-        "ge": observed >= threshold,
-    }.get(op, False)
+    return (True, 0.0) if math.isnan(x) else (False, x)
+
+
+def _breach(op: str, observed: float, threshold: float) -> bool:
+    """`observed <op> threshold` in Spark's ordering (`_spark_order`)."""
+    a, b = _spark_order(observed), _spark_order(threshold)
+    return {"lt": a < b, "le": a <= b, "gt": a > b, "ge": a >= b}.get(op, False)
 
 
 def evaluate_checks(
@@ -181,11 +175,3 @@ def evaluate_checks(
             exc = obs is not None and _breach(c.op, obs, float(c.threshold))
             out.append((*head, cat, *tail, obs, exc, c.severity))
     return sorted(out, key=lambda r: (r[0], r[4] is not None, r[4] or ""))
-
-
-def run_checks(metrics: DataFrame, checks: tuple[Check, ...] = DEFAULT_CHECKS) -> DataFrame:
-    """DataFrame form of `evaluate_checks` (the metrics table is small
-    by construction: it is collected to the driver)."""
-    rows = [tuple(r) for r in metrics.select(*METRICS_SCHEMA.names).collect()]
-    return metrics.sparkSession.createDataFrame(evaluate_checks(rows, checks), EXCEPTIONS_DDL)
-

@@ -20,7 +20,7 @@ Signatures come from one vectorized pandas-UDF pass (Arrow batches).
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
@@ -30,6 +30,18 @@ from pcornet_data_curation_spark.functions import hashing as H
 # ---------------------------------------------------------------------------
 # exact
 # ---------------------------------------------------------------------------
+
+
+def content_fp_col(text_col: str = "text") -> Column:
+    """Exact-dedup fingerprint: xxhash64 of the whitespace/case
+    normalized text, NULL text hashed as ''. The batch stage
+    (pipeline.with_exact_dup_flag) and the streaming one
+    (stateful.stream_dedup_flag) both key on it, so the two agree on
+    what a duplicate is."""
+    ws = "[ \\t\\n\\r\\f\\x0B]+"
+    return F.xxhash64(
+        F.lower(F.trim(F.regexp_replace(F.coalesce(F.col(text_col), F.lit("")), ws, " ")))
+    )
 
 
 def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -158,6 +170,64 @@ def with_minhash(
     return df.withColumn("minhash", _sig.asNondeterministic()(F.col(text_col)))
 
 
+def signature_rows(
+    df: DataFrame, text_col: str, id_col: str, num_perm: int, k: int, seed: int
+) -> DataFrame:
+    """(_id, minhash) rows of the docs that can be near-dup candidates.
+
+    Docs with NO word k-shingles (empty/short text) carry the all-MAX
+    sentinel signature — without this filter every such doc would band
+    with every other one at est_jaccard 1.0 and unrelated short docs
+    would collapse into one duplicate component. Real values are mod
+    MINHASH_P (< P), so element 0 == P detects the sentinel exactly;
+    shingle-less docs are simply never near-dup candidates."""
+    sigged = with_minhash(df, text_col, num_perm, k, seed).select(
+        F.col(id_col).alias("_id"), "minhash"
+    )
+    return sigged.where(F.col("minhash")[0] != F.lit(H.MINHASH_P))
+
+
+def band_rows(sigged: DataFrame, num_perm: int, bands: int) -> DataFrame:
+    """(_id, band, bhash) ids-only banding rows: each of `bands` slices
+    of num_perm/bands signature values hashed to one long.
+
+    The band join shuffles these 24-byte rows, NOT the num_perm-long
+    signature ×bands×2 sides (512 bytes riding the shuffle 32× per doc
+    in the old shape). Signatures rejoin once per SURVIVING candidate
+    pair, mirroring the set-size rejoin in ngram_jaccard_pairs below."""
+    rows_per_band = num_perm // bands
+    band_structs = F.array(
+        *[
+            F.struct(
+                F.lit(b).alias("band"),
+                F.xxhash64(
+                    F.concat_ws(
+                        ",",
+                        *[
+                            F.col("minhash")[b * rows_per_band + r].cast("string")
+                            for r in range(rows_per_band)
+                        ],
+                    )
+                ).alias("bhash"),
+            )
+            for b in range(bands)
+        ]
+    )
+    return sigged.select("_id", F.explode(band_structs).alias("bs")).select(
+        "_id", F.col("bs.band").alias("band"), F.col("bs.bhash").alias("bhash")
+    )
+
+
+def est_jaccard(a: str, b: str, num_perm: int) -> Column:
+    """Estimated jaccard of two signature columns: the fraction of
+    matching minhash values."""
+    return F.aggregate(
+        F.zip_with(a, b, lambda x, y: (x == y).cast("int")),
+        F.lit(0),
+        lambda acc, x: acc + x,
+    ) / F.lit(float(num_perm))
+
+
 def minhash_lsh_pairs(
     df: DataFrame,
     text_col: str = "text",
@@ -182,43 +252,8 @@ def minhash_lsh_pairs(
     (near_dedup_survivors does). At real scale you'd checkpoint/write
     the signature table out instead.
     """
-    rows_per_band = num_perm // bands
-    sigged = with_minhash(df, text_col, num_perm, k, seed).select(
-        F.col(id_col).alias("_id"), "minhash"
-    )
-    # docs with NO word k-shingles (empty/short text) carry the all-MAX
-    # sentinel signature — without this filter every such doc would
-    # band with every other one at est_jaccard 1.0 and unrelated short
-    # docs would collapse into one duplicate component. Real values are
-    # mod MINHASH_P (< P), so element 0 == P detects the sentinel
-    # exactly; shingle-less docs are simply never near-dup candidates.
-    sigged = sigged.where(F.col("minhash")[0] != F.lit(H.MINHASH_P))
-    sigged = sigged.persist()
-    band_structs = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.xxhash64(
-                    F.concat_ws(
-                        ",",
-                        *[
-                            F.col("minhash")[b * rows_per_band + r].cast("string")
-                            for r in range(rows_per_band)
-                        ],
-                    )
-                ).alias("bhash"),
-            )
-            for b in range(bands)
-        ]
-    )
-    # ids-only banding: the band self-join shuffles (band, bhash, _id)
-    # rows — 24 bytes each — NOT the num_perm-long signature ×bands×2
-    # sides (512 bytes riding the shuffle 32× per doc in the old shape).
-    # Signatures rejoin once per SURVIVING candidate pair, mirroring the
-    # set-size rejoin in ngram_jaccard_pairs below.
-    banded = sigged.select("_id", F.explode(band_structs).alias("bs")).select(
-        "_id", F.col("bs.band").alias("band"), F.col("bs.bhash").alias("bhash")
-    )
+    sigged = signature_rows(df, text_col, id_col, num_perm, k, seed).persist()
+    banded = band_rows(sigged, num_perm, bands)
     left = banded.alias("l")
     right = banded.alias("r")
     cand = (
@@ -242,13 +277,8 @@ def minhash_lsh_pairs(
             "id_b",
         )
     )
-    est = F.aggregate(
-        F.zip_with("sig_a", "sig_b", lambda a, b: (a == b).cast("int")),
-        F.lit(0),
-        lambda acc, x: acc + x,
-    ) / F.lit(float(len(range(num_perm))))
     out = (
-        cand.withColumn("est_jaccard", est)
+        cand.withColumn("est_jaccard", est_jaccard("sig_a", "sig_b", num_perm))
         .where(F.col("est_jaccard") >= threshold)
         .select("id_a", "id_b", F.round("est_jaccard", 4).alias("est_jaccard"))
     )

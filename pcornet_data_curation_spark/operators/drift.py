@@ -5,78 +5,72 @@ comparing the current refresh against the previous one
 :5644-5704 and the trend plots :9000+), recast as metric ROWS so the
 same data-driven check registry (operators.checks) evaluates them.
 
-All three emit rows in the normalized METRICS_SCHEMA shape and are
-appended to the run's metrics table (staleness as driver-side rows,
-drift and trend as DataFrames over the metrics tables):
+All three are plain functions over metric-row tuples (dc_name,
+variable, category, statistic, resultc, resultn) on the driver, the
+rows the run appends to its metrics table:
 
-* drift_metrics(now, prior)  — per shared (dc_name, variable,
-  category, statistic): `<stat>__absdelta` (|now-prior|, natural for
-  percentage stats) and `<stat>__relpct` (|now-prior|/max(|prior|,1)
-  ×100, natural for counts), under dc_name 'drift|<orig dc_name>'.
+* drift_rows(now, prior) — per shared (dc_name, variable, category,
+  statistic): `<stat>__absdelta` (|now-prior|, natural for percentage
+  stats) and `<stat>__relpct` (|now-prior|/max(|prior|,1) ×100,
+  natural for counts), under dc_name 'drift|<orig dc_name>'.
 * staleness_rows(manifest) — per report: stale flag (report written
   before the newest curated bucket — a resume that recomputed data but
   died before reporting) and age in seconds, under 'report_staleness'.
-* trend_metrics(checks, now, prior) — per registered threshold check:
+* trend_rows(checks, now, prior) — per registered threshold check:
   approaching=1 when the current observation sits within 20% of the
   threshold AND moved toward it since the prior run, under
   'threshold_trend' (category = check_id|metric category).
 
-Everything is a join/Column computation over the (tiny, already
-aggregated) metrics tables — no fact-table access, so cost is
-independent of corpus size.
+The inputs are the (already aggregated) metrics tables, a few hundred
+rows each, so cost is independent of corpus size. Values follow
+Spark's double semantics (NaN sorts above every other value), the
+semantics these rows had when they were Spark joins.
+`drift_metrics`/`trend_metrics` are the same functions behind a
+DataFrame interface.
 """
 
 from __future__ import annotations
 
+from collections import defaultdict
+
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
-from pcornet_data_curation_spark.operators.checks import Check
-from pcornet_data_curation_spark.operators.normalize import METRICS_DDL
+from pcornet_data_curation_spark.operators.checks import Check, _breach, _spark_order
+from pcornet_data_curation_spark.operators.normalize import (
+    METRICS_DDL,
+    METRICS_SCHEMA,
+    spark_double_str,
+)
 
-_KEYS = ["dc_name", "variable", "category", "statistic"]
+
+def _at_least_one(x: float) -> float:
+    """Spark's `greatest(x, 1.0)` (NaN is larger than every double)."""
+    return max(x, 1.0, key=_spark_order)
 
 
-def drift_metrics(now: DataFrame, prior: DataFrame) -> DataFrame:
-    """Distribution-shift rows: inner-join the two normalized metrics
-    tables on the full metric key and emit abs/relative deltas as new
-    metric rows (dc_name 'drift|<orig>'). Rows numeric on only one
-    side (schema drift) are skipped — the completeness family flags
-    missing reports separately."""
-    n = now.where(F.col("resultn").isNotNull()).select(
-        *_KEYS, F.col("resultn").alias("_now")
-    )
-    p = prior.where(F.col("resultn").isNotNull()).select(
-        *_KEYS, F.col("resultn").alias("_prior")
-    )
-    j = n.join(p, _KEYS)
-    absdelta = F.abs(F.col("_now") - F.col("_prior"))
-    relpct = absdelta / F.greatest(F.abs(F.col("_prior")), F.lit(1.0)) * 100.0
-    rows = j.select(
-        F.concat(F.lit("drift|"), F.col("dc_name")).alias("dc_name"),
-        "variable",
-        "category",
-        F.explode(
-            F.array(
-                F.struct(
-                    F.concat(F.col("statistic"), F.lit("__absdelta")).alias("statistic"),
-                    absdelta.alias("resultn"),
-                ),
-                F.struct(
-                    F.concat(F.col("statistic"), F.lit("__relpct")).alias("statistic"),
-                    relpct.alias("resultn"),
-                ),
-            )
-        ).alias("_s"),
-    )
-    return rows.select(
-        "dc_name",
-        "variable",
-        "category",
-        F.col("_s.statistic").alias("statistic"),
-        F.col("_s.resultn").cast("string").alias("resultc"),
-        F.col("_s.resultn").alias("resultn"),
-    )
+def drift_rows(now: list[tuple], prior: list[tuple]) -> list[tuple]:
+    """Distribution-shift rows: every (now, prior) pair of numeric rows
+    with the same (dc_name, variable, category, statistic) — an inner
+    join, so a NULL key never matches and duplicate keys multiply —
+    gives abs/relative deltas as new metric rows (dc_name
+    'drift|<orig>'). Rows numeric on only one side (schema drift) are
+    skipped — the completeness family flags missing reports
+    separately."""
+    by_key: dict[tuple, list[float]] = defaultdict(list)
+    for *key, _, p in prior:
+        if p is not None and None not in key:
+            by_key[tuple(key)].append(p)
+    out = []
+    for dc_name, variable, category, statistic, _, n in now:
+        if n is None:
+            continue
+        for p in by_key.get((dc_name, variable, category, statistic), []):
+            absdelta = abs(n - p)
+            relpct = absdelta / _at_least_one(abs(p)) * 100.0
+            for suffix, v in (("__absdelta", absdelta), ("__relpct", relpct)):
+                out.append((f"drift|{dc_name}", variable, category, statistic + suffix,
+                            spark_double_str(v), v))
+    return out
 
 
 def staleness_rows(manifest_data: dict, now_ts: float) -> list[tuple]:
@@ -98,9 +92,55 @@ def staleness_rows(manifest_data: dict, now_ts: float) -> list[tuple]:
     return [("report_staleness", "", name, stat, str(val), val) for name, stat, val in rows]
 
 
-def staleness_metrics(manifest_data: dict, now_ts: float, spark) -> DataFrame:
-    """DataFrame form of `staleness_rows`."""
-    return spark.createDataFrame(staleness_rows(manifest_data, now_ts), METRICS_DDL)
+def trend_rows(
+    checks: tuple[Check, ...],
+    now: list[tuple],
+    prior: list[tuple],
+    near_frac: float = 0.2,
+) -> list[tuple]:
+    """Threshold-crossing trend rows: for every registered check and
+    every numeric (now, prior) pair of its metric — now rows matched by
+    the check's (dc_name, statistic, optional category), prior rows by
+    (dc_name, statistic) and a null-safe category, `variable` ignored —
+    approaching=1 iff the current value is within `near_frac` of the
+    threshold (relative to max(|threshold|,1)) and moved TOWARD the
+    breach side since the prior run. Purely data-driven from the same
+    check registry evaluate_checks uses — adding a check automatically
+    adds its trend watch."""
+    now_by: dict[tuple, list[tuple]] = defaultdict(list)
+    for dc_name, _, category, statistic, _, n in now:
+        if n is not None:
+            now_by[(dc_name, statistic)].append((category, n))
+    prior_by: dict[tuple, list[float]] = defaultdict(list)
+    for dc_name, _, category, statistic, _, p in prior:
+        if p is not None:
+            prior_by[(dc_name, statistic, category)].append(p)
+    out = []
+    for c in checks:
+        t = float(c.threshold)
+        # the direction of a move toward breach: up for gt/ge, down for lt/le
+        toward_op = {"ge": "gt", "le": "lt"}.get(c.op, c.op)
+        for category, n in now_by.get((c.dc_name, c.statistic), []):
+            if c.category is not None and c.category != category:
+                continue
+            near = _breach("le", abs(n - t), near_frac * _at_least_one(abs(t)))
+            # a check already tripped is an exception, not a trend warning
+            breached = _breach(c.op, n, t)
+            cat = f"{c.check_id}|{'NULL' if category is None else category}"
+            for p in prior_by.get((c.dc_name, c.statistic, category), []):
+                v = 1.0 if near and _breach(toward_op, n, p) and not breached else 0.0
+                out.append(("threshold_trend", "", cat, "approaching", str(v), v))
+    return out
+
+
+def _rows(df: DataFrame) -> list[tuple]:
+    return [tuple(r) for r in df.select(*METRICS_SCHEMA.names).collect()]
+
+
+def drift_metrics(now: DataFrame, prior: DataFrame) -> DataFrame:
+    """DataFrame form of `drift_rows` (metrics tables are small by
+    construction: both are collected to the driver)."""
+    return now.sparkSession.createDataFrame(drift_rows(_rows(now), _rows(prior)), METRICS_DDL)
 
 
 def trend_metrics(
@@ -109,68 +149,6 @@ def trend_metrics(
     prior: DataFrame,
     near_frac: float = 0.2,
 ) -> DataFrame:
-    """Threshold-crossing trend rows: for every registered check whose
-    metric exists in BOTH runs, approaching=1 iff the current value is
-    within `near_frac` of the threshold (relative to max(|threshold|,1))
-    and moved TOWARD the breach side since the prior run. Purely
-    data-driven from the same check registry run_checks evaluates —
-    adding a check automatically adds its trend watch."""
-    spark = now.sparkSession
-    reg = spark.createDataFrame(
-        [
-            (c.check_id, c.dc_name, c.statistic, c.op, float(c.threshold), c.category)
-            for c in checks
-        ],
-        "check_id string, dc_name string, statistic string, op string, "
-        "threshold double, category string",
-    )
-    n = now.where(F.col("resultn").isNotNull()).select(
-        "dc_name", "statistic", F.col("category").alias("m_category"),
-        F.col("resultn").alias("_now"),
-    )
-    p = prior.where(F.col("resultn").isNotNull()).select(
-        F.col("dc_name").alias("p_dc"), F.col("statistic").alias("p_stat"),
-        F.col("category").alias("p_category"), F.col("resultn").alias("_prior"),
-    )
-    j = (
-        F.broadcast(reg)
-        .join(
-            n,
-            (reg.dc_name == n.dc_name)
-            & (reg.statistic == n.statistic)
-            & (F.col("category").isNull() | (F.col("category") == F.col("m_category"))),
-        )
-        .join(
-            p,
-            (reg.dc_name == F.col("p_dc"))
-            & (reg.statistic == F.col("p_stat"))
-            & (F.col("m_category").eqNullSafe(F.col("p_category"))),
-        )
-    )
-    near = F.abs(F.col("_now") - F.col("threshold")) <= (
-        F.lit(near_frac) * F.greatest(F.abs(F.col("threshold")), F.lit(1.0))
-    )
-    toward_breach = (
-        F.when(F.col("op").isin("gt", "ge"), F.col("_now") > F.col("_prior"))
-        .when(F.col("op").isin("lt", "le"), F.col("_now") < F.col("_prior"))
-        .otherwise(F.lit(False))
-    )
-    # a check already tripped is an exception, not a trend warning
-    breached = (
-        F.when(F.col("op") == "gt", F.col("_now") > F.col("threshold"))
-        .when(F.col("op") == "ge", F.col("_now") >= F.col("threshold"))
-        .when(F.col("op") == "lt", F.col("_now") < F.col("threshold"))
-        .when(F.col("op") == "le", F.col("_now") <= F.col("threshold"))
-        .otherwise(F.lit(False))
-    )
-    approaching = (near & toward_breach & ~breached).cast("double")
-    return j.select(
-        F.lit("threshold_trend").alias("dc_name"),
-        F.lit("").alias("variable"),
-        F.concat_ws(
-            "|", F.col("check_id"), F.coalesce(F.col("m_category"), F.lit("NULL"))
-        ).alias("category"),
-        F.lit("approaching").alias("statistic"),
-        approaching.cast("string").alias("resultc"),
-        approaching.alias("resultn"),
-    )
+    """DataFrame form of `trend_rows`."""
+    rows = trend_rows(checks, _rows(now), _rows(prior), near_frac)
+    return now.sparkSession.createDataFrame(rows, METRICS_DDL)

@@ -15,9 +15,6 @@ from pyspark.sql import functions as F
 from pcornet_data_curation_spark.functions.scrub import scrub_column
 from pcornet_data_curation_spark.operators import rules as R
 
-VERDICT_BASE_COLS = ["url", "warc_ts", "lang", "text"]
-
-
 def with_verdict(scored: DataFrame, overrides: dict | None = None) -> DataFrame:
     """scored (stats appended) → + flag_* booleans, keep boolean,
     scrubbed_text. All pure Column algebra + one JVM regex chain."""

@@ -44,6 +44,12 @@ from pyspark.sql import functions as F
 
 from pcornet_data_curation_spark.config import PipelineConfig
 from pcornet_data_curation_spark.operators import rules as R
+from pcornet_data_curation_spark.operators.dedup import (
+    connected_components,
+    content_fp_col,
+    minhash_lsh_pairs,
+    unpersist_deps,
+)
 from pcornet_data_curation_spark.operators.normalize import extraction_consistent_col
 from pcornet_data_curation_spark.operators.score import with_doc_stats
 from pcornet_data_curation_spark.operators.verdict import with_verdict
@@ -115,9 +121,7 @@ def with_exact_dup_flag(df: DataFrame) -> DataFrame:
     irreducible cost of GLOBAL exact dedup (any scheme must co-locate
     identical content once), and a skewed fp on the probe side is
     split by AQE skew-join handling."""
-    ws = "[ \\t\\n\\r\\f\\x0B]+"
-    fp = F.xxhash64(F.lower(F.trim(F.regexp_replace(F.coalesce(F.col("text"), F.lit("")), ws, " "))))
-    keyed = df.withColumn("_fp", fp)
+    keyed = df.withColumn("_fp", content_fp_col())
     survivors = keyed.groupBy("_fp").agg(F.min("url").alias("_surv_url"))
     # null-safe: a NULL-url copy of survivable content IS a duplicate
     # (min(url) skipped it), and a group of only NULL urls has no
@@ -151,12 +155,6 @@ def with_near_dup_flag(df: DataFrame, threshold: float = 0.8) -> DataFrame:
     computation — calling this triggers Spark jobs eagerly rather than
     extending the lazy plan (documented pipeline-stage cost, not a
     per-report cost)."""
-    from pcornet_data_curation_spark.operators.dedup import (
-        connected_components,
-        minhash_lsh_pairs,
-        unpersist_deps,
-    )
-
     pairs = minhash_lsh_pairs(
         df.select("url", "text"), text_col="text", id_col="url", threshold=threshold
     )
@@ -408,8 +406,6 @@ def run_pipeline(
         )
     finally:
         if url_flagged is not None:
-            from pcornet_data_curation_spark.operators.dedup import unpersist_deps
-
             unpersist_deps(url_flagged)
 
     stats = {

@@ -14,10 +14,11 @@ report (normalization.sas / edc_report.sas):
   buckets x categories, months, windows or top-N, never by hosts or
   urls.
 * downstream — on the driver, over a few hundred rows: the reports,
-  the metrics melt, staleness, checks, completeness and REPORT.md. Each
-  output is written once as a single parquet file (sources.tables.
-  write_small_table). Only drift/trend against a prior run
-  (`prior_run_root`) and the optional CSV export start Spark jobs.
+  the metrics melt, staleness, drift/trend against a prior run
+  (`prior_run_root`, read with pyarrow), checks, completeness and
+  REPORT.md. Each output is written once as a single parquet file
+  (sources.tables.write_small_table). Only the optional CSV export
+  starts Spark jobs after the passes.
 
 Every report keeps the schema and values it had when each was its own
 Spark plan: sums are NULL when all their inputs are (Spark `sum`),
@@ -30,6 +31,7 @@ from __future__ import annotations
 import os
 import time
 
+import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -44,13 +46,8 @@ from pcornet_data_curation_spark.operators.checks import (
     evaluate_checks,
     expected_reports_check,
 )
-from pcornet_data_curation_spark.operators.drift import (
-    drift_metrics,
-    staleness_rows,
-    trend_metrics,
-)
+from pcornet_data_curation_spark.operators.drift import drift_rows, staleness_rows, trend_rows
 from pcornet_data_curation_spark.operators.normalize import (
-    METRICS_DDL,
     METRICS_SCHEMA,
     arrow_schema,
     melt_report,
@@ -149,8 +146,8 @@ REPORTS: dict[str, tuple[str, list[str]]] = {
 _DERIVED = ("threshold_trend", "report_staleness")
 
 
-def _first_order(dc_name: str) -> bool:
-    return not dc_name.startswith("drift|") and dc_name not in _DERIVED
+def _first_order(dc_name: str | None) -> bool:
+    return dc_name is not None and not dc_name.startswith("drift|") and dc_name not in _DERIVED
 
 
 # -- merging per-bucket partials with Spark's aggregate semantics --------
@@ -340,21 +337,19 @@ def build_reports(
     return out
 
 
-def _drift_rows(spark: SparkSession, prior_root: str, now: list[tuple]) -> list[tuple]:
+def _drift_rows(prior_root: str, now: list[tuple]) -> list[tuple]:
     """drift|* and threshold_trend rows against a prior run's metrics
     (first-order rows on both sides); none on a first refresh."""
+    path = os.path.join(prior_root, "metrics")
     try:
-        prior = spark.read.parquet(os.path.join(prior_root, "metrics"))
-    except Exception:
+        table = pq.read_table(path, columns=METRICS_SCHEMA.names)
+    except FileNotFoundError:
         return []  # first refresh: drift/trend report n/a
-    prior = prior.where(
-        ~F.col("dc_name").startswith("drift|") & ~F.col("dc_name").isin(*_DERIVED)
-    )
-    now_df = spark.createDataFrame([r for r in now if _first_order(r[0])], METRICS_DDL)
-    rows = drift_metrics(now_df, prior).unionByName(
-        trend_metrics(DEFAULT_CHECKS, now_df, prior)
-    )
-    return [tuple(r) for r in rows.collect()]
+    except (OSError, pa.ArrowException) as e:
+        raise ValueError(f"prior run metrics {path} cannot be read ({e})") from e
+    prior = [tuple(r.values()) for r in table.to_pylist() if _first_order(r["dc_name"])]
+    now = [r for r in now if _first_order(r[0])]
+    return drift_rows(now, prior) + trend_rows(DEFAULT_CHECKS, now, prior)
 
 
 def run_report_tail(
@@ -441,7 +436,7 @@ def run_report_tail(
         # cross-run families compare FIRST-ORDER metrics only (a prior
         # run's own drift/trend/staleness rows are excluded on both sides)
         with tracker.stage("drift_metrics"):
-            metrics += _drift_rows(spark, cfg.prior_run_root, metrics)
+            metrics += _drift_rows(cfg.prior_run_root, metrics)
     metrics_path = os.path.join(out, "metrics")
     with tracker.stage("normalize_write"):
         write_small_table(rows_table(metrics, METRICS_SCHEMA), metrics_path)

@@ -11,10 +11,10 @@ each micro-batch's surviving signatures append to a durable store the
 next batch probes.
 
 Design (per micro-batch, inside foreachBatch):
-1. signatures: the batch's MinHash signatures (operators/dedup.
-   with_minhash — same permutations/seed as the batch operator, so a
-   stream-flagged corpus agrees with a batch re-run) minus the
-   shingle-less sentinel docs;
+1. signatures: the batch's MinHash signatures minus the shingle-less
+   sentinel docs (operators/dedup.signature_rows, band_rows and
+   est_jaccard — the batch operator's own kernels, so a stream-flagged
+   corpus agrees with a batch re-run);
 2. within-batch candidates: ids-only band self-join (the batch
    operator's exact shape at micro-batch size), signature-verified at
    `threshold`; the min id of each verified pair survives;
@@ -43,11 +43,11 @@ from __future__ import annotations
 
 import os
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from pcornet_data_curation_spark.functions import hashing as H
-from pcornet_data_curation_spark.operators.dedup import with_minhash
+from pcornet_data_curation_spark.operators.dedup import band_rows, est_jaccard, signature_rows
 
 BANDS_SUBDIR = "bands"
 SIGS_SUBDIR = "sigs"
@@ -67,38 +67,21 @@ def _store_exists(spark: SparkSession, path: str) -> bool:
     return bool(fs.exists(hp))
 
 
-def _band_rows(sigged: DataFrame, num_perm: int, bands: int) -> DataFrame:
-    """(_id, band, bhash) ids-only banding rows — the batch operator's
-    shuffle shape (operators/dedup.minhash_lsh_pairs)."""
-    rows_per_band = num_perm // bands
-    band_structs = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.xxhash64(
-                    F.concat_ws(
-                        ",",
-                        *[
-                            F.col("minhash")[b * rows_per_band + r].cast("string")
-                            for r in range(rows_per_band)
-                        ],
-                    )
-                ).alias("bhash"),
-            )
-            for b in range(bands)
-        ]
-    )
-    return sigged.select("_id", F.explode(band_structs).alias("bs")).select(
-        "_id", F.col("bs.band").alias("band"), F.col("bs.bhash").alias("bhash")
-    )
-
-
-def _est_jaccard(a: str, b: str, num_perm: int):
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: (x == y).cast("int")),
-        F.lit(0),
-        lambda acc, x: acc + x,
-    ) / F.lit(float(num_perm))
+def next_batch_id(spark: SparkSession, store_path: str) -> int:
+    """The store partition a new batch should write: max(stored batch)
+    + 1, or 0 for a new store. A fixed default would overwrite an
+    existing batch partition and skip its signatures in the probe."""
+    sigs = os.path.join(store_path, SIGS_SUBDIR)
+    if not _store_exists(spark, sigs):
+        return 0
+    # an all-empty seed batch commits a store dir with no data files
+    # (schema inference raises) or zero rows (max -> NULL) — both mean
+    # the same thing: treat it like a fresh store
+    try:
+        mx = spark.read.parquet(sigs).agg(F.max("batch")).first()[0]
+    except AnalysisException:
+        return 0
+    return 0 if mx is None else mx + 1
 
 
 def stream_neardup_flag_batch(
@@ -135,13 +118,8 @@ def stream_neardup_flag_batch(
     own store partition (idempotent).
     """
     spark = batch_df.sparkSession
-    sigged = (
-        with_minhash(batch_df, text_col, num_perm, k, seed)
-        .select(F.col(id_col).alias("_id"), "minhash")
-        .where(F.col("minhash")[0] != F.lit(H.MINHASH_P))
-        .persist()
-    )
-    banded = _band_rows(sigged, num_perm, bands)
+    sigged = signature_rows(batch_df, text_col, id_col, num_perm, k, seed).persist()
+    banded = band_rows(sigged, num_perm, bands)
 
     # -- within-batch: verified pairs, min id survives --
     l, r = banded.alias("l"), banded.alias("r")
@@ -156,7 +134,7 @@ def stream_neardup_flag_batch(
         .dropDuplicates(["id_a", "id_b"])
         .join(sigged.select(F.col("_id").alias("id_a"), F.col("minhash").alias("sa")), "id_a")
         .join(sigged.select(F.col("_id").alias("id_b"), F.col("minhash").alias("sb")), "id_b")
-        .where(_est_jaccard("sa", "sb", num_perm) >= threshold)
+        .where(est_jaccard("sa", "sb", num_perm) >= threshold)
         .select(F.col("id_b").alias("_id"))
     )
 
@@ -193,7 +171,7 @@ def stream_neardup_flag_batch(
                 store_sigs.select(F.col("_id").alias("_sid"), F.col("minhash").alias("sb")),
                 "_sid",
             )
-            .where(_est_jaccard("sa", "sb", num_perm) >= threshold)
+            .where(est_jaccard("sa", "sb", num_perm) >= threshold)
             .select("_id")
         )
         flagged_ids = intra.unionByName(cross)
@@ -209,7 +187,7 @@ def stream_neardup_flag_batch(
         .parquet(sigs_dir)
     )
     (
-        _band_rows(survivors, num_perm, bands)
+        band_rows(survivors, num_perm, bands)
         .withColumn("batch", F.lit(int(batch_id)))
         .write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")

@@ -11,8 +11,9 @@ from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+from pcornet_data_curation_spark.operators.dedup import content_fp_col
 
 DEDUP_STATE_DDL = "seen boolean"
 
@@ -45,11 +46,7 @@ def stream_dedup_flag(pages_stream: DataFrame) -> DataFrame:
     """
     from pyspark.sql.types import BooleanType, StructField, StructType
 
-    ws = "[ \\t\\n\\r\\f\\x0B]+"
-    fp = F.xxhash64(
-        F.lower(F.trim(F.regexp_replace(F.coalesce(F.col("text"), F.lit("")), ws, " ")))
-    )
-    keyed = pages_stream.withColumn("_fp", fp)
+    keyed = pages_stream.withColumn("_fp", content_fp_col())
     cols = [f.name for f in pages_stream.schema.fields]
     out_schema = StructType(
         list(pages_stream.schema.fields) + [StructField("exact_dup", BooleanType(), False)]

@@ -127,7 +127,7 @@ def test_cli_corpus_ops(spark, tmp_path, capsys):
     assert "shard_id" in pk.columns and (pk["shard_id"] >= 0).all()
 
 
-def test_cli_check_standalone_fires_age_on_left_behind_store(spark, tmp_path, capsys):
+def test_cli_check_standalone_fires_age_on_left_behind_store(spark, tmp_path, capsys, monkeypatch):
     """Standalone `check` over an existing store: staleness is
     recomputed from the LIVE manifest at invocation time, so a store
     whose reports were written >7 days ago fires 12.02 — the scenario
@@ -143,7 +143,12 @@ def test_cli_check_standalone_fires_age_on_left_behind_store(spark, tmp_path, ca
                  "--cores", "8"]) == 0
     capsys.readouterr()
 
-    assert main(["check", "--output", out, "--cores", "8"]) == 0
+    # `check` reads the store with json and pyarrow only: no Spark session
+    def no_spark(*a, **k):
+        raise AssertionError("check must not start a Spark session")
+
+    monkeypatch.setattr("pcornet_data_curation_spark.session.get_spark", no_spark)
+    assert main(["check", "--output", out]) == 0
     fresh = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert fresh["checks_evaluated"] >= 54
     assert not any(e["check_id"].startswith("12.") for e in fresh["exceptions"])
@@ -158,7 +163,7 @@ def test_cli_check_standalone_fires_age_on_left_behind_store(spark, tmp_path, ca
     with open(mp, "w") as f:
         json.dump(m, f)
 
-    assert main(["check", "--output", out, "--cores", "8"]) == 0
+    assert main(["check", "--output", out]) == 0
     aged = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     fired = {e["check_id"] for e in aged["exceptions"]}
     assert "12.02" in fired

@@ -189,13 +189,16 @@ def test_run_report_markdown(spark, tmp_path):
     assert "spark_version" in md
 
 
-def test_checks_trip_per_family(spark):
+def test_checks_trip_per_family():
     """Every check family has at least one deliberately-tripped
-    exception: a hand-built metrics frame encodes one pathological
-    value per family and run_checks must flag exactly those."""
+    exception: hand-built metric rows encode one pathological value
+    per family and evaluate_checks must flag exactly those."""
+    import pandas as pd
+
     from pcornet_data_curation_spark.operators.checks import (
         DEFAULT_CHECKS,
-        run_checks,
+        EXCEPTIONS_DDL,
+        evaluate_checks,
     )
 
     families = {c.family for c in DEFAULT_CHECKS}
@@ -234,12 +237,8 @@ def test_checks_trip_per_family(spark):
         ("drift|scrub_summary", "", "", "scrub_pct__absdelta", "1.0", 1.0),
         ("report_staleness", "", "verdict_summary", "stale", "0.0", 0.0),
     ]
-    metrics = spark.createDataFrame(
-        rows,
-        "dc_name string, variable string, category string, statistic string, "
-        "resultc string, resultn double",
-    )
-    out = run_checks(metrics).toPandas()
+    cols = [c.split()[0] for c in EXCEPTIONS_DDL.split(",")]
+    out = pd.DataFrame(evaluate_checks(rows), columns=cols)
     tripped = set(out.loc[out["exception"], "check_id"])
     assert tripped == {
         "1.01", "2.01", "3.01", "4.01", "4.02", "5.01", "5.02",
@@ -254,16 +253,19 @@ def test_checks_trip_per_family(spark):
     assert absent["observed"].isna().all() and not absent["exception"].any()
 
 
-def test_staleness_metrics_unit(spark):
+def test_staleness_metrics_unit():
     """A report written before the newest curated bucket is stale (the
     resume-died-mid-report scenario); fresher ones are not."""
-    from pcornet_data_curation_spark.operators.drift import staleness_metrics
+    import pandas as pd
+
+    from pcornet_data_curation_spark.operators.drift import staleness_rows
+    from pcornet_data_curation_spark.operators.normalize import METRICS_SCHEMA
 
     md = {
         "buckets": {"0": {"finished_at": 100.0}, "1": {"finished_at": 120.0}},
         "reports": {"a": {"finished_at": 50.0}, "b": {"finished_at": 150.0}},
     }
-    rows = staleness_metrics(md, 200.0, spark).toPandas()
+    rows = pd.DataFrame(staleness_rows(md, 200.0), columns=METRICS_SCHEMA.names)
     stale = dict(
         zip(rows[rows.statistic == "stale"].category, rows[rows.statistic == "stale"].resultn)
     )
@@ -583,7 +585,7 @@ def test_url_blocklist_prefilter_stage(spark, tmp_path):
     ).toPandas()
     assert int(ufs["records"].iloc[0]) == 200
     assert int(ufs["dropped_n"].iloc[0]) == covered
-    # the drop-rate checks FIRE (run_checks always emits a row per
+    # the drop-rate checks FIRE (evaluate_checks always emits a row per
     # registry check, so membership alone would be vacuous)
     exc = spark.read.parquet(res["exceptions"]).toPandas()
     fired = set(exc.loc[exc["exception"], "check_id"])

@@ -1,6 +1,7 @@
 """Driver-side pieces of the reporting tail: Spark-exact value
 formatting and rounding, the host pass against the registry
-domain_dist, check evaluation semantics, and manifest errors."""
+domain_dist, check evaluation semantics, cross-run drift and trend
+rows, and manifest and prior-metrics errors."""
 
 import json
 import math
@@ -8,13 +9,20 @@ import os
 
 import pytest
 
-from pcornet_data_curation_spark.operators.checks import evaluate_checks, run_checks
+from pcornet_data_curation_spark.operators.checks import DEFAULT_CHECKS, Check, evaluate_checks
+from pcornet_data_curation_spark.operators.drift import (
+    drift_metrics,
+    drift_rows,
+    trend_metrics,
+    trend_rows,
+)
 from pcornet_data_curation_spark.operators.normalize import (
     METRICS_DDL,
     spark_double_str,
     spark_round,
 )
 from pcornet_data_curation_spark.plans.checkpoint import Manifest
+from pcornet_data_curation_spark.plans.report_tail import _drift_rows
 
 VALUES = [
     0.0, -0.0, 1.0, -1.5, 12.5, 60.4, 33.33333333333333, 1e-3, 9.99e-4, 1e-4, 1.5e-7,
@@ -61,7 +69,7 @@ def test_domain_tables_match_registry_domain_dist(spark):
         assert summary["hosts_n"] == 18 and summary["null_host_n"] == 5
 
 
-def test_evaluate_checks_semantics_and_adapter(spark):
+def test_evaluate_checks_semantics_and_adapter():
     nan = float("nan")
     metrics = [
         ("ppl_stats", "", "", "mean", "NaN", nan),  # NaN sorts above all: 8.03 fires
@@ -79,9 +87,156 @@ def test_evaluate_checks_semantics_and_adapter(spark):
                        None, "records", 1.0, None, False, "red")]
     ids = [(r[0], r[4] is not None, r[4] or "") for r in rows]
     assert ids == sorted(ids)
-    via_spark = run_checks(spark.createDataFrame(metrics, METRICS_DDL)).collect()
-    assert [tuple(r) for r in via_spark if r["check_id"] != "8.03"] == \
-        [r for r in rows if r[0] != "8.03"]
+
+
+# Cross-run drift and trend. The pair covers non-zero deltas, a
+# |prior| < 1 denominator, duplicate keys on both sides, NULL resultn,
+# a NULL category (never a drift key, null-safe for trend), differing
+# `variable` (trend ignores it), NaN and infinity on either side, a
+# category-filtered check, checks that are approaching, already
+# breached or of an unknown op. DRIFT and TREND are the rows Spark's
+# inner-join plans emitted for this pair, sorted.
+NAN, INF = float("nan"), float("inf")
+# (dc_name, variable, category, statistic, resultc, resultn)
+NOW = [
+    ("verdict_summary", "", "", "keep_pct", "95.0", 95.0),
+    ("verdict_summary", "", "", "records", "1500", 1500.0),
+    ("verdict_summary", "", "", "kept", "3", 3.0),
+    ("lang_dist", "", "en", "record_pct", "0.9", 0.9),
+    ("lang_dist", "", "de", "record_pct", "0.5", 0.5),
+    ("ppl_stats", "", "", "mean", "NaN", NAN),
+    ("ppl_stats", "", "", "p95", "500.0", 500.0),
+    ("ppl_stats", "", "", "max", "Infinity", INF),
+    ("rule_summary", "", "0|min_len", "fail_pct", "10.0", 10.0),
+    ("rule_summary", "", "0|min_len", "fail_pct", "12.0", 12.0),
+    ("referential_summary", "", "", "kept_mean_tokens", "-3.0", -3.0),
+    ("tokens_by_keep", "", None, "mean", "25.0", 25.0),
+    ("warc_minmax", "v1", "warc_ts", "n", "40", 40.0),
+    ("run_metadata", "", "spark_version", "meta_value", "4.1.2", None),
+    ("verdict_summary", "", "", "only_now", "1.0", 1.0),
+    ("scrub_summary", "", "", "scrub_pct", None, None),
+    ("tokens_by_keep", "", "true", "mean", "33.0", 33.0),
+    ("url_unique", "", "", "url_n", "100", 100.0),
+]
+PRIOR = [
+    ("verdict_summary", "", "", "keep_pct", "90.0", 90.0),
+    ("verdict_summary", "", "", "records", "500", 500.0),
+    ("verdict_summary", "", "", "kept", "0.5", 0.5),
+    ("lang_dist", "", "en", "record_pct", "1.2", 1.2),
+    ("lang_dist", "", "de", "record_pct", "0.4", 0.4),
+    ("ppl_stats", "", "", "mean", "250.0", 250.0),
+    ("ppl_stats", "", "", "p95", "NaN", NAN),
+    ("ppl_stats", "", "", "max", "Infinity", INF),
+    ("rule_summary", "", "0|min_len", "fail_pct", "8.0", 8.0),
+    ("rule_summary", "", "0|min_len", "fail_pct", "9.0", 9.0),
+    ("referential_summary", "", "", "kept_mean_tokens", "-0.5", -0.5),
+    ("tokens_by_keep", "", None, "mean", "28.0", 28.0),
+    ("warc_minmax", "v2", "warc_ts", "n", "30", 30.0),
+    ("run_metadata", "", "spark_version", "meta_value", "4.1.2", None),
+    ("verdict_summary", "", "", "only_prior", "1.0", 1.0),
+    ("scrub_summary", "", "", "scrub_pct", "3.0", 3.0),
+    ("tokens_by_keep", "", "true", "mean", "NaN", NAN),
+    ("url_unique", "", "", "url_n", "100", 100.0),
+]
+CHECKS = (
+    Check("t.01", "keep rate high", "verdict_summary", "keep_pct", "gt", 99.5),
+    Check("t.02", "keep rate low", "verdict_summary", "keep_pct", "lt", 10.0),
+    Check("t.03", "english share low", "lang_dist", "record_pct", "le", 1.0, category="en"),
+    Check("t.04", "perplexity high", "ppl_stats", "mean", "ge", 300.0),
+    Check("t.05", "rule fail rate", "rule_summary", "fail_pct", "gt", 12.0),
+    Check("t.06", "short kept docs", "tokens_by_keep", "mean", "lt", 30.0),
+    Check("t.07", "timestamps", "warc_minmax", "n", "lt", 45.0, category="warc_ts"),
+    Check("t.08", "unknown op", "verdict_summary", "records", "eq", 1500.0),
+    Check("t.09", "scrub", "scrub_summary", "scrub_pct", "gt", 1.0),
+    Check("t.10", "kept docs short", "tokens_by_keep", "mean", "lt", 30.0, category="true"),
+    Check("t.11", "url count", "url_unique", "url_n", "gt", 110.0),
+)
+
+DRIFT = [
+    ("drift|lang_dist", "", "de", "record_pct__absdelta", "0.09999999999999998", 0.09999999999999998),
+    ("drift|lang_dist", "", "de", "record_pct__relpct", "9.999999999999998", 9.999999999999998),
+    ("drift|lang_dist", "", "en", "record_pct__absdelta", "0.29999999999999993", 0.29999999999999993),
+    ("drift|lang_dist", "", "en", "record_pct__relpct", "24.999999999999993", 24.999999999999993),
+    ("drift|ppl_stats", "", "", "max__absdelta", "NaN", NAN),
+    ("drift|ppl_stats", "", "", "max__relpct", "NaN", NAN),
+    ("drift|ppl_stats", "", "", "mean__absdelta", "NaN", NAN),
+    ("drift|ppl_stats", "", "", "mean__relpct", "NaN", NAN),
+    ("drift|ppl_stats", "", "", "p95__absdelta", "NaN", NAN),
+    ("drift|ppl_stats", "", "", "p95__relpct", "NaN", NAN),
+    ("drift|referential_summary", "", "", "kept_mean_tokens__absdelta", "2.5", 2.5),
+    ("drift|referential_summary", "", "", "kept_mean_tokens__relpct", "250.0", 250.0),
+    ("drift|rule_summary", "", "0|min_len", "fail_pct__absdelta", "1.0", 1.0),
+    ("drift|rule_summary", "", "0|min_len", "fail_pct__absdelta", "2.0", 2.0),
+    ("drift|rule_summary", "", "0|min_len", "fail_pct__absdelta", "3.0", 3.0),
+    ("drift|rule_summary", "", "0|min_len", "fail_pct__absdelta", "4.0", 4.0),
+    ("drift|rule_summary", "", "0|min_len", "fail_pct__relpct", "11.11111111111111", 11.11111111111111),
+    ("drift|rule_summary", "", "0|min_len", "fail_pct__relpct", "25.0", 25.0),
+    ("drift|rule_summary", "", "0|min_len", "fail_pct__relpct", "33.33333333333333", 33.33333333333333),
+    ("drift|rule_summary", "", "0|min_len", "fail_pct__relpct", "50.0", 50.0),
+    ("drift|tokens_by_keep", "", "true", "mean__absdelta", "NaN", NAN),
+    ("drift|tokens_by_keep", "", "true", "mean__relpct", "NaN", NAN),
+    ("drift|url_unique", "", "", "url_n__absdelta", "0.0", 0.0),
+    ("drift|url_unique", "", "", "url_n__relpct", "0.0", 0.0),
+    ("drift|verdict_summary", "", "", "keep_pct__absdelta", "5.0", 5.0),
+    ("drift|verdict_summary", "", "", "keep_pct__relpct", "5.555555555555555", 5.555555555555555),
+    ("drift|verdict_summary", "", "", "kept__absdelta", "2.5", 2.5),
+    ("drift|verdict_summary", "", "", "kept__relpct", "250.0", 250.0),
+    ("drift|verdict_summary", "", "", "records__absdelta", "1000.0", 1000.0),
+    ("drift|verdict_summary", "", "", "records__relpct", "200.0", 200.0),
+]
+TREND = [
+    ("threshold_trend", "", "t.01|", "approaching", "1.0", 1.0),
+    ("threshold_trend", "", "t.02|", "approaching", "0.0", 0.0),
+    ("threshold_trend", "", "t.03|en", "approaching", "0.0", 0.0),
+    ("threshold_trend", "", "t.04|", "approaching", "0.0", 0.0),
+    ("threshold_trend", "", "t.05|0|min_len", "approaching", "1.0", 1.0),
+    ("threshold_trend", "", "t.05|0|min_len", "approaching", "1.0", 1.0),
+    ("threshold_trend", "", "t.05|0|min_len", "approaching", "1.0", 1.0),
+    ("threshold_trend", "", "t.05|0|min_len", "approaching", "1.0", 1.0),
+    ("threshold_trend", "", "t.06|NULL", "approaching", "0.0", 0.0),
+    ("threshold_trend", "", "t.06|true", "approaching", "1.0", 1.0),
+    ("threshold_trend", "", "t.07|warc_ts", "approaching", "0.0", 0.0),
+    ("threshold_trend", "", "t.08|", "approaching", "0.0", 0.0),
+    ("threshold_trend", "", "t.10|true", "approaching", "1.0", 1.0),
+    ("threshold_trend", "", "t.11|", "approaching", "0.0", 0.0),
+]
+
+
+def _canon(rows) -> list[tuple]:
+    """Rows sorted, NaN made comparable."""
+    rows = [tuple("NaN" if isinstance(v, float) and math.isnan(v) else v for v in r) for r in rows]
+    return sorted(rows, key=lambda r: [(v is None, str(v)) for v in r])
+
+
+def test_drift_and_trend_rows_match_spark_join():
+    assert _canon(drift_rows(NOW, PRIOR)) == _canon(DRIFT)
+    assert _canon(trend_rows(CHECKS, NOW, PRIOR)) == _canon(TREND)
+
+
+def test_drift_and_trend_dataframe_adapters(spark):
+    now = spark.createDataFrame(NOW, METRICS_DDL)
+    prior = spark.createDataFrame(PRIOR, METRICS_DDL)
+    for df, want in ((drift_metrics(now, prior), DRIFT), (trend_metrics(CHECKS, now, prior), TREND)):
+        assert df.schema == spark.createDataFrame([], METRICS_DDL).schema
+        assert _canon(tuple(r) for r in df.collect()) == _canon(want)
+
+
+def test_prior_metrics_missing_is_first_refresh_corrupt_raises(tmp_path):
+    import pyarrow.parquet as pq
+
+    from pcornet_data_curation_spark.operators.normalize import METRICS_SCHEMA, rows_table
+
+    assert _drift_rows(str(tmp_path / "no_such_run"), NOW) == []
+    path = tmp_path / "prior" / "metrics"
+    path.mkdir(parents=True)
+    pq.write_table(rows_table(PRIOR, METRICS_SCHEMA), str(path / "part-00000.parquet"))
+    assert _canon(_drift_rows(str(tmp_path / "prior"), NOW)) == \
+        _canon(drift_rows(NOW, PRIOR) + trend_rows(DEFAULT_CHECKS, NOW, PRIOR))
+    data = (path / "part-00000.parquet").read_bytes()
+    (path / "part-00000.parquet").write_bytes(data[: len(data) // 2])  # a write cut off
+    with pytest.raises(ValueError, match="cannot be read") as e:
+        _drift_rows(str(tmp_path / "prior"), NOW)
+    assert str(path) in str(e.value)
 
 
 def test_manifest_corrupt_json_raises_value_error(tmp_path):
