@@ -12,6 +12,17 @@ on POSIX). Data writes are idempotent per bucket because the curated
 table is partitioned by bucket and written with dynamic partition
 overwrite — a re-run of an unfinished bucket replaces only that
 bucket's directory.
+
+Marks: a bucket is marked done by the reporting tail right after its
+bucket pass (plans/report_tail.py), with that pass's `rows`/`kept` for
+the bucket — the one place a bucket is counted. A run killed between
+the curated write and that mark leaves the bucket pending, and the
+resume rewrites it.
+
+Store format: a new manifest records FORMAT; a manifest with any other
+(or no) format is refused, as an n_buckets mismatch is, so every store
+this code reads has the curated schema it writes (two-valued
+`exact_dup` included).
 """
 
 from __future__ import annotations
@@ -20,6 +31,10 @@ import json
 import os
 import time
 
+# curated-store format this code writes and reads; manifests written
+# before the format was recorded (no "format" key) count as format 1
+FORMAT = 2
+
 
 class Manifest:
     FILENAME = "_manifest.json"
@@ -27,7 +42,15 @@ class Manifest:
     def __init__(self, root: str, n_buckets: int, data: dict | None = None):
         self.root = root
         self.path = os.path.join(root, self.FILENAME)
-        self.data = data or {"n_buckets": n_buckets, "buckets": {}, "reports": {}}
+        self.data = data or {
+            "format": FORMAT, "n_buckets": n_buckets, "buckets": {}, "reports": {}
+        }
+        if self.data.get("format") != FORMAT:
+            raise ValueError(
+                f"checkpoint manifest {self.path} has store format "
+                f"{self.data.get('format')}, this code reads format {FORMAT} — "
+                "start a fresh output_root"
+            )
         if self.data.get("n_buckets") != n_buckets:
             raise ValueError(
                 f"manifest n_buckets={self.data.get('n_buckets')} != config n_buckets={n_buckets}; "

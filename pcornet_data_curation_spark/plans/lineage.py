@@ -44,7 +44,6 @@ class LineageRow:
 @dataclass
 class LineageTracker:
     rows: list[LineageRow] = field(default_factory=list)
-    _t0: float = field(default_factory=time.time)
 
     @contextmanager
     def stage(self, name: str, partition_id: int | None = None, rows_in: int | None = None):
@@ -64,9 +63,6 @@ class LineageTracker:
                 name, partition_id, start, end, end - start, rows_in, holder["rows_out"], "ok"
             )
         )
-
-    def cumulative_sec(self) -> float:
-        return time.time() - self._t0
 
     def to_records(self) -> list[dict]:
         return [

@@ -21,6 +21,13 @@ as a single parquet file — mirroring the reference's split between the
 query run (data_curation_tables.sas) and the downstream normalization +
 EDC report (normalization.sas / edc_report.sas).
 
+Checkpoint (plans/checkpoint.py): the `curate` stage's only action is
+the curated write; the tail's bucket pass counts each bucket this run
+wrote and marks it done in the manifest before the other passes run,
+so a run killed in between leaves those buckets pending for the resume
+to rewrite. The manifest's store-format guard means `curated` always
+has the schema `finish_curation` writes, and is read once per run.
+
 Scale design (100 TB / 10^12 docs):
 * the fact table is touched exactly once per run; the report passes
   read only the narrow curated columns (column pruning + bucket
@@ -50,6 +57,7 @@ from pcornet_data_curation_spark.operators.dedup import (
     minhash_lsh_pairs,
     unpersist_deps,
 )
+from pcornet_data_curation_spark.operators.drift import staleness_rows
 from pcornet_data_curation_spark.operators.normalize import extraction_consistent_col
 from pcornet_data_curation_spark.operators.score import with_doc_stats
 from pcornet_data_curation_spark.operators.verdict import with_verdict
@@ -305,17 +313,12 @@ def run_pipeline(
         )
     curated_path = os.path.join(out, "curated")
     manifest = Manifest.load_or_init(out, cfg.n_buckets)
-    # staleness is evaluated against the store AS THIS RUN FOUND IT: a
-    # prior run that curated buckets but died before re-reporting left
-    # reports older than data, and that is only observable BEFORE this
-    # run rewrites and re-marks every report (evaluating the live
-    # manifest after reporting would read stale=0 unconditionally —
-    # dead instrumentation)
-    import copy as _copy
-    import time as _time
-
-    pre_run_manifest = _copy.deepcopy(manifest.data)
-    pre_run_ts = _time.time()
+    # `stale` (reports older than curated data: a prior run recurated
+    # buckets and died before re-reporting) is evaluated against the
+    # store AS THIS RUN FOUND IT — this run re-marks every report, so
+    # the live manifest would read stale=0 unconditionally. `stale`
+    # does not depend on the clock, hence the 0.0.
+    stale_rows = [r for r in staleness_rows(manifest.data, 0.0) if r[3] == "stale"]
 
     # URL-level pre-filter (opt-in): reject by url BEFORE any payload
     # is decoded — the RefinedWeb/C4 stage order. The flagged frame is
@@ -345,7 +348,7 @@ def run_pipeline(
             pending = [b for b in pending if b in limit_buckets]
 
         if pending:
-            with tracker.stage("curate", rows_in=None) as h:
+            with tracker.stage("curate"):
                 df = curate(pages, cfg)
                 if len(pending) < cfg.n_buckets:
                     df = df.where(F.col("bucket").isin(pending))
@@ -355,61 +358,21 @@ def run_pipeline(
                     .partitionBy("bucket")
                     .parquet(curated_path)
                 )
-                # per-bucket completion stats: one tiny agg over what we wrote
-                done = (
-                    spark.read.parquet(curated_path)
-                    .where(F.col("bucket").isin(pending))
-                    .groupBy("bucket")
-                    .agg(F.count(F.lit(1)).alias("rows"), F.sum(F.col("keep").cast("long")).alias("kept"))
-                    .collect()
-                )
-                written = {int(r["bucket"]): (int(r["rows"]), int(r["kept"])) for r in done}
-                h["rows_out"] = sum(r for r, _ in written.values())
-                for b in pending:
-                    rows, kept = written.get(b, (0, 0))
-                    manifest.mark_done(b, rows, kept)
-                manifest.save()
 
-        # ---- reporting over completed buckets (plans/report_tail.py) ----
-        done_buckets = manifest.done_buckets()
-        cur = spark.read.parquet(curated_path).where(F.col("bucket").isin(done_buckets))
-        # store-version guard: a store fully curated before the dedup stage
-        # landed has no exact_dup column, and a resume/re-report over it
-        # (all buckets done → curate never rewrites) would otherwise raise
-        # AnalysisException at the first exact_dup reference. A MIXED store
-        # (legacy buckets + buckets this code wrote) needs per-file schema
-        # merging — the default read takes ONE file footer's schema, so
-        # whichever vintage wins would either mask real flags to false or
-        # silently null legacy rows. mergeSchema is paid only when the
-        # default read looks legacy (rare, footer-bounded); legacy rows'
-        # NULL flags coalesce to measured-false either way.
-        legacy_no_dedup = "exact_dup" not in cur.columns
-        if legacy_no_dedup:
-            merged = spark.read.option("mergeSchema", "true").parquet(curated_path).where(
-                F.col("bucket").isin(done_buckets)
-            )
-            if "exact_dup" in merged.columns:  # mixed store: real flags exist
-                cur = merged.withColumn(
-                    "exact_dup", F.coalesce(F.col("exact_dup"), F.lit(False))
-                )
-                legacy_no_dedup = False
-            else:
-                cur = cur.withColumn("exact_dup", F.lit(False))
-        else:
-            cur = cur.withColumn(
-                "exact_dup", F.coalesce(F.col("exact_dup"), F.lit(False))
-            )
-
+        # ---- reporting over done + just-written buckets; the tail
+        # marks the pending ones done (plans/report_tail.py) ----
+        cur = spark.read.parquet(curated_path).where(
+            F.col("bucket").isin(sorted(manifest.done_buckets() + pending))
+        )
         paths = run_report_tail(
-            spark, cur, cfg, manifest, tracker, url_flagged, legacy_no_dedup,
-            pre_run_manifest, pre_run_ts,
+            spark, cur, cfg, manifest, tracker, url_flagged, pending, stale_rows
         )
     finally:
         if url_flagged is not None:
             unpersist_deps(url_flagged)
 
     stats = {
-        "buckets_done": len(done_buckets),
+        "buckets_done": len(manifest.done_buckets()),
         "buckets_processed_now": len(pending),
         "rows": sum(v["rows"] for v in manifest.data["buckets"].values()),
         "kept": sum(v["kept"] for v in manifest.data["buckets"].values()),

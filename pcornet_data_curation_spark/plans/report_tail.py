@@ -13,6 +13,10 @@ report (normalization.sas / edc_report.sas):
   counts when it ran). Every frame brought to the driver is bounded by
   buckets x categories, months, windows or top-N, never by hosts or
   urls.
+* marks — the bucket pass's dim 'all' rows are also each bucket's
+  manifest mark (rows, kept): the buckets this run wrote are marked
+  done right after that pass, so a bucket is counted once and is done
+  only once it has been counted.
 * downstream — on the driver, over a few hundred rows: the reports,
   the metrics melt, staleness, drift/trend against a prior run
   (`prior_run_root`, read with pyarrow), checks, completeness and
@@ -206,7 +210,6 @@ def build_reports(
     flag_cols: list[str],
     windows: list[tuple],
     spark_version: str,
-    legacy_no_dedup: bool,
 ) -> dict[str, list[tuple]]:
     """Every report's rows from the passes' outputs, in write order."""
     dims: dict[str, list[dict]] = {}
@@ -323,10 +326,11 @@ def build_reports(
 
     # content-duplicate profile (dedup stage mode recorded so the reader
     # knows whether dup_n was measured or the stage was off)
-    mode = "n/a" if legacy_no_dedup else cfg.dedup
-    method = cfg.dedup_method if mode not in ("off", "n/a") else "n/a"
+    method = cfg.dedup_method if cfg.dedup != "off" else "n/a"
     dup_n = _sum(every, "dup_n")
-    out["dedup_summary"] = [(mode, method, records, dup_n, rp.floor_pct(dup_n, records, 4))]
+    out["dedup_summary"] = [
+        (cfg.dedup, method, records, dup_n, rp.floor_pct(dup_n, records, 4))
+    ]
 
     if url_counts is not None:
         n, dropped = url_counts["records"], url_counts["dropped_n"]
@@ -359,12 +363,19 @@ def run_report_tail(
     manifest: Manifest,
     tracker: LineageTracker,
     url_flagged: DataFrame | None,
-    legacy_no_dedup: bool,
-    pre_run_manifest: dict,
-    pre_run_ts: float,
+    pending: list[int],
+    stale_rows: list[tuple],
 ) -> dict[str, str]:
-    """Report over the completed buckets in `cur` and write every
-    output under cfg.output_root. Returns the output paths."""
+    """Report over the buckets in `cur` and write every output under
+    cfg.output_root. Returns the output paths.
+
+    `cur` holds the done buckets plus the `pending` ones this run just
+    wrote. Right after the bucket pass, each pending bucket is marked
+    done in `manifest` with its `rows`/`kept` from that pass (dim
+    'all'; a bucket with no rows gets (0, 0)), before any other pass:
+    the pass is the only place a bucket is counted. `stale_rows` are
+    the report_staleness `stale` rows of the manifest as the run
+    loaded it."""
     out = cfg.output_root
     flag_cols = [R.flag_name(r) for r in R.active_rules(cfg.rule_overrides)]
     # run-date-parameterized trailing windows (reference %dash: 1-5 yr
@@ -385,6 +396,10 @@ def run_report_tail(
         by_bucket = rp.bucket_pass(
             rep, flag_cols, LANG_VALUESET, cfg.run_date, windows, url_valid, lang_valid
         )
+    counted = {r["bucket"]: (r["n"], r["kept"]) for r in by_bucket if r["dim"] == "all"}
+    for b in pending:
+        manifest.mark_done(b, *counted.get(b, (0, 0)))
+    manifest.save()
     with tracker.stage("report_global_pass"):
         distincts = rp.global_pass(rep, lang_valid)
     with tracker.stage("report_host_pass"):
@@ -401,7 +416,7 @@ def run_report_tail(
     with tracker.stage("report_build"):
         rows = build_reports(
             by_bucket, distincts, hosts, pcts, cross_bucket_n, url_counts, cfg,
-            flag_cols, windows, spark.version, legacy_no_dedup,
+            flag_cols, windows, spark.version,
         )
         tables = {
             name: rows_table(r, arrow_schema(REPORTS[name][0])) for name, r in rows.items()
@@ -425,12 +440,12 @@ def run_report_tail(
         ]
         # staleness has TWO questions with different frames of reference:
         # `stale` (reports older than curated data — the died-mid-report
-        # inconsistency) is only observable on the PRE-RUN manifest,
-        # because this run repairs it; `age_sec` (check 12.02) is ≈ 0
-        # here by construction — the meaningful evaluation is the
-        # standalone `check` command, which recomputes staleness from
-        # the live manifest over an existing store.
-        metrics += [r for r in staleness_rows(pre_run_manifest, pre_run_ts) if r[3] == "stale"]
+        # inconsistency) is only observable on the manifest as the run
+        # loaded it, because this run repairs it; `age_sec` (check
+        # 12.02) is ≈ 0 here by construction — the meaningful
+        # evaluation is the standalone `check` command, which recomputes
+        # staleness from the live manifest over an existing store.
+        metrics += stale_rows
         metrics += [r for r in staleness_rows(manifest.data, time.time()) if r[3] == "age_sec"]
     if cfg.prior_run_root:
         # cross-run families compare FIRST-ORDER metrics only (a prior

@@ -14,7 +14,6 @@ from pyspark.sql import SparkSession
 def get_spark(
     app_name: str = "pcornet_data_curation_spark",
     cores: int | None = None,
-    shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or fetch) a SparkSession with the engine's standard config.
@@ -22,20 +21,27 @@ def get_spark(
     AQE on (runtime re-plan + skew-join splitting for long-tail domains),
     Arrow on (vectorized pandas UDF transfer), UTC session timezone so
     date/timestamp semantics are reproducible across hosts.
+
+    Sized to the host unless told otherwise: cores default to the CPUs
+    this process may run on, driver memory to half of physical memory
+    (at most 16g). SPARK_GRAFT_CPUS and SPARK_DRIVER_MEM override these.
     """
-    cores = cores or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    shuffle_partitions = shuffle_partitions or max(cores, 8)
+    cores = (
+        cores or int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or len(os.sched_getaffinity(0))
+    )
+    phys_mb = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE") // 2**20
+    driver_mem = os.environ.get("SPARK_DRIVER_MEM", f"{min(16 * 1024, phys_mb // 2)}m")
     builder = (
         SparkSession.builder.master(f"local[{cores}]")
         .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        .config("spark.sql.shuffle.partitions", str(max(cores, 8)))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", driver_mem)
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(32 * 1024 * 1024))

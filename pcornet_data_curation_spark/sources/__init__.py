@@ -1,7 +1,5 @@
 from pcornet_data_curation_spark.sources.tables import (  # noqa: F401
-    datastore_kind,
     export_csv,
     open_table,
-    write_bucketed_table,
     write_table,
 )

@@ -2,7 +2,6 @@
 
 Reference analogs:
 * libname attach + per-table scan           data_curation_base.sas:31-36
-* memtype DATA/VIEW detection → datastore   data_curation_tables.sas:111-112, 364-366
 * dataset sink per query result             data_curation_base.sas:186-189
 * CSV export sink (&_csv=YES)               data_curation_print.sas:121-150
 
@@ -60,26 +59,6 @@ def write_table(
     w.parquet(ref)
 
 
-def write_bucketed_table(
-    df: DataFrame,
-    name: str,
-    bucket_cols: list[str],
-    n_buckets: int,
-    sort_cols: list[str] | None = None,
-    mode: str = "overwrite",
-) -> None:
-    """Persist a catalog table bucketed (and optionally sorted) by the
-    join key — the reference's 'sort once, reuse for N merge queries'
-    optimization (proc sort reuse, data_curation_tables.sas:1420-1432):
-    two tables bucketed the same way equi-join WITHOUT a shuffle
-    (plan-asserted in tests). At 100 TB this turns every repeated
-    url/patid-keyed join into a zipped scan."""
-    w = df.write.mode(mode).bucketBy(n_buckets, *bucket_cols)
-    if sort_cols:
-        w = w.sortBy(*sort_cols)
-    w.saveAsTable(name)
-
-
 def export_csv(df: DataFrame, path: str, single_file: bool = True) -> None:
     """CSV export sink (reference &_csv=YES optional export,
     data_curation_print.sas:121-150). single_file coalesces — only for
@@ -119,14 +98,3 @@ def append_small_table(table: pa.Table, path: str) -> None:
     pq.write_table(table, tmp)
     os.replace(tmp, os.path.join(path, name))
 
-
-def datastore_kind(spark: SparkSession, refs: list[str]) -> str:
-    """'PARQUET' / 'CATALOG' / 'MIX' — the reference's datastore
-    SAS/RDBMS/MIX report (data_curation_tables.sas:364-366)."""
-    kinds = {
-        "CATALOG" if (r.startswith("iceberg:") or r.startswith("table:")) else "PARQUET"
-        for r in refs
-    }
-    if len(kinds) > 1:
-        return "MIX"
-    return next(iter(kinds)) if kinds else "PARQUET"

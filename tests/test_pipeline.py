@@ -63,14 +63,25 @@ def test_pipeline_end_to_end(spark, outdir):
     assert (lin["status"] == "ok").all() and len(lin) >= 9
 
 
-def test_resume_skips_done_and_matches_cold_run(spark, outdir):
+@pytest.fixture(scope="module")
+def gold_run(spark, tmp_path_factory):
+    """An uninterrupted 4-bucket run: its sorted curated rows and its
+    manifest's per-bucket (rows, kept)."""
+    out = str(tmp_path_factory.mktemp("gold") / "out")
+    cfg = PipelineConfig(output_root=out, n_buckets=4)
+    run_pipeline(spark, pages_df(spark, N, partitions=4), cfg)
+    return _read_sorted(spark, os.path.join(out, "curated")), _bucket_marks(out)
+
+
+def _bucket_marks(out):
+    m = Manifest.load_or_init(out, 4)
+    return {b: (v["rows"], v["kept"]) for b, v in m.data["buckets"].items()}
+
+
+def test_resume_skips_done_and_matches_cold_run(spark, outdir, gold_run):
     pages = pages_df(spark, N, partitions=4)
     cfg = PipelineConfig(output_root=outdir, n_buckets=4)
-
-    # cold full run → golden
-    gold_dir = outdir + "_gold"
-    run_pipeline(spark, pages, PipelineConfig(output_root=gold_dir, n_buckets=4))
-    gold = _read_sorted(spark, os.path.join(gold_dir, "curated"))
+    gold, gold_marks = gold_run
 
     # killed run: only buckets 0,1 completed
     run_pipeline(spark, pages, cfg, limit_buckets=[0, 1])
@@ -90,13 +101,51 @@ def test_resume_skips_done_and_matches_cold_run(spark, outdir):
 
     resumed = _read_sorted(spark, os.path.join(outdir, "curated"))
     assert resumed.equals(gold)
+    assert _bucket_marks(outdir) == gold_marks
+
+
+def test_report_pass_failure_leaves_buckets_pending(spark, outdir, gold_run, monkeypatch):
+    """Buckets are marked done from the report tail's bucket pass: a run
+    that dies in that pass, after its curated write, marks nothing, and
+    the resume rewrites every bucket to the uninterrupted run's store."""
+    from pcornet_data_curation_spark.operators import reports
+
+    pages = pages_df(spark, N, partitions=4)
+    cfg = PipelineConfig(output_root=outdir, n_buckets=4)
+    gold, gold_marks = gold_run
+
+    def killed(*args, **kwargs):
+        raise RuntimeError("bucket pass killed")
+
+    monkeypatch.setattr(reports, "bucket_pass", killed)
+    with pytest.raises(RuntimeError, match="bucket pass killed"):
+        run_pipeline(spark, pages, cfg)
+    assert Manifest.load_or_init(outdir, 4).done_buckets() == []
+
+    monkeypatch.undo()
+    res = run_pipeline(spark, pages, cfg)
+    assert res["stats"]["buckets_processed_now"] == 4
+    assert _read_sorted(spark, os.path.join(outdir, "curated")).equals(gold)
+    assert _bucket_marks(outdir) == gold_marks
 
 
 def test_manifest_bucket_mismatch_rejected(spark, outdir):
+    import json
+
     cfg = PipelineConfig(output_root=outdir, n_buckets=4)
     run_pipeline(spark, pages_df(spark, 100, partitions=2), cfg, limit_buckets=[0])
     with pytest.raises(ValueError, match="n_buckets"):
         Manifest.load_or_init(outdir, 8)
+    # a store written before the manifest recorded its format is refused
+    path = os.path.join(outdir, Manifest.FILENAME)
+    with open(path) as f:
+        md = json.load(f)
+    del md["format"]
+    with open(path, "w") as f:
+        json.dump(md, f)
+    with pytest.raises(ValueError) as e:
+        Manifest.load_or_init(outdir, 4)
+    assert path in str(e.value)
 
 
 def test_lookback_filter(spark, outdir):
@@ -471,74 +520,6 @@ def test_staleness_check_fires_on_resume_after_died_mid_report(spark, tmp_path):
     m3 = spark.read.parquet(res3["metrics"]).toPandas()
     stale3 = m3[(m3.dc_name == "report_staleness") & (m3.statistic == "stale")]
     assert (stale3.resultn == 0.0).all()
-
-
-def test_resume_over_legacy_store_without_exact_dup(spark, tmp_path):
-    """Store-version guard (ADVICE r3): a store fully curated before
-    the dedup stage existed has no exact_dup column; a re-report over
-    it (all buckets done, curate never rewrites) must not raise — the
-    dedup_summary reports mode 'n/a' with dup_n measured as 0."""
-    import shutil
-
-    out = str(tmp_path / "o")
-    pages = pages_df(spark, 200, partitions=2)
-    run_pipeline(spark, pages, PipelineConfig(output_root=out, n_buckets=4))
-
-    # simulate the pre-dedup store: strip exact_dup from the curated
-    # parquet (write aside, then swap directories)
-    cur_path = os.path.join(out, "curated")
-    legacy = spark.read.parquet(cur_path).drop("exact_dup")
-    tmp_cur = str(tmp_path / "curated_legacy")
-    legacy.write.partitionBy("bucket").parquet(tmp_cur)
-    shutil.rmtree(cur_path)
-    shutil.move(tmp_cur, cur_path)
-
-    res = run_pipeline(spark, pages, PipelineConfig(output_root=out, n_buckets=4))
-    assert res["stats"]["buckets_processed_now"] == 0  # pure re-report
-    ds = spark.read.parquet(os.path.join(out, "reports", "dedup_summary")).toPandas()
-    assert ds["mode"].tolist() == ["n/a"] and ds["method"].tolist() == ["n/a"]
-    assert ds["dup_n"].tolist() == [0]
-
-
-def test_reporting_over_mixed_vintage_store_merges_schema(spark, tmp_path):
-    """MIXED store (some buckets written before the dedup stage
-    existed, some after): the re-report must schema-merge, keep the
-    REAL flags on the new-vintage buckets, and coalesce legacy rows'
-    NULL flags to measured-false — not mask everything to mode 'n/a'."""
-    import shutil
-
-    out = str(tmp_path / "o")
-    # duplicate content so dedup actually flags rows
-    pages = pages_df(spark, 200, partitions=2)
-    dup = pages.withColumn("url", F.concat(F.col("url"), F.lit("?copy=1")))
-    both = pages.unionByName(dup)
-    cfg = PipelineConfig(output_root=out, n_buckets=4, dedup="flag")
-    run_pipeline(spark, both, cfg)
-    cur_path = os.path.join(out, "curated")
-    flagged_before = (
-        spark.read.parquet(cur_path).where("exact_dup").count()
-    )
-    assert flagged_before > 0
-
-    # legacy-ize HALF the store: strip exact_dup from buckets 0 and 1
-    for b in (0, 1):
-        bdir = os.path.join(cur_path, f"bucket={b}")
-        legacy = spark.read.parquet(bdir).drop("exact_dup")
-        tmp_b = str(tmp_path / f"legacy_{b}")
-        legacy.coalesce(1).write.parquet(tmp_b)
-        shutil.rmtree(bdir)
-        shutil.move(tmp_b, bdir)
-
-    res = run_pipeline(spark, both, cfg)
-    assert res["stats"]["buckets_processed_now"] == 0  # pure re-report
-    ds = spark.read.parquet(os.path.join(out, "reports", "dedup_summary")).toPandas()
-    assert ds["mode"].tolist() == ["flag"]  # NOT masked to n/a
-    # new-vintage buckets' real flags survived the merge
-    kept_flags = (
-        spark.read.option("mergeSchema", "true").parquet(cur_path)
-        .where("bucket >= 2 and exact_dup").count()
-    )
-    assert int(ds["dup_n"].iloc[0]) == kept_flags > 0
 
 
 def test_url_blocklist_prefilter_stage(spark, tmp_path):

@@ -3,7 +3,6 @@ import os
 from pyspark.sql import functions as F
 
 from pcornet_data_curation_spark.sources import (
-    datastore_kind,
     export_csv,
     open_table,
     write_table,
@@ -36,28 +35,3 @@ def test_export_csv(spark, tmp_path):
     files = [f for f in os.listdir(p) if f.endswith(".csv")]
     assert len(files) == 1
 
-
-def test_datastore_kind(spark):
-    assert datastore_kind(spark, ["/a/b", "/c/d"]) == "PARQUET"
-    assert datastore_kind(spark, ["table:x"]) == "CATALOG"
-    assert datastore_kind(spark, ["/a/b", "iceberg:x.y"]) == "MIX"
-
-
-def test_bucketed_join_has_no_exchange(spark):
-    from pcornet_data_curation_spark.sources import write_bucketed_table
-
-    a = spark.range(1000).withColumn("v", F.col("id") * 2)
-    b = spark.range(1000).withColumn("w", F.col("id") * 3)
-    write_bucketed_table(a, "bkt_a", ["id"], 4, sort_cols=["id"])
-    write_bucketed_table(b, "bkt_b", ["id"], 4, sort_cols=["id"])
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        joined = spark.table("bkt_a").join(spark.table("bkt_b"), "id")
-        plan = joined._jdf.queryExecution().executedPlan().toString()
-        # co-bucketed tables join without any shuffle
-        assert "Exchange" not in plan
-        assert joined.count() == 1000
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", str(32 * 1024 * 1024))
-        spark.sql("DROP TABLE IF EXISTS bkt_a")
-        spark.sql("DROP TABLE IF EXISTS bkt_b")
