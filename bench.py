@@ -3,7 +3,8 @@
 Default run: executes the headline query suite at $SPARK_GRAFT_SF_DIR
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] plus the
 flagship curation-pipeline throughput (pages → score → rules → verdict
-→ scrub), and prints ONE JSON line:
+→ scrub), and prints ONE JSON line (SPARK_GRAFT_CPUS defaults to the
+CPUs this process may run on):
 
     {"metric": "...", "value": N, "unit": "sec",
      "queries": {...}, "sf": ..., "curation_docs_per_sec": ...}
@@ -177,8 +178,7 @@ def run_reports(n_docs: int) -> int:
     from pcornet_data_curation_spark.plans.pipeline import run_pipeline
     from pcornet_data_curation_spark.session import get_spark
 
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    spark = get_spark(app_name="bench-reports", cores=cpus)
+    spark = get_spark(app_name="bench-reports")
     pages_path = prepare_pages(spark, n_docs)
     pages = spark.read.parquet(pages_path)
     root = "/tmp/spark_graft_bench_reports"
@@ -242,7 +242,7 @@ def main() -> int:
     from pcornet_data_curation_spark.session import get_spark
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or len(os.sched_getaffinity(0))
     sf = sf_dir.rstrip("/").split("sf")[-1]
     load_start = os.getloadavg()
     spark = get_spark(app_name="bench", cores=cpus)

@@ -100,7 +100,9 @@ def _add_run_args(p: argparse.ArgumentParser) -> None:
 
 
 def _check(output: str) -> int:
-    """The `check` command: pyarrow and json only, no Spark session."""
+    """The `check` command: pyarrow and json only, no Spark session. The
+    manifest is read as `run` reads it, so a store of another format or
+    a corrupt manifest raises a ValueError naming the file."""
     import os
     import time
 
@@ -114,9 +116,7 @@ def _check(output: str) -> int:
     from pcornet_data_curation_spark.operators.normalize import METRICS_SCHEMA
     from pcornet_data_curation_spark.plans.checkpoint import Manifest
 
-    manifest_path = os.path.join(output, Manifest.FILENAME)
-    with open(manifest_path) as f:
-        manifest_data = json.load(f)
+    manifest = Manifest.load(output)
     cols = METRICS_SCHEMA.names
     stored = pq.read_table(os.path.join(output, "metrics"), columns=cols)
     # replace the run-time staleness rows (age_sec ≈ 0 by
@@ -127,7 +127,7 @@ def _check(output: str) -> int:
         tuple(r[c] for c in cols)
         for r in stored.to_pylist()
         if r["dc_name"] != "report_staleness"
-    ] + staleness_rows(manifest_data, time.time())
+    ] + staleness_rows(manifest.data, time.time())
     # one row per check, deterministically: a check firing for
     # several categories (e.g. 12.02 per report) reports its WORST
     # observed value

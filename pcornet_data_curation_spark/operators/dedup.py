@@ -228,6 +228,42 @@ def est_jaccard(a: str, b: str, num_perm: int) -> Column:
     ) / F.lit(float(num_perm))
 
 
+def verified_band_pairs(
+    sigged: DataFrame, banded: DataFrame, num_perm: int, threshold: float
+) -> DataFrame:
+    """Near-duplicate pairs among `sigged`'s docs, with columns id_a,
+    id_b, sig_a, sig_b and est_jaccard: the ids-only band self-join of
+    `banded` (= `band_rows(sigged, ...)`, id_a < id_b), distinct pairs,
+    both signatures rejoined from `sigged` (so callers persist it),
+    est_jaccard ≥ threshold. `minhash_lsh_pairs` and the streaming
+    near-dedup's within-batch pairs both use it."""
+    left = banded.alias("l")
+    right = banded.alias("r")
+    return (
+        left.join(
+            right,
+            (F.col("l.band") == F.col("r.band"))
+            & (F.col("l.bhash") == F.col("r.bhash"))
+            & (F.col("l._id") < F.col("r._id")),
+        )
+        .select(
+            F.col("l._id").alias("id_a"),
+            F.col("r._id").alias("id_b"),
+        )
+        .dropDuplicates(["id_a", "id_b"])
+        .join(
+            sigged.select(F.col("_id").alias("id_a"), F.col("minhash").alias("sig_a")),
+            "id_a",
+        )
+        .join(
+            sigged.select(F.col("_id").alias("id_b"), F.col("minhash").alias("sig_b")),
+            "id_b",
+        )
+        .withColumn("est_jaccard", est_jaccard("sig_a", "sig_b", num_perm))
+        .where(F.col("est_jaccard") >= threshold)
+    )
+
+
 def minhash_lsh_pairs(
     df: DataFrame,
     text_col: str = "text",
@@ -253,35 +289,8 @@ def minhash_lsh_pairs(
     the signature table out instead.
     """
     sigged = signature_rows(df, text_col, id_col, num_perm, k, seed).persist()
-    banded = band_rows(sigged, num_perm, bands)
-    left = banded.alias("l")
-    right = banded.alias("r")
-    cand = (
-        left.join(
-            right,
-            (F.col("l.band") == F.col("r.band"))
-            & (F.col("l.bhash") == F.col("r.bhash"))
-            & (F.col("l._id") < F.col("r._id")),
-        )
-        .select(
-            F.col("l._id").alias("id_a"),
-            F.col("r._id").alias("id_b"),
-        )
-        .dropDuplicates(["id_a", "id_b"])
-        .join(
-            sigged.select(F.col("_id").alias("id_a"), F.col("minhash").alias("sig_a")),
-            "id_a",
-        )
-        .join(
-            sigged.select(F.col("_id").alias("id_b"), F.col("minhash").alias("sig_b")),
-            "id_b",
-        )
-    )
-    out = (
-        cand.withColumn("est_jaccard", est_jaccard("sig_a", "sig_b", num_perm))
-        .where(F.col("est_jaccard") >= threshold)
-        .select("id_a", "id_b", F.round("est_jaccard", 4).alias("est_jaccard"))
-    )
+    out = verified_band_pairs(sigged, band_rows(sigged, num_perm, bands), num_perm, threshold)
+    out = out.select("id_a", "id_b", F.round("est_jaccard", 4).alias("est_jaccard"))
     out._persisted_deps = [sigged]  # see docstring: caller-controlled unpersist
     return out
 

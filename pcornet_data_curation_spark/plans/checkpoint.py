@@ -22,7 +22,10 @@ resume rewrites it.
 Store format: a new manifest records FORMAT; a manifest with any other
 (or no) format is refused, as an n_buckets mismatch is, so every store
 this code reads has the curated schema it writes (two-valued
-`exact_dup` included).
+`exact_dup` included). Every reader goes through `load`: a run through
+`load_or_init`, which also holds the file's n_buckets to the config's,
+and the `check` command directly, which takes n_buckets from the file
+and creates nothing. A corrupt file is refused the same way.
 """
 
 from __future__ import annotations
@@ -42,9 +45,9 @@ class Manifest:
     def __init__(self, root: str, n_buckets: int, data: dict | None = None):
         self.root = root
         self.path = os.path.join(root, self.FILENAME)
-        self.data = data or {
-            "format": FORMAT, "n_buckets": n_buckets, "buckets": {}, "reports": {}
-        }
+        if data is None:  # a new store; a stored `{}` is refused below
+            data = {"format": FORMAT, "n_buckets": n_buckets, "buckets": {}, "reports": {}}
+        self.data = data
         if self.data.get("format") != FORMAT:
             raise ValueError(
                 f"checkpoint manifest {self.path} has store format "
@@ -58,19 +61,26 @@ class Manifest:
             )
 
     @classmethod
+    def load(cls, root: str) -> "Manifest":
+        """The manifest stored under `root`, with the n_buckets it
+        records. Creates nothing; a missing file raises
+        FileNotFoundError."""
+        path = os.path.join(root, cls.FILENAME)
+        with open(path) as f:
+            try:
+                data = json.load(f)
+            except json.JSONDecodeError as e:
+                raise ValueError(
+                    f"checkpoint manifest {path} is truncated or corrupt ({e}); "
+                    "it cannot say which buckets are done — start a fresh output_root"
+                ) from e
+        return cls(root, data.get("n_buckets"), data)
+
+    @classmethod
     def load_or_init(cls, root: str, n_buckets: int) -> "Manifest":
         os.makedirs(root, exist_ok=True)
-        path = os.path.join(root, cls.FILENAME)
-        if os.path.exists(path):
-            with open(path) as f:
-                try:
-                    data = json.load(f)
-                except json.JSONDecodeError as e:
-                    raise ValueError(
-                        f"checkpoint manifest {path} is truncated or corrupt ({e}); "
-                        "it cannot say which buckets are done — start a fresh output_root"
-                    ) from e
-            return cls(root, n_buckets, data)
+        if os.path.exists(os.path.join(root, cls.FILENAME)):
+            return cls(root, n_buckets, cls.load(root).data)
         return cls(root, n_buckets)
 
     def save(self) -> None:

@@ -290,7 +290,6 @@ def run_pipeline(
     spark: SparkSession,
     pages: DataFrame,
     cfg: PipelineConfig,
-    tracker: LineageTracker | None = None,
     limit_buckets: list[int] | None = None,
 ) -> dict:
     """Run (or resume) a curation run into cfg.output_root.
@@ -299,7 +298,7 @@ def run_pipeline(
     invocation — used by tests to simulate a killed run.
     Returns a dict of output paths + run stats.
     """
-    tracker = tracker or LineageTracker()
+    tracker = LineageTracker()
     out = cfg.output_root
     if cfg.prior_run_root and os.path.realpath(cfg.prior_run_root) == os.path.realpath(out):
         # a prior pointed at this run's own output would lazily read
@@ -334,10 +333,8 @@ def run_pipeline(
             .where(F.length("domain") > 0)
         )
         url_flagged = url_filter(pages, bl, persist_blocked=True)
-        pages = url_flagged.where(F.col("url_keep")).drop(
-            "host", "blocked_host", "url_keyword", "ip_host",
-            "non_ascii_host", "url_too_long", "url_too_many_params", "url_keep",
-        )
+        # url_filter's flag columns fall to prepare_pages' scan projection
+        pages = url_flagged.where(F.col("url_keep"))
 
     # the blocked-host set persisted by url_filter must be released
     # on EVERY exit path — an exception mid-run must not leak the

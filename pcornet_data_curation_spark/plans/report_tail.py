@@ -60,7 +60,7 @@ from pcornet_data_curation_spark.operators.normalize import (
 )
 from pcornet_data_curation_spark.operators.report_render import render_run_report
 from pcornet_data_curation_spark.plans.checkpoint import Manifest
-from pcornet_data_curation_spark.plans.lineage import LineageTracker
+from pcornet_data_curation_spark.plans.lineage import LINEAGE_SCHEMA, LineageTracker
 from pcornet_data_curation_spark.sources.tables import (
     append_small_table,
     export_csv,
@@ -473,13 +473,19 @@ def run_report_tail(
 
     lineage_path = os.path.join(out, "lineage")
     with tracker.stage("render"):
-        earlier = pq.read_table(lineage_path).to_pylist() if os.path.isdir(lineage_path) else []
+        # the columns the stage table shows, which every lineage file
+        # written so far has, whatever else it holds
+        earlier = (
+            pq.read_table(lineage_path, columns=["stage", "elapsed_sec", "status"]).to_pylist()
+            if os.path.isdir(lineage_path)
+            else []
+        )
         report_md = render_run_report(
             out,
             {**tables, "exceptions": exceptions, "completeness": completeness},
-            earlier + tracker.to_records(),
+            earlier + rows_table(tracker.rows, LINEAGE_SCHEMA).to_pylist(),
         )
-    append_small_table(tracker.to_arrow(), lineage_path)
+    append_small_table(rows_table(tracker.rows, LINEAGE_SCHEMA), lineage_path)
     return {
         "reports": reports_path,
         "metrics": metrics_path,

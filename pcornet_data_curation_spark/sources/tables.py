@@ -13,11 +13,13 @@ resolve in this order:
   "table:<name>"             — session catalog table/view
   anything else              — parquet directory path
 
-`write_table` always writes parquet partitioned directories with
-dynamic partition overwrite (the idempotent per-bucket commit the
-checkpoint manifest relies on); with an Iceberg catalog the same call
-shape maps to `writeTo(...).overwritePartitions()` — isolated here so
-swapping the format touches one function.
+Sinks here are the small ones: the driver-side outputs (reports,
+metrics, checks, lineage) written with pyarrow, and the optional CSV
+export. The fact table's one sink is `plans.pipeline.run_pipeline`'s
+curated write: parquet partitioned by bucket with dynamic partition
+overwrite, the idempotent per-bucket commit the checkpoint manifest
+relies on (with an Iceberg catalog that write would become
+`writeTo(...).overwritePartitions()`).
 """
 
 from __future__ import annotations
@@ -38,33 +40,11 @@ def open_table(spark: SparkSession, ref: str) -> DataFrame:
     return spark.read.parquet(ref)
 
 
-def write_table(
-    df: DataFrame,
-    ref: str,
-    partition_by: list[str] | None = None,
-    mode: str = "overwrite",
-) -> None:
-    """Write a result table. Parquet path refs get dynamic partition
-    overwrite (rewriting only the partitions present in `df` — the
-    idempotent resume primitive); catalog refs use saveAsTable."""
-    if ref.startswith("iceberg:") or ref.startswith("table:"):
-        w = df.write.mode(mode)
-        if partition_by:
-            w = w.partitionBy(*partition_by)
-        w.saveAsTable(ref.split(":", 1)[1])
-        return
-    w = df.write.mode(mode).option("partitionOverwriteMode", "dynamic")
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.parquet(ref)
-
-
-def export_csv(df: DataFrame, path: str, single_file: bool = True) -> None:
+def export_csv(df: DataFrame, path: str) -> None:
     """CSV export sink (reference &_csv=YES optional export,
-    data_curation_print.sas:121-150). single_file coalesces — only for
-    small aggregate tables, never the fact table."""
-    out = df.coalesce(1) if single_file else df
-    out.write.mode("overwrite").option("header", True).csv(path)
+    data_curation_print.sas:121-150): one file, so only for small
+    aggregate tables, never the fact table."""
+    df.coalesce(1).write.mode("overwrite").option("header", True).csv(path)
 
 
 def write_small_table(table: pa.Table, path: str) -> None:

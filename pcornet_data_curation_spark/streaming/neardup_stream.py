@@ -15,9 +15,9 @@ Design (per micro-batch, inside foreachBatch):
    sentinel docs (operators/dedup.signature_rows, band_rows and
    est_jaccard — the batch operator's own kernels, so a stream-flagged
    corpus agrees with a batch re-run);
-2. within-batch candidates: ids-only band self-join (the batch
-   operator's exact shape at micro-batch size), signature-verified at
-   `threshold`; the min id of each verified pair survives;
+2. within-batch candidates: operators/dedup.verified_band_pairs, the
+   batch operator's own band self-join and signature check at
+   micro-batch size; the min id of each verified pair survives;
 3. cross-batch candidates: ids-only band equi-join against the STORE's
    (id, band, bhash) rows, signature-verified against the store's
    (id, minhash) rows — any verified hit flags the new doc (the stored
@@ -47,7 +47,12 @@ from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from pcornet_data_curation_spark.operators.dedup import band_rows, est_jaccard, signature_rows
+from pcornet_data_curation_spark.operators.dedup import (
+    band_rows,
+    est_jaccard,
+    signature_rows,
+    verified_band_pairs,
+)
 
 BANDS_SUBDIR = "bands"
 SIGS_SUBDIR = "sigs"
@@ -122,20 +127,8 @@ def stream_neardup_flag_batch(
     banded = band_rows(sigged, num_perm, bands)
 
     # -- within-batch: verified pairs, min id survives --
-    l, r = banded.alias("l"), banded.alias("r")
-    intra = (
-        l.join(
-            r,
-            (F.col("l.band") == F.col("r.band"))
-            & (F.col("l.bhash") == F.col("r.bhash"))
-            & (F.col("l._id") < F.col("r._id")),
-        )
-        .select(F.col("l._id").alias("id_a"), F.col("r._id").alias("id_b"))
-        .dropDuplicates(["id_a", "id_b"])
-        .join(sigged.select(F.col("_id").alias("id_a"), F.col("minhash").alias("sa")), "id_a")
-        .join(sigged.select(F.col("_id").alias("id_b"), F.col("minhash").alias("sb")), "id_b")
-        .where(est_jaccard("sa", "sb", num_perm) >= threshold)
-        .select(F.col("id_b").alias("_id"))
+    intra = verified_band_pairs(sigged, banded, num_perm, threshold).select(
+        F.col("id_b").alias("_id")
     )
 
     # -- cross-batch: probe the persisted store --

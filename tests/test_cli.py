@@ -135,6 +135,9 @@ def test_cli_check_standalone_fires_age_on_left_behind_store(spark, tmp_path, ca
     is ~0 by construction because the run just re-marked every
     report). Fresh store → no 12.x exceptions."""
     import os
+    import re
+
+    import pytest
 
     pages = str(tmp_path / "pages")
     out = str(tmp_path / "store")
@@ -169,6 +172,14 @@ def test_cli_check_standalone_fires_age_on_left_behind_store(spark, tmp_path, ca
     assert "12.02" in fired
     # uniformly-aged store: reports are not older than data → not stale
     assert "12.01" not in fired
+
+    # `check` reads the manifest as `run` does: a store without a
+    # recorded format is refused, naming the file
+    del m["format"]
+    with open(mp, "w") as f:
+        json.dump(m, f)
+    with pytest.raises(ValueError, match=re.escape(mp)):
+        main(["check", "--output", out])
 
 
 def test_cli_prior_equal_to_output_rejected(spark, tmp_path, capsys):

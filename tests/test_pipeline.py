@@ -4,11 +4,14 @@ import glob
 import os
 import shutil
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
 from pcornet_data_curation_spark.config import PipelineConfig
 from pcornet_data_curation_spark.datagen.pages import pages_df
+from pcornet_data_curation_spark.operators.normalize import arrow_schema
 from pcornet_data_curation_spark.plans.checkpoint import Manifest
 from pcornet_data_curation_spark.plans.pipeline import run_pipeline
 
@@ -61,6 +64,7 @@ def test_pipeline_end_to_end(spark, outdir):
     assert not any(t.startswith(("11.", "12.", "13.")) for t in tripped)
     lin = spark.read.parquet(res["lineage"]).toPandas()
     assert (lin["status"] == "ok").all() and len(lin) >= 9
+    assert list(lin.columns) == ["stage", "started_at", "ended_at", "elapsed_sec", "status"]
 
 
 @pytest.fixture(scope="module")
@@ -94,6 +98,20 @@ def test_resume_skips_done_and_matches_cold_run(spark, outdir, gold_run):
         for p in glob.glob(os.path.join(outdir, "curated", "bucket=0", "*.parquet"))
         + glob.glob(os.path.join(outdir, "curated", "bucket=1", "*.parquet"))
     }
+    # a lineage file of the earlier eight-column shape (partition_id,
+    # rows_in, rows_out) still renders next to the five-column ones
+    pq.write_table(
+        pa.Table.from_pylist(
+            [{"stage": "eight_column_stage", "partition_id": None, "started_at": 0.0,
+              "ended_at": 1.5, "elapsed_sec": 1.5, "rows_in": None, "rows_out": None,
+              "status": "ok"}],
+            schema=arrow_schema(
+                "stage string, partition_id int, started_at double, ended_at double, "
+                "elapsed_sec double, rows_in bigint, rows_out bigint, status string"
+            ),
+        ),
+        os.path.join(outdir, "lineage", "part-eight-columns.parquet"),
+    )
     res = run_pipeline(spark, pages, cfg)
     assert res["stats"]["buckets_processed_now"] == 2  # only 2,3 recomputed
     for p, mtime in done_files.items():
@@ -102,6 +120,8 @@ def test_resume_skips_done_and_matches_cold_run(spark, outdir, gold_run):
     resumed = _read_sorted(spark, os.path.join(outdir, "curated"))
     assert resumed.equals(gold)
     assert _bucket_marks(outdir) == gold_marks
+    with open(res["report_md"]) as f:
+        assert "| eight_column_stage | 1.5 | ok |" in f.read()
 
 
 def test_report_pass_failure_leaves_buckets_pending(spark, outdir, gold_run, monkeypatch):
