@@ -37,10 +37,6 @@ class PipelineConfig:
     # overrides merge onto operators.rules.DEFAULT_RULES.
     rule_overrides: dict = field(default_factory=dict)
 
-    # html↔text extraction-consistency check (stage 1): reads the html
-    # column in the curation pass (the scan is otherwise html-free).
-    check_extraction: bool = True
-
     # Output root for tables, manifest, lineage.
     output_root: str = "/tmp/pdcs_out"
 

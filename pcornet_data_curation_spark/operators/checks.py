@@ -79,6 +79,8 @@ DEFAULT_CHECKS: tuple[Check, ...] = (
     Check("6.05", "out-of-valueset language share high", "lang_dist", "record_pct", "gt", 30.0, "red", category="Values outside of CDM specifications", family="distribution"),
     # -- 10.x referential integrity (referential_summary) -------------------
     Check("10.01", "kept rows missing scrubbed text", "referential_summary", "kept_null_scrub_n", "gt", 0.0, "red", family="referential"),
+    # 10.02 counts rows stored outside their url's bucket (bucket is a
+    # pure url hash); a url split across buckets always has one
     Check("10.02", "urls split across buckets (store corruption)", "referential_summary", "cross_bucket_dup_url_n", "gt", 0.0, "red", family="referential"),
     Check("10.03", "null urls in curated table", "referential_summary", "null_url_n", "gt", 0.0, "red", family="referential"),
     Check("10.04", "lang_pred outside valueset", "referential_summary", "lang_nonvalueset_n", "gt", 0.0, "blue", family="referential"),

@@ -30,8 +30,8 @@ from a window over the *aggregated* frame (bounded by |domain|), not a
 second scan.
 
 The pipeline's own reports do not call these per report: the last
-section holds its five exact passes (bucket_pass, global_pass,
-host_pass, percentile_pass, cross_bucket_pass) whose small results
+section holds its four exact passes (bucket_pass, global_pass,
+host_pass, percentile_pass) whose small results
 plans/report_tail.py turns into the same reports on the driver.
 """
 
@@ -602,7 +602,8 @@ def bucket_pass(
     countDistinct(url) per group is exact across buckets: bucket is a
     hash of url, so a url lives in one bucket and the per-bucket counts
     add up. It is the only distinct aggregate, so Spark plans it without
-    an Expand.
+    an Expand. `rep` also carries `misplaced` (row stored outside its
+    url's bucket), whose sum checks that premise.
     """
     url, lang, keep, text = F.col("url"), F.col("lang"), F.col("keep"), F.col("scrubbed_text")
     ts, tok, ppl = F.col("warc_ts"), F.col("n_tokens"), F.col("ppl")
@@ -680,6 +681,7 @@ def bucket_pass(
         F.count(F.when(keep, tok)).alias("kept_tok_n"),
         F.sum(F.when(~keep, tok)).alias("drop_tok_sum"),
         F.count(F.when(~keep, tok)).alias("drop_tok_n"),
+        nsum(F.col("misplaced")).alias("misplaced"),
     ]
     exploded = rep.select("*", F.explode(dims).alias("_d")).select(
         "*", F.col("_d.dim").alias("dim"), F.col("_d.key").alias("key")
@@ -775,16 +777,6 @@ def percentile_pass(rep: DataFrame, pcts: tuple[float, ...] = DEFAULT_PCTS) -> l
             F.expr(f"percentile(ppl, array({arr}))").alias("ppl_p"),
         )
     )
-
-
-def cross_bucket_pass(rep: DataFrame) -> int | None:
-    """Number of urls stored in more than one bucket directory (bucket
-    is a pure url hash, so anything but 0 means store corruption or a
-    bucketing-code change mid-run): one url-keyed aggregation."""
-    per_url = rep.groupBy("url").agg(
-        (F.min("bucket") != F.max("bucket")).alias("_split")
-    )
-    return _collect(per_url.agg(F.sum(F.col("_split").cast("long")).alias("n")))[0]["n"]
 
 
 def url_filter_pass(flagged: DataFrame) -> dict:

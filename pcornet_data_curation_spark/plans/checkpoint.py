@@ -19,6 +19,10 @@ the bucket — the one place a bucket is counted. A run killed between
 the curated write and that mark leaves the bucket pending, and the
 resume rewrites it.
 
+Bucket function: `bucket_col` both places curated rows and, in the
+report tail, checks every stored row (check 10.02), under the
+manifest's n_buckets guard.
+
 Store format: a new manifest records FORMAT; a manifest with any other
 (or no) format is refused, as an n_buckets mismatch is, so every store
 this code reads has the curated schema it writes (two-valued
@@ -34,9 +38,21 @@ import json
 import os
 import time
 
+from pyspark.sql import functions as F
+
 # curated-store format this code writes and reads; manifests written
 # before the format was recorded (no "format" key) count as format 1
 FORMAT = 2
+
+
+def bucket_col(n_buckets: int):
+    """The url-hash bucket of a row: resume, write and report unit."""
+    return F.pmod(F.xxhash64(F.col("url")), F.lit(n_buckets)).cast("int")
+
+
+def salt_col(salt_factor: int):
+    # independent second hash stream (seeded by an extra literal)
+    return F.pmod(F.xxhash64(F.col("url"), F.lit(0x5A17)), F.lit(salt_factor)).cast("int")
 
 
 class Manifest:

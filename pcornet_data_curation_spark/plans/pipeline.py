@@ -12,7 +12,7 @@ One heavy distributed pass per run:
 dedup flag; the streaming path composes the same two halves around its
 stateful flag.)
 
-then the reporting tail (plans/report_tail.py): five exact aggregation
+then the reporting tail (plans/report_tail.py): four exact aggregation
 passes over the curated table, projected once, bring bucket- and
 category-sized results to the driver, which builds the per-partition
 conformance reports, the normalized metrics table, the threshold
@@ -38,8 +38,10 @@ Scale design (100 TB / 10^12 docs):
 * report passes aggregate on the cluster; what reaches the driver is
   bounded by buckets × categories, months, windows or top-N, never by
   hosts or urls;
-* resume filters pending buckets at the SCAN (bucket predicate), so
-  a resumed run reads only unfinished data.
+* resume filters pending buckets with the bucket predicate, pushed
+  into the scan's Filter below scoring: every scanned page is hashed
+  (the input is not bucketed), but finished buckets are never scored
+  or written; only the `curated` re-read prunes bucket directories.
 """
 
 from __future__ import annotations
@@ -61,7 +63,7 @@ from pcornet_data_curation_spark.operators.drift import staleness_rows
 from pcornet_data_curation_spark.operators.normalize import extraction_consistent_col
 from pcornet_data_curation_spark.operators.score import with_doc_stats
 from pcornet_data_curation_spark.operators.verdict import with_verdict
-from pcornet_data_curation_spark.plans.checkpoint import Manifest
+from pcornet_data_curation_spark.plans.checkpoint import Manifest, bucket_col, salt_col
 from pcornet_data_curation_spark.plans.lineage import LineageTracker
 from pcornet_data_curation_spark.plans.report_tail import (  # noqa: F401 (re-exported)
     EXPECTED_REPORTS,
@@ -79,27 +81,16 @@ CURATED_STATS = [
     "ppl",
 ]
 
-def bucket_col(n_buckets: int):
-    return F.pmod(F.xxhash64(F.col("url")), F.lit(n_buckets)).cast("int")
-
-
-def salt_col(salt_factor: int):
-    # independent second hash stream (seeded by an extra literal)
-    return F.pmod(F.xxhash64(F.col("url"), F.lit(0x5A17)), F.lit(salt_factor)).cast("int")
-
-
 def salted_repartition(df: DataFrame, cfg: PipelineConfig) -> DataFrame:
-    """Append (bucket, salt) url-hash columns and range-partition one
-    cell per partition. repartitionByRange, NOT hash repartition: with
-    exactly n_buckets*salt_factor distinct cells, hash-mod collides
-    cells into the same partition (balls-into-bins → ~37% empty
-    partitions and 3-4-cell stragglers; measured max/mean ≈ 4). Range
-    partitioning assigns contiguous cells one-per-partition — balanced,
-    and each task writes into a single bucket directory."""
+    """Append (bucket, salt) url-hash columns and place each cell in its
+    own partition, id `bucket * salt_factor + salt`: each task writes
+    into a single bucket directory, and no sampling job runs."""
     out = df.withColumn("bucket", bucket_col(cfg.n_buckets)).withColumn(
         "salt", salt_col(cfg.salt_factor)
     )
-    return out.repartitionByRange(cfg.n_buckets * cfg.salt_factor, "bucket", "salt")
+    return out.repartitionById(
+        cfg.n_buckets * cfg.salt_factor, F.col("bucket") * cfg.salt_factor + F.col("salt")
+    )
 
 
 def lookback_filter(pages: DataFrame, cfg: PipelineConfig) -> DataFrame:
@@ -199,7 +190,6 @@ def prepare_pages(pages: DataFrame, cfg: PipelineConfig) -> DataFrame:
     # scoring UDF (measured: carrying it through cost ~3x on the
     # curation pass). extraction_ok evaluates against the ORIGINAL
     # text column; the missing-text fill happens in the SAME projection.
-    extraction_ok = extraction_consistent_col() if cfg.check_extraction else F.lit(True)
     text_expr = F.col("text")
     if cfg.extract_missing_text and "html" in df.columns:
         from pcornet_data_curation_spark.operators.extract import (
@@ -211,7 +201,7 @@ def prepare_pages(pages: DataFrame, cfg: PipelineConfig) -> DataFrame:
         )
     df = df.select(
         "url", "warc_ts", text_expr.alias("text"),
-        "lang", extraction_ok.alias("extraction_ok"),
+        "lang", extraction_consistent_col().alias("extraction_ok"),
     )
     # text-repair stages (opt-in, production order: fix encoding, then
     # remove boilerplate, THEN dedup/score — so fingerprints and
@@ -270,8 +260,8 @@ def curate(pages: DataFrame, cfg: PipelineConfig) -> DataFrame:
     df = prepare_pages(pages, cfg)
     if cfg.dedup != "off":
         # global dedup BEFORE the (bucket, salt) repartition: the
-        # dedup-shuffle output feeds straight into the range
-        # partitioner, and the survivor choice (min url) is a pure
+        # dedup-shuffle output feeds straight into the (bucket, salt)
+        # exchange, and the survivor choice (min url) is a pure
         # function of the full input, so a partial-bucket resume
         # recomputes identical flags. 'flag' records exact_dup only;
         # 'drop' also folds it into keep. Default 'off': the F1-parity

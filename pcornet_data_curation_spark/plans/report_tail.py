@@ -5,14 +5,15 @@ Mirrors the reference's split between the query run
 (data_curation_tables.sas) and the downstream normalization + EDC
 report (normalization.sas / edc_report.sas):
 
-* query run — five passes over the curated table, projected once
+* query run — four passes over the curated table, projected once
   (operators/reports.py): per (bucket, dim, key) additive counts, sums,
-  min/max and countDistinct(url); the global non-additive distincts; the
-  top-N hosts plus totals; exact percentiles over GROUPING SETS ((keep),
-  ()); the url-keyed cross-bucket check (plus the url pre-filter's
-  counts when it ran). Every frame brought to the driver is bounded by
-  buckets x categories, months, windows or top-N, never by hosts or
-  urls.
+  min/max and countDistinct(url), and the rows stored outside their
+  url's bucket (`checkpoint.bucket_col`, checked per row); the global
+  non-additive distincts; the top-N hosts plus totals; exact
+  percentiles over GROUPING SETS ((keep), ()) (plus the url
+  pre-filter's counts when it ran). Every frame brought to the driver
+  is bounded by buckets x categories, months, windows or top-N, never
+  by hosts or urls.
 * marks — the bucket pass's dim 'all' rows are also each bucket's
   manifest mark (rows, kept): the buckets this run wrote are marked
   done right after that pass, so a bucket is counted once and is done
@@ -59,7 +60,7 @@ from pcornet_data_curation_spark.operators.normalize import (
     spark_round,
 )
 from pcornet_data_curation_spark.operators.report_render import render_run_report
-from pcornet_data_curation_spark.plans.checkpoint import Manifest
+from pcornet_data_curation_spark.plans.checkpoint import Manifest, bucket_col
 from pcornet_data_curation_spark.plans.lineage import LINEAGE_SCHEMA, LineageTracker
 from pcornet_data_curation_spark.sources.tables import (
     append_small_table,
@@ -126,6 +127,9 @@ REPORTS: dict[str, tuple[str, list[str]]] = {
     "url_unique": ("url_n bigint, url_distinct_n bigint, dup_url_n bigint", []),
     "run_metadata": ("meta_key string, meta_value string", ["meta_key"]),
     "dash_activity": ("window string, record_n bigint, distinct_n bigint", ["window"]),
+    # cross_bucket_dup_url_n: rows stored outside their url's bucket
+    # (the bucket pass's `misplaced` sum); a url split across buckets
+    # always has one
     "referential_summary": (
         "records bigint, kept_null_scrub_n bigint, null_url_n bigint, "
         "lang_nonvalueset_n bigint, kept_mean_tokens double, dropped_mean_tokens double, "
@@ -204,7 +208,6 @@ def build_reports(
     distincts: dict,
     hosts: list[dict],
     pcts: list[dict],
-    cross_bucket_n: int | None,
     url_counts: dict | None,
     cfg: PipelineConfig,
     flag_cols: list[str],
@@ -310,13 +313,13 @@ def build_reports(
     ]
 
     # orphan/integrity family (reference EDC orphan-record checks): kept
-    # rows must carry text, a url lives in one bucket, dropped docs
+    # rows must carry text, a row lives in its url's bucket, dropped docs
     # averaging LONGER than kept ones suggests an inverted predicate
     kept_mean = _mean(every, "kept_tok_sum", "kept_tok_n")
     dropped_mean = _mean(every, "drop_tok_sum", "drop_tok_n")
     out["referential_summary"] = [(
         records, _sum(every, "kept_null_scrub_n"), _sum(every, "url_null"),
-        _sum(every, "lang_nonvalueset_n"), kept_mean, dropped_mean, cross_bucket_n,
+        _sum(every, "lang_nonvalueset_n"), kept_mean, dropped_mean, _sum(every, "misplaced"),
         (dropped_mean or 0.0) / kept_mean if kept_mean is not None and kept_mean > 0 else 0.0,
     )]
 
@@ -390,6 +393,7 @@ def run_report_tail(
     rep = cur.select(
         "bucket", "url", "lang", "warc_ts", "lang_pred", "n_tokens", "ppl", "keep",
         "scrub_hit", "extraction_ok", "exact_dup", "scrubbed_text", *flag_cols,
+        (bucket_col(cfg.n_buckets) != F.col("bucket")).alias("misplaced"),
     )
 
     with tracker.stage("report_bucket_pass"):
@@ -406,8 +410,6 @@ def run_report_tail(
         hosts = rp.host_pass(rep, DOMAIN_TOP_N)
     with tracker.stage("report_percentile_pass"):
         pcts = rp.percentile_pass(rep)
-    with tracker.stage("report_cross_bucket_pass"):
-        cross_bucket_n = rp.cross_bucket_pass(rep)
     url_counts = None
     if url_flagged is not None:
         with tracker.stage("report_url_filter_pass"):
@@ -415,7 +417,7 @@ def run_report_tail(
 
     with tracker.stage("report_build"):
         rows = build_reports(
-            by_bucket, distincts, hosts, pcts, cross_bucket_n, url_counts, cfg,
+            by_bucket, distincts, hosts, pcts, url_counts, cfg,
             flag_cols, windows, spark.version,
         )
         tables = {

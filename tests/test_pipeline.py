@@ -66,6 +66,17 @@ def test_pipeline_end_to_end(spark, outdir):
     assert (lin["status"] == "ok").all() and len(lin) >= 9
     assert list(lin.columns) == ["stage", "started_at", "ended_at", "elapsed_sec", "status"]
 
+    # a copy of a bucket-0 part file planted in bucket=1: re-reporting
+    # the complete store counts each planted row as misplaced (10.02)
+    part = sorted(glob.glob(os.path.join(res["curated"], "bucket=0", "*.parquet")))[0]
+    shutil.copy(part, os.path.join(res["curated"], "bucket=1", "part-planted.parquet"))
+    planted = pq.read_metadata(part).num_rows
+    res = run_pipeline(spark, pages_df(spark, N, partitions=4), cfg)
+    assert res["stats"]["buckets_processed_now"] == 0
+    exc = spark.read.parquet(res["exceptions"]).toPandas().set_index("check_id")
+    assert exc.loc["10.02", "exception"]
+    assert exc.loc["10.02", "observed"] == planted > 0
+
 
 @pytest.fixture(scope="module")
 def gold_run(spark, tmp_path_factory):
@@ -213,25 +224,19 @@ def test_extraction_check_flags_planted_mismatches(spark, tmp_path):
     assert ext["mismatch_n"].iloc[0] > 0
     assert 0.0 < ext["mismatch_pct"].iloc[0] < 20.0
 
-    # disabling the check removes html from the parquet scan entirely
+    # the check reads html at the parquet scan
     from pcornet_data_curation_spark.plans.pipeline import curate
 
     pq = str(tmp_path / "pages_pq")
     pages_df(spark, 100, partitions=1).write.parquet(pq)
-
-    def read_schema(check):
-        cfg2 = PipelineConfig(output_root=str(tmp_path / "x"), check_extraction=check)
-        plan = curate(spark.read.parquet(pq), cfg2)
-        lines = [
-            ln
-            for ln in plan._jdf.queryExecution().executedPlan().toString().splitlines()
-            if "ReadSchema" in ln
-        ]
-        assert lines
-        return lines[0]
-
-    assert "html" not in read_schema(False)
-    assert "html" in read_schema(True)
+    plan = curate(spark.read.parquet(pq), PipelineConfig(output_root=str(tmp_path / "x")))
+    lines = [
+        ln
+        for ln in plan._jdf.queryExecution().executedPlan().toString().splitlines()
+        if "ReadSchema" in ln
+    ]
+    assert lines
+    assert "html" in lines[0]
 
 
 def test_run_report_markdown(spark, tmp_path):

@@ -27,20 +27,27 @@ def test_salted_repartition_balances(spark):
     cfg = PipelineConfig(output_root="/tmp/unused", n_buckets=8, salt_factor=4)
     pages = pages_df(spark, 4000, partitions=4)
     df = salted_repartition(pages, cfg)
-    sizes = (
-        df.select(F.spark_partition_id().alias("pid"))
-        .groupBy("pid")
-        .count()
-        .toPandas()["count"]
-        .to_numpy()
+    cells = (
+        df.groupBy(F.spark_partition_id().alias("pid"))
+        .agg(
+            F.count(F.lit(1)).alias("count"),
+            F.min(F.col("bucket") * cfg.salt_factor + F.col("salt")).alias("lo"),
+            F.max(F.col("bucket") * cfg.salt_factor + F.col("salt")).alias("hi"),
+        )
+        .toPandas()
     )
+    sizes = cells["count"].to_numpy()
+    # each (bucket, salt) cell is exactly one partition, placed by its
+    # id bucket * salt_factor + salt, so every task writes one bucket
+    # directory
+    n_cells = cfg.n_buckets * cfg.salt_factor
+    assert df.rdd.getNumPartitions() == n_cells
+    assert (cells["lo"] == cells["hi"]).all()
+    assert (cells["lo"] == cells["pid"]).all()
+    assert sorted(cells["pid"]) == list(range(n_cells))
     # url-hash keys ignore the domain entirely, so hot domains cannot
-    # concentrate. Range partitioning guarantees ≤2 cells per partition
-    # (a sampled boundary can merge two adjacent cells, never more), so
-    # the worst task is bounded by ~2.2x the mean — vs ~4x under
-    # hash-mod repartition (balls-into-bins collisions).
+    # concentrate: the worst task is bounded by ~2.2x the mean
     assert sizes.max() <= 2.2 * sizes.mean()
-    assert len(sizes) >= cfg.n_buckets * cfg.salt_factor * 0.8
 
 
 def test_bucket_and_salt_are_independent_streams(spark):

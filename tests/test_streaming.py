@@ -134,9 +134,12 @@ def test_stream_curate_with_dedup_flag_and_drop(spark, tmp_path):
     'drop' additionally folds the flag into keep inside curate — the
     batch stage's downstream semantics with a first-seen survivor."""
     import datetime as dt
+    import time
 
     import pytest
+    from pyspark.sql.streaming import StreamingQueryListener
 
+    from pcornet_data_curation_spark.operators.dedup import content_fp_col
     from pcornet_data_curation_spark.streaming.curate_stream import curate_stream
 
     t = dt.datetime(2026, 1, 1, 12, 0, 0)
@@ -154,8 +157,27 @@ def test_stream_curate_with_dedup_flag_and_drop(spark, tmp_path):
     out = str(tmp_path / "out")
     ckpt = str(tmp_path / "ckpt")
 
+    class StateRows(StreamingQueryListener):
+        """The dedup state's numRowsTotal of every micro-batch."""
+
+        def __init__(self):
+            self.rows, self.terminated = [], False
+
+        def onQueryStarted(self, event):
+            pass
+
+        def onQueryProgress(self, event):
+            self.rows += [op.numRowsTotal for op in event.progress.stateOperators]
+
+        def onQueryIdle(self, event):
+            pass
+
+        def onQueryTerminated(self, event):
+            self.terminated = True
+
     def drain(rows, cfg):
         spark.createDataFrame(rows, ddl).coalesce(1).write.mode("append").parquet(indir)
+        listener.terminated = False
         q = (
             curate_stream(spark, indir, cfg)
             .writeStream.format("parquet")
@@ -165,10 +187,24 @@ def test_stream_curate_with_dedup_flag_and_drop(spark, tmp_path):
             .start()
         )
         q.awaitTermination(120)
+        # listener events arrive asynchronously; progress precedes
+        # termination
+        deadline = time.monotonic() + 30.0
+        while not listener.terminated and time.monotonic() < deadline:
+            time.sleep(0.1)
 
     cfg = PipelineConfig(output_root=str(tmp_path / "o"), n_buckets=4, dedup="drop")
-    drain(rows1, cfg)
-    drain(rows2, cfg)
+    listener = StateRows()
+    spark.streams.addListener(listener)
+    try:
+        drain(rows1, cfg)
+        drain(rows2, cfg)
+    finally:
+        spark.streams.removeListener(listener)
+    # one state row per distinct fingerprint: the stateful operator
+    # runs once per micro-batch
+    fps = spark.createDataFrame(rows1 + rows2, ddl).select(content_fp_col()).distinct()
+    assert listener.rows[-1] == fps.count()
 
     got = spark.read.parquet(out).toPandas().set_index("url")
     assert not got.loc["https://ex.com/a", "exact_dup"]      # first seen survives
