@@ -3,10 +3,14 @@ user-edited run programs (sasprograms/01-04_run_*.sas): one command per
 lifecycle stage, parameters on the command line instead of edited into
 the source.
 
-    spark-submit --py-files pcornet_data_curation_spark.zip \
-        -m pcornet_data_curation_spark run \
+    spark-submit --master <cluster> --py-files pcornet_data_curation_spark.zip \
+        run_cli.py run \
         --input /data/pages --output /data/curation_run_42 \
         --run-date 2026-01-01 --buckets 1024 --salt 8
+
+spark-submit has no -m: `run_cli.py` is the driver file that
+tools/build_pyfiles.py documents (import `main` from this module, exit
+with its return value).
 
 Local usage (tests / this sandbox):
 
@@ -22,6 +26,8 @@ import datetime as dt
 import json
 import sys
 
+_CORES_HELP = "run in local[N]; omit under spark-submit"
+
 
 def _add_run_args(p: argparse.ArgumentParser) -> None:
     p.add_argument("--input", required=True, help="pages table (parquet dir / table: / iceberg: ref)")
@@ -30,7 +36,7 @@ def _add_run_args(p: argparse.ArgumentParser) -> None:
     p.add_argument("--lookback-years", type=int, default=10)
     p.add_argument("--buckets", type=int, default=64)
     p.add_argument("--salt", type=int, default=4)
-    p.add_argument("--cores", type=int, default=None, help="local[N]; omit on a cluster")
+    p.add_argument("--cores", type=int, default=None, help=_CORES_HELP)
     p.add_argument("--rule-overrides", default=None, help="JSON dict of rule overrides")
     p.add_argument(
         "--csv",
@@ -163,7 +169,7 @@ def main(argv: list[str] | None = None) -> int:
     g.add_argument("--output", required=True)
     g.add_argument("--seed", type=int, default=42)
     g.add_argument("--partitions", type=int, default=64)
-    g.add_argument("--cores", type=int, default=None)
+    g.add_argument("--cores", type=int, default=None, help=_CORES_HELP)
     q = sub.add_parser(
         "queries",
         help="run a registry query group (the reference's part1/part2 split, "
@@ -173,7 +179,7 @@ def main(argv: list[str] | None = None) -> int:
     q.add_argument("--part", default="all", choices=["part1", "part2", "all"])
     q.add_argument("--queries", default=None, help="comma-separated explicit query names")
     q.add_argument("--output", default=None, help="write each result to <output>/<name> (default: noop sink)")
-    q.add_argument("--cores", type=int, default=None)
+    q.add_argument("--cores", type=int, default=None, help=_CORES_HELP)
     c = sub.add_parser(
         "corpus",
         help="training-corpus shaping over a curated table: deterministic "
@@ -257,7 +263,7 @@ def main(argv: list[str] | None = None) -> int:
     c.add_argument("--tokens-col", default="n_tokens", help="pack: token-count column")
     c.add_argument("--target-tokens", type=int, default=1_000_000)
     c.add_argument("--part-col", default="bucket", help="pack: shard-partition column")
-    c.add_argument("--cores", type=int, default=None)
+    c.add_argument("--cores", type=int, default=None, help=_CORES_HELP)
     k = sub.add_parser(
         "check",
         help="standalone data-check evaluation over an EXISTING run store: "

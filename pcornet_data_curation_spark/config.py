@@ -29,8 +29,9 @@ class PipelineConfig:
     # O(10^4-10^5); tests use small values.
     n_buckets: int = 8
 
-    # Salt granularity for skewed long-tail domains: repartition key is
-    # (bucket, salt) with salt = xxhash64(url) % salt_factor.
+    # Cells (write tasks, files) per bucket: repartition key is
+    # (bucket, salt) with salt = xxhash64(url) % salt_factor. Both keys
+    # hash the url, so no domain concentrates in a cell whatever this is.
     salt_factor: int = 4
 
     # Rule thresholds are data, not code (reference valuesets pattern);
@@ -83,8 +84,7 @@ class PipelineConfig:
     # directives found in the html column: such pages are DROPPED at
     # the scan, before any payload processing — the curation-side
     # politeness re-check a stored-WARC pipeline must do itself
-    # (operators/robotsmeta.py). No-op when the input has no html
-    # column. Default off: per-url verdict parity.
+    # (operators/robotsmeta.py). Default off: per-url verdict parity.
     respect_noindex: bool = False
 
     # Repair one round of cp1252 mojibake in the text column before

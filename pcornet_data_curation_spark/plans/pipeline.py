@@ -33,8 +33,9 @@ Scale design (100 TB / 10^12 docs):
   read only the narrow curated columns (column pruning + bucket
   partition pruning do the work);
 * repartition key = (bucket, salt): url-hash buckets give resume
-  granularity, the salt splits hot long-tail domains inside a bucket;
-  AQE skew-join/coalesce is on in the session;
+  granularity, the salt sets how many cells (tasks, files) a bucket
+  is written as; both hash the url, so no domain concentrates in a
+  cell. AQE skew-join/coalesce is on in the session;
 * report passes aggregate on the cluster; what reaches the driver is
   bounded by buckets × categories, months, windows or top-N, never by
   hosts or urls;
@@ -59,7 +60,6 @@ from pcornet_data_curation_spark.operators.dedup import (
     minhash_lsh_pairs,
     unpersist_deps,
 )
-from pcornet_data_curation_spark.operators.drift import staleness_rows
 from pcornet_data_curation_spark.operators.normalize import extraction_consistent_col
 from pcornet_data_curation_spark.operators.score import with_doc_stats
 from pcornet_data_curation_spark.operators.verdict import with_verdict
@@ -173,7 +173,7 @@ def prepare_pages(pages: DataFrame, cfg: PipelineConfig) -> DataFrame:
     opt-in text repairs. The dedup flag goes between this and
     `finish_curation`, so it fingerprints repaired text."""
     df = lookback_filter(pages, cfg)
-    if cfg.respect_noindex and "html" in df.columns:
+    if cfg.respect_noindex:
         # publisher opt-out re-check (stored WARCs must re-honor what
         # the crawler honored at fetch time): three regexp_extracts
         # over html AT THE SCAN, pages dropped before any payload
@@ -191,7 +191,7 @@ def prepare_pages(pages: DataFrame, cfg: PipelineConfig) -> DataFrame:
     # curation pass). extraction_ok evaluates against the ORIGINAL
     # text column; the missing-text fill happens in the SAME projection.
     text_expr = F.col("text")
-    if cfg.extract_missing_text and "html" in df.columns:
+    if cfg.extract_missing_text:
         from pcornet_data_curation_spark.operators.extract import (
             missing_text_filled_col,
         )
@@ -302,12 +302,6 @@ def run_pipeline(
         )
     curated_path = os.path.join(out, "curated")
     manifest = Manifest.load_or_init(out, cfg.n_buckets)
-    # `stale` (reports older than curated data: a prior run recurated
-    # buckets and died before re-reporting) is evaluated against the
-    # store AS THIS RUN FOUND IT — this run re-marks every report, so
-    # the live manifest would read stale=0 unconditionally. `stale`
-    # does not depend on the clock, hence the 0.0.
-    stale_rows = [r for r in staleness_rows(manifest.data, 0.0) if r[3] == "stale"]
 
     # URL-level pre-filter (opt-in): reject by url BEFORE any payload
     # is decoded — the RefinedWeb/C4 stage order. The flagged frame is
@@ -351,9 +345,7 @@ def run_pipeline(
         cur = spark.read.parquet(curated_path).where(
             F.col("bucket").isin(sorted(manifest.done_buckets() + pending))
         )
-        paths = run_report_tail(
-            spark, cur, cfg, manifest, tracker, url_flagged, pending, stale_rows
-        )
+        paths = run_report_tail(spark, cur, cfg, manifest, tracker, url_flagged, pending)
     finally:
         if url_flagged is not None:
             unpersist_deps(url_flagged)

@@ -367,7 +367,6 @@ def run_report_tail(
     tracker: LineageTracker,
     url_flagged: DataFrame | None,
     pending: list[int],
-    stale_rows: list[tuple],
 ) -> dict[str, str]:
     """Report over the buckets in `cur` and write every output under
     cfg.output_root. Returns the output paths.
@@ -376,10 +375,12 @@ def run_report_tail(
     wrote. Right after the bucket pass, each pending bucket is marked
     done in `manifest` with its `rows`/`kept` from that pass (dim
     'all'; a bucket with no rows gets (0, 0)), before any other pass:
-    the pass is the only place a bucket is counted. `stale_rows` are
-    the report_staleness `stale` rows of the manifest as the run
-    loaded it."""
+    the pass is the only place a bucket is counted. The report_staleness
+    `stale` rows are read from `manifest` before that first mark, so
+    they describe the store as the run loaded it."""
     out = cfg.output_root
+    # `stale` does not depend on the clock, hence the 0.0
+    stale_rows = [r for r in staleness_rows(manifest.data, 0.0) if r[3] == "stale"]
     flag_cols = [R.flag_name(r) for r in R.active_rules(cfg.rule_overrides)]
     # run-date-parameterized trailing windows (reference %dash: 1-5 yr
     # spans ending run_date - 3 months, data_curation_base.sas:49-55)

@@ -9,7 +9,7 @@ content-addressed / cached by the cluster deploy tooling).
 
     python tools/build_pyfiles.py [--out dist/pcornet_data_curation_spark.zip]
 
-    spark-submit --py-files dist/pcornet_data_curation_spark.zip \
+    spark-submit --master <cluster> --py-files dist/pcornet_data_curation_spark.zip \
         --deploy-mode cluster your_job.py
     # spark-submit has no -m; to drive the package CLI on a cluster,
     # ship a two-line driver file next to the zip:
@@ -17,7 +17,7 @@ content-addressed / cached by the cluster deploy tooling).
     #   import sys
     #   from pcornet_data_curation_spark.__main__ import main
     #   sys.exit(main(sys.argv[1:]))
-    spark-submit --py-files dist/pcornet_data_curation_spark.zip \
+    spark-submit --master <cluster> --py-files dist/pcornet_data_curation_spark.zip \
         run_cli.py run --input ... --output ...
 
 Only the package itself ships — tests, tools, and docs stay out of the
