@@ -117,12 +117,9 @@ def run_curation(spark, pages_path: str) -> tuple[float, int]:
     from pcornet_data_curation_spark.config import PipelineConfig
     from pcornet_data_curation_spark.plans.pipeline import curate
 
-    # 256 (bucket, salt) partitions: ~8 waves on 32 cores — fine enough
-    # that per-doc cost variance doesn't leave straggler tails (32
-    # partitions = one wave measured ~2× slower at local[32])
-    cfg = PipelineConfig(
-        output_root="/tmp/spark_graft_bench_out", n_buckets=64, salt_factor=4
-    )
+    # 64 buckets: the curate write rebalances into 64 partitions, which
+    # AQE merges or splits by their measured bytes
+    cfg = PipelineConfig(output_root="/tmp/spark_graft_bench_out", n_buckets=64)
     pages = spark.read.parquet(pages_path)
     n = pages.count()
     _sink(curate(pages.limit(2000), cfg))  # warm-up: workers + codegen
@@ -145,7 +142,7 @@ def run_curation_full(spark, pages_path: str) -> float:
     from pcornet_data_curation_spark.plans.pipeline import curate
 
     cfg = PipelineConfig(
-        output_root="/tmp/spark_graft_bench_out", n_buckets=64, salt_factor=4,
+        output_root="/tmp/spark_graft_bench_out", n_buckets=64,
         respect_noindex=True, extract_missing_text=True,
         fix_mojibake=True, remove_boilerplate=True, dedup="drop",
     )

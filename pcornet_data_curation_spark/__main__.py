@@ -6,7 +6,7 @@ the source.
     spark-submit --master <cluster> --py-files pcornet_data_curation_spark.zip \
         run_cli.py run \
         --input /data/pages --output /data/curation_run_42 \
-        --run-date 2026-01-01 --buckets 1024 --salt 8
+        --run-date 2026-01-01 --buckets 1024
 
 spark-submit has no -m: `run_cli.py` is the driver file that
 tools/build_pyfiles.py documents (import `main` from this module, exit
@@ -35,7 +35,6 @@ def _add_run_args(p: argparse.ArgumentParser) -> None:
     p.add_argument("--run-date", default="2026-01-01", help="deterministic 'today' (YYYY-MM-DD)")
     p.add_argument("--lookback-years", type=int, default=10)
     p.add_argument("--buckets", type=int, default=64)
-    p.add_argument("--salt", type=int, default=4)
     p.add_argument("--cores", type=int, default=None, help=_CORES_HELP)
     p.add_argument("--rule-overrides", default=None, help="JSON dict of rule overrides")
     p.add_argument(
@@ -441,7 +440,6 @@ def main(argv: list[str] | None = None) -> int:
         run_date=dt.date.fromisoformat(args.run_date),
         lookback_years=args.lookback_years,
         n_buckets=args.buckets,
-        salt_factor=args.salt,
         rule_overrides=json.loads(args.rule_overrides) if args.rule_overrides else {},
         output_root=args.output,
         prior_run_root=args.prior,

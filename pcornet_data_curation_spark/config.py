@@ -25,14 +25,11 @@ class PipelineConfig:
     lookback_years: int = 10
 
     # Number of url-hash buckets = unit of checkpoint/resume and of the
-    # per-partition conformance reports. At 10^12 docs this would be
+    # per-partition conformance reports, and the partition count of the
+    # curated write's rebalance by bucket (AQE then sizes the files a
+    # bucket is written as from its bytes). At 10^12 docs this would be
     # O(10^4-10^5); tests use small values.
     n_buckets: int = 8
-
-    # Cells (write tasks, files) per bucket: repartition key is
-    # (bucket, salt) with salt = xxhash64(url) % salt_factor. Both keys
-    # hash the url, so no domain concentrates in a cell whatever this is.
-    salt_factor: int = 4
 
     # Rule thresholds are data, not code (reference valuesets pattern);
     # overrides merge onto operators.rules.DEFAULT_RULES.

@@ -238,7 +238,7 @@ def pack_token_shards(
     Scale: ONE window partitioned by part_col (source/domain/date
     bucket) — the running sum is per-partition, so no global sort and
     no single-task bottleneck as long as part_col is reasonably
-    bounded (the salted url-hash bucket of the curation pipeline is
+    bounded (the url-hash bucket of the curation pipeline is
     the natural choice at 10^12 docs). Shard ids are therefore
     (part, local_shard) pairs, not globally dense — global density
     would force a total order over the corpus.

@@ -50,11 +50,6 @@ def bucket_col(n_buckets: int):
     return F.pmod(F.xxhash64(F.col("url")), F.lit(n_buckets)).cast("int")
 
 
-def salt_col(salt_factor: int):
-    # independent second hash stream (seeded by an extra literal)
-    return F.pmod(F.xxhash64(F.col("url"), F.lit(0x5A17)), F.lit(salt_factor)).cast("int")
-
-
 class Manifest:
     FILENAME = "_manifest.json"
 

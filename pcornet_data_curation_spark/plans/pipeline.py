@@ -3,7 +3,7 @@
 One heavy distributed pass per run:
 
   pages ──lookback/noindex filter, scan projection, text repair
-        ──dedup flag──▶ salted repartition on url-hash
+        ──dedup flag──▶ rebalance by url-hash bucket
         ──score (one pandas-UDF pass)──▶ rule flags + verdict + scrub
         ──▶ curated parquet, partitioned by url-hash bucket
              (dynamic partition overwrite ⇒ idempotent per bucket)
@@ -32,10 +32,12 @@ Scale design (100 TB / 10^12 docs):
 * the fact table is touched exactly once per run; the report passes
   read only the narrow curated columns (column pruning + bucket
   partition pruning do the work);
-* repartition key = (bucket, salt): url-hash buckets give resume
-  granularity, the salt sets how many cells (tasks, files) a bucket
-  is written as; both hash the url, so no domain concentrates in a
-  cell. AQE skew-join/coalesce is on in the session;
+* the write's one exchange is a rebalance by the url-hash bucket into
+  n_buckets partitions: buckets give resume granularity, and AQE
+  merges small partitions and splits large ones at the advisory
+  partition size, so the tasks and files a bucket is written as
+  follow its bytes. The key hashes the url, so no domain
+  concentrates in a bucket;
 * report passes aggregate on the cluster; what reaches the driver is
   bounded by buckets × categories, months, windows or top-N, never by
   hosts or urls;
@@ -63,7 +65,7 @@ from pcornet_data_curation_spark.operators.dedup import (
 from pcornet_data_curation_spark.operators.normalize import extraction_consistent_col
 from pcornet_data_curation_spark.operators.score import with_doc_stats
 from pcornet_data_curation_spark.operators.verdict import with_verdict
-from pcornet_data_curation_spark.plans.checkpoint import Manifest, bucket_col, salt_col
+from pcornet_data_curation_spark.plans.checkpoint import Manifest, bucket_col
 from pcornet_data_curation_spark.plans.lineage import LineageTracker
 from pcornet_data_curation_spark.plans.report_tail import (  # noqa: F401 (re-exported)
     EXPECTED_REPORTS,
@@ -82,14 +84,15 @@ CURATED_STATS = [
 ]
 
 def salted_repartition(df: DataFrame, cfg: PipelineConfig) -> DataFrame:
-    """Append (bucket, salt) url-hash columns and place each cell in its
-    own partition, id `bucket * salt_factor + salt`: each task writes
-    into a single bucket directory, and no sampling job runs."""
-    out = df.withColumn("bucket", bucket_col(cfg.n_buckets)).withColumn(
-        "salt", salt_col(cfg.salt_factor)
-    )
-    return out.repartitionById(
-        cfg.n_buckets * cfg.salt_factor, F.col("bucket") * cfg.salt_factor + F.col("salt")
+    """Append the url-hash `bucket` column and rebalance by it into
+    n_buckets hash partitions, so a task writes the files of about one
+    bucket. With AQE on, the rebalance merges small partitions and
+    splits large ones at the advisory partition size, so the files a
+    bucket is written as follow its bytes; in a stream (no AQE) it is a
+    plain hash exchange on `bucket`. (perfbench's replay imports this
+    function by name.)"""
+    return df.withColumn("bucket", bucket_col(cfg.n_buckets)).hint(
+        "rebalance", cfg.n_buckets, "bucket"
     )
 
 
@@ -186,7 +189,7 @@ def prepare_pages(pages: DataFrame, cfg: PipelineConfig) -> DataFrame:
         df = df.where(~robots_noindex_col(F.col("html")))
     # consume html AT THE SCAN: extraction_ok is derived here and html
     # dropped immediately, so the wide binary column never rides the
-    # dedup or (bucket, salt) shuffle or the Arrow round-trip of the
+    # dedup or bucket shuffle or the Arrow round-trip of the
     # scoring UDF (measured: carrying it through cost ~3x on the
     # curation pass). extraction_ok evaluates against the ORIGINAL
     # text column; the missing-text fill happens in the SAME projection.
@@ -226,7 +229,7 @@ def prepare_pages(pages: DataFrame, cfg: PipelineConfig) -> DataFrame:
 
 def finish_curation(df: DataFrame, cfg: PipelineConfig) -> DataFrame:
     """Second half of the row-level plan: `df` is `prepare_pages`'
-    output plus an exact_dup column. Salted repartition, doc stats,
+    output plus an exact_dup column. Rebalance by bucket, doc stats,
     rule verdict and scrub, the drop-mode keep fold, and the curated
     projection."""
     df = salted_repartition(df, cfg)
@@ -259,14 +262,14 @@ def curate(pages: DataFrame, cfg: PipelineConfig) -> DataFrame:
     `prepare_pages`, the batch dedup flag, `finish_curation`."""
     df = prepare_pages(pages, cfg)
     if cfg.dedup != "off":
-        # global dedup BEFORE the (bucket, salt) repartition: the
-        # dedup-shuffle output feeds straight into the (bucket, salt)
-        # exchange, and the survivor choice (min url) is a pure
-        # function of the full input, so a partial-bucket resume
-        # recomputes identical flags. 'flag' records exact_dup only;
-        # 'drop' also folds it into keep. Default 'off': the F1-parity
-        # contract is per-url verdicts, and dedup is a corpus-level
-        # decision the caller opts into (C4 drops, Gopher reports).
+        # global dedup BEFORE the bucket rebalance: the dedup-shuffle
+        # output feeds straight into the bucket exchange, and the
+        # survivor choice (min url) is a pure function of the full
+        # input, so a partial-bucket resume recomputes identical flags.
+        # 'flag' records exact_dup only; 'drop' also folds it into
+        # keep. Default 'off': the F1-parity contract is per-url
+        # verdicts, and dedup is a corpus-level decision the caller
+        # opts into (C4 drops, Gopher reports).
         if cfg.dedup_method == "near":
             df = with_near_dup_flag(df, cfg.near_threshold)
         else:

@@ -301,7 +301,6 @@ def build_reports(
         ("lookback_years", str(cfg.lookback_years)),
         ("lookback_cutoff", cfg.lookback_cutoff.isoformat()),
         ("n_buckets", str(cfg.n_buckets)),
-        ("salt_factor", str(cfg.salt_factor)),
         ("output_root", cfg.output_root),
     ]
 

@@ -4,9 +4,15 @@ Streaming file source.
 The stream runs the batch stage order: `plans.pipeline.prepare_pages`
 (lookback and noindex filters, scan projection, text repair), the dedup
 flag (here the stateful `streaming.stateful.stream_dedup_flag`), then
-`plans.pipeline.finish_curation` (salted repartition, scoring, verdict,
-scrub, drop-mode keep fold). Checkpointing is Spark's own exactly-once
-file-sink checkpoint — the batch pipeline's manifest is not used here.
+`plans.pipeline.finish_curation` (rebalance by bucket, scoring,
+verdict, scrub, drop-mode keep fold). A stream runs without AQE, so the
+rebalance is planned as a hash exchange on `bucket` into n_buckets
+partitions: at most n_buckets scoring tasks per micro-batch. That
+exchange also keeps the stateful dedup's output from feeding the
+scoring UDF directly, which fails on Spark 4.1 (ClassCastException:
+GenericInternalRow cannot be cast to UnsafeRow). Checkpointing is
+Spark's own exactly-once file-sink checkpoint — the batch pipeline's
+manifest is not used here.
 
 Observability: the curated stream carries `observe()` metrics
 (records / kept / scrub_hits per micro-batch) — the streaming analog

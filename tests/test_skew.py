@@ -1,17 +1,14 @@
 """Long-tail-domain skew handling (SURVEY §7 build item 7): 50% of the
-synthetic pages hit 3 hot domains; the salted (bucket, salt) repartition
-must still spread rows near-uniformly across partitions."""
+synthetic pages hit 3 hot domains; the url-hash bucket rebalance must
+still spread rows near-uniformly across buckets, and AQE sizes the
+files each bucket is written as."""
 
 import numpy as np
 from pyspark.sql import functions as F
 
 from pcornet_data_curation_spark.config import PipelineConfig
 from pcornet_data_curation_spark.datagen.pages import pages_df
-from pcornet_data_curation_spark.plans.pipeline import (
-    bucket_col,
-    salt_col,
-    salted_repartition,
-)
+from pcornet_data_curation_spark.plans.pipeline import salted_repartition
 
 
 def test_hot_domains_exist(spark):
@@ -23,45 +20,42 @@ def test_hot_domains_exist(spark):
     assert top > 4000 * 0.4  # the long tail is real
 
 
-def test_salted_repartition_balances(spark):
-    cfg = PipelineConfig(output_root="/tmp/unused", n_buckets=8, salt_factor=4)
+def test_write_cells_follow_the_data(spark, tmp_path):
+    """The curated write rebalances by bucket and AQE sizes its cells:
+    a small input is one file per bucket directory; with a lower
+    advisory partition size a bucket is split into several files,
+    holding the same rows."""
+    cfg = PipelineConfig(output_root="/tmp/unused", n_buckets=8)
     pages = pages_df(spark, 4000, partitions=4)
-    df = salted_repartition(pages, cfg)
-    cells = (
-        df.groupBy(F.spark_partition_id().alias("pid"))
-        .agg(
-            F.count(F.lit(1)).alias("count"),
-            F.min(F.col("bucket") * cfg.salt_factor + F.col("salt")).alias("lo"),
-            F.max(F.col("bucket") * cfg.salt_factor + F.col("salt")).alias("hi"),
-        )
-        .toPandas()
-    )
-    sizes = cells["count"].to_numpy()
-    # each (bucket, salt) cell is exactly one partition, placed by its
-    # id bucket * salt_factor + salt, so every task writes one bucket
-    # directory
-    n_cells = cfg.n_buckets * cfg.salt_factor
-    assert df.rdd.getNumPartitions() == n_cells
-    assert (cells["lo"] == cells["hi"]).all()
-    assert (cells["lo"] == cells["pid"]).all()
-    assert sorted(cells["pid"]) == list(range(n_cells))
-    # url-hash keys ignore the domain entirely, so hot domains cannot
-    # concentrate: the worst task is bounded by ~2.2x the mean
+
+    def write(path):
+        salted_repartition(pages, cfg).write.partitionBy("bucket").parquet(str(path))
+        return {
+            d.name: len(list(d.glob("*.parquet")))
+            for d in path.iterdir()
+            if d.name.startswith("bucket=")
+        }
+
+    files = write(tmp_path / "default")
+    assert len(files) == cfg.n_buckets
+    assert set(files.values()) == {1}, files
+
+    key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "16k")
+    try:
+        split = write(tmp_path / "split")
+    finally:
+        spark.conf.set(key, prev)
+    assert max(split.values()) >= 2, split
+    a = spark.read.parquet(str(tmp_path / "default"))
+    b = spark.read.parquet(str(tmp_path / "split"))
+    assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
+
+    # url-hash buckets ignore the domain entirely, so hot domains cannot
+    # concentrate: the largest bucket is bounded by ~2.2x the mean
+    sizes = np.array([r["count"] for r in a.groupBy("bucket").count().collect()])
     assert sizes.max() <= 2.2 * sizes.mean()
-
-
-def test_bucket_and_salt_are_independent_streams(spark):
-    pages = pages_df(spark, 2000, partitions=2)
-    both = (
-        pages.select(bucket_col(8).alias("b"), salt_col(4).alias("s"))
-        .groupBy("b", "s")
-        .count()
-        .toPandas()
-    )
-    # all 32 (bucket, salt) cells populated — salt actually subdivides
-    assert len(both) == 32
-    cv = np.std(both["count"]) / np.mean(both["count"])
-    assert cv < 0.5
 
 
 def _plan(df):
@@ -103,6 +97,22 @@ def test_plan_shapes_pinned(spark):
     exchanges = _re.findall(r"Exchange \w+", p)
     assert all("RoundRobinPartitioning" in e for e in exchanges), exchanges
     assert "DataFilters" in p or "Filter" in p.split("Exchange")[-1]
+
+    # resume: the pending-bucket predicate sits in the Filter below the
+    # bucket rebalance and the scoring UDF, so finished buckets are
+    # never shuffled or scored
+    from pcornet_data_curation_spark.plans.pipeline import curate
+
+    resume = curate(
+        pages_df(spark, 100, partitions=1), PipelineConfig(output_root="/tmp/unused")
+    ).where(F.col("bucket").isin([1, 5]))
+    lines = resume._jdf.queryExecution().optimizedPlan().toString().splitlines()
+    depth = {
+        op: next(i for i, ln in enumerate(lines) if op in ln)
+        for op in ("ArrowEvalPython", "RebalancePartitions", "IN (1,5)")
+    }
+    assert depth["ArrowEvalPython"] < depth["RebalancePartitions"] < depth["IN (1,5)"]
+    assert "Filter" in lines[depth["IN (1,5)"]]
 
     # minhash banding: the band self-join must NOT carry signatures.
     # At fixture scale the planner broadcasts the band join (no hash

@@ -8,14 +8,12 @@ divergence is an engine bug.
 
 import pandas as pd
 
+from pcornet_data_curation_spark.config import PipelineConfig
 from pcornet_data_curation_spark.datagen.pages import pages_df, pages_pdf
 from pcornet_data_curation_spark.operators.score import with_doc_stats
-from pcornet_data_curation_spark.operators.verdict import (
-    verdict_table,
-    violations,
-    with_verdict,
-)
+from pcornet_data_curation_spark.operators.verdict import with_verdict
 from pcornet_data_curation_spark.oracle.pandas_ref import reference_verdicts
+from pcornet_data_curation_spark.plans.pipeline import curate
 
 N = 1500
 
@@ -28,7 +26,8 @@ def _f1(tp, fp, fn):
 
 def test_keep_f1_and_scrub_byte_identity(spark):
     got = (
-        verdict_table(with_verdict(with_doc_stats(pages_df(spark, N, partitions=5))))
+        with_verdict(with_doc_stats(pages_df(spark, N, partitions=5)))
+        .select("url", "keep", "scrubbed_text")
         .toPandas()
         .sort_values("url")
         .reset_index(drop=True)
@@ -55,23 +54,13 @@ def test_flags_match_oracle(spark):
         assert (got[c].astype(bool) == ref[c].astype(bool)).all(), c
 
 
-def test_violations_long_table(spark):
-    v = with_verdict(with_doc_stats(pages_df(spark, 400, partitions=3)))
-    longv = violations(v).toPandas()
-    ref = reference_verdicts(pages_pdf(400))
-    flag_cols = [c for c in ref.columns if c.startswith("flag_")]
-    want = int(sum(ref[c].sum() for c in flag_cols))
-    assert len(longv) == want
-    assert set(longv.columns) == {"url", "rule_id", "severity"}
-
-
 def test_empty_input_schema_stable(spark):
     from pcornet_data_curation_spark.datagen.pages import PAGES_DDL
 
-    empty = spark.createDataFrame([], PAGES_DDL)
-    out = verdict_table(with_verdict(with_doc_stats(empty)))
+    cfg = PipelineConfig(output_root="/tmp/unused")
+    out = curate(spark.createDataFrame([], PAGES_DDL), cfg)
     assert out.count() == 0
-    assert [f.name for f in out.schema.fields] == ["url", "keep", "flags", "scrubbed_text"]
+    assert out.columns == curate(pages_df(spark, 50, partitions=2), cfg).columns
 
 
 def test_generator_spark_pandas_identity(spark):
