@@ -36,7 +36,8 @@ Scale design (100 TB / 10^12 docs):
   n_buckets partitions: buckets give resume granularity, and AQE
   merges small partitions and splits large ones at the advisory
   partition size, so the tasks and files a bucket is written as
-  follow its bytes. The key hashes the url, so no domain
+  follow its bytes (a stream, without AQE, places each bucket in a
+  partition of its own). The key hashes the url, so no domain
   concentrates in a bucket;
 * report passes aggregate on the cluster; what reaches the driver is
   bounded by buckets × categories, months, windows or top-N, never by
@@ -83,17 +84,21 @@ CURATED_STATS = [
     "ppl",
 ]
 
+
 def salted_repartition(df: DataFrame, cfg: PipelineConfig) -> DataFrame:
     """Append the url-hash `bucket` column and rebalance by it into
     n_buckets hash partitions, so a task writes the files of about one
     bucket. With AQE on, the rebalance merges small partitions and
     splits large ones at the advisory partition size, so the files a
-    bucket is written as follow its bytes; in a stream (no AQE) it is a
-    plain hash exchange on `bucket`. (perfbench's replay imports this
+    bucket is written as follow its bytes. A stream has no AQE, and
+    hashing the bucket ids into n_buckets partitions would leave some
+    empty and give others several buckets, so there each bucket is
+    placed in its own partition by id. (perfbench's replay imports this
     function by name.)"""
-    return df.withColumn("bucket", bucket_col(cfg.n_buckets)).hint(
-        "rebalance", cfg.n_buckets, "bucket"
-    )
+    df = df.withColumn("bucket", bucket_col(cfg.n_buckets))
+    if df.isStreaming:
+        return df.repartitionById(cfg.n_buckets, "bucket")
+    return df.hint("rebalance", cfg.n_buckets, "bucket")
 
 
 def lookback_filter(pages: DataFrame, cfg: PipelineConfig) -> DataFrame:

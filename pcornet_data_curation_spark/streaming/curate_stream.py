@@ -5,9 +5,9 @@ The stream runs the batch stage order: `plans.pipeline.prepare_pages`
 (lookback and noindex filters, scan projection, text repair), the dedup
 flag (here the stateful `streaming.stateful.stream_dedup_flag`), then
 `plans.pipeline.finish_curation` (rebalance by bucket, scoring,
-verdict, scrub, drop-mode keep fold). A stream runs without AQE, so the
-rebalance is planned as a hash exchange on `bucket` into n_buckets
-partitions: at most n_buckets scoring tasks per micro-batch. That
+verdict, scrub, drop-mode keep fold). A stream runs without AQE, so
+there the bucket exchange places each bucket in its own partition by
+id: n_buckets scoring tasks per micro-batch, one bucket each. That
 exchange also keeps the stateful dedup's output from feeding the
 scoring UDF directly, which fails on Spark 4.1 (ClassCastException:
 GenericInternalRow cannot be cast to UnsafeRow). Checkpointing is

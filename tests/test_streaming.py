@@ -3,6 +3,8 @@ stream must equal the batch pipeline's row-level output."""
 
 import os
 
+from pyspark.sql import functions as F
+
 from pcornet_data_curation_spark.config import PipelineConfig
 from pcornet_data_curation_spark.datagen.pages import pages_df
 from pcornet_data_curation_spark.plans.pipeline import curate
@@ -32,6 +34,14 @@ def test_stream_matches_batch(spark, tmp_path):
         .reset_index(drop=True)
     )
     assert got.equals(want)
+    # a stream has no AQE: each bucket is scored and written by a task
+    # of its own, so every sink file holds exactly one bucket
+    per_file = (
+        spark.read.parquet(sink)
+        .groupBy(F.input_file_name())
+        .agg(F.countDistinct("bucket").alias("n"))
+    )
+    assert {r["n"] for r in per_file.collect()} == {1}
     # checkpoint exists → exactly-once restart metadata present
     assert os.path.isdir(os.path.join(cfg.output_root, "stream_checkpoint"))
 
