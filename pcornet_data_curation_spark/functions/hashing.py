@@ -1,5 +1,5 @@
 """Hashing primitives for dedup / similarity: shingles, MinHash,
-SimHash, rolling fingerprints.
+SimHash.
 
 Pure numpy/pandas (shared by Spark pandas-UDFs and tests). All hash
 streams are counter-based and seed-fixed — no RNG state, fully
@@ -14,7 +14,6 @@ import numpy as np
 
 from pcornet_data_curation_spark.functions.textcore import tokenize
 
-MERSENNE_P = (1 << 61) - 1
 # MinHash works in the Mersenne-31 field: a,b,x < 2^31-1 keeps a*x+b
 # inside uint64 (vectorized numpy, no Python-bigint fallback).
 MINHASH_P = (1 << 31) - 1
@@ -140,21 +139,6 @@ def simhash64(text: str | None) -> int:
         if acc[i] > 0:
             out |= 1 << i
     return out
-
-
-def hamming64(a: int, b: int) -> int:
-    return bin((a ^ b) & MASK64).count("1")
-
-
-def rolling_fingerprint(text: str | None, base: int = 257, mod: int = MERSENNE_P) -> int:
-    """Polynomial rolling hash of the whole normalized document —
-    an order-sensitive content fingerprint (doc identity, not similarity)."""
-    if not text:
-        return 0
-    h = 0
-    for b in " ".join(tokenize(text)).lower().encode("utf-8"):
-        h = (h * base + b) % mod
-    return h
 
 
 def jaccard(a: set, b: set) -> float:

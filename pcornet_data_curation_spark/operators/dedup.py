@@ -35,9 +35,9 @@ from pcornet_data_curation_spark.functions import hashing as H
 def content_fp_col(text_col: str = "text") -> Column:
     """Exact-dedup fingerprint: xxhash64 of the whitespace/case
     normalized text, NULL text hashed as ''. The batch stage
-    (pipeline.with_exact_dup_flag) and the streaming one
-    (stateful.stream_dedup_flag) both key on it, so the two agree on
-    what a duplicate is."""
+    (pipeline.with_exact_dup_flag) and the stream's cross-batch
+    fingerprint store (streaming.curate_stream) both key on it, so the
+    two agree on what a duplicate is."""
     ws = "[ \\t\\n\\r\\f\\x0B]+"
     return F.xxhash64(
         F.lower(F.trim(F.regexp_replace(F.coalesce(F.col(text_col), F.lit("")), ws, " ")))

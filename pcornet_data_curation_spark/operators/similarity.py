@@ -198,34 +198,6 @@ def ivf_fit(
     return _kmeans_core(mat, n_centroids, iters, seed)
 
 
-def ivf_save(centroids: np.ndarray, path: str) -> None:
-    """Persist a fitted coarse quantizer as parquet (centroid_id,
-    centroid array<double>) — at 10^12 vectors the quantizer is fit
-    ONCE and reused by every subsequent assignment/probe job, not
-    refit per query; parquet (not .npy) so any engine/cluster node can
-    read it without numpy version coupling."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    t = pa.table(
-        {
-            "centroid_id": pa.array(range(len(centroids)), type=pa.int32()),
-            "centroid": pa.array([list(map(float, c)) for c in centroids],
-                                 type=pa.list_(pa.float64())),
-        }
-    )
-    pq.write_table(t, path)
-
-
-def ivf_load(path: str) -> np.ndarray:
-    """Load a quantizer written by ivf_save; rows are re-ordered by
-    centroid_id so cell ids are stable regardless of file layout."""
-    import pyarrow.parquet as pq
-
-    t = pq.read_table(path).sort_by("centroid_id")
-    return np.vstack([np.asarray(c, dtype=np.float64) for c in t.column("centroid").to_pylist()])
-
-
 def ivf_fit_pandas(
     parquet_path: str,
     n_centroids: int = 16,

@@ -9,8 +9,9 @@ One heavy distributed pass per run:
              (dynamic partition overwrite ⇒ idempotent per bucket)
 
 (`prepare_pages` and `finish_curation` are the two halves around the
-dedup flag; the streaming path composes the same two halves around its
-stateful flag.)
+dedup flag; the stream runs the same plan on each micro-batch, with a
+cross-batch fingerprint check added to the flag —
+streaming/curate_stream.py.)
 
 then the reporting tail (plans/report_tail.py): four exact aggregation
 passes over the curated table, projected once, bring bucket- and
@@ -36,9 +37,8 @@ Scale design (100 TB / 10^12 docs):
   n_buckets partitions: buckets give resume granularity, and AQE
   merges small partitions and splits large ones at the advisory
   partition size, so the tasks and files a bucket is written as
-  follow its bytes (a stream, without AQE, places each bucket in a
-  partition of its own). The key hashes the url, so no domain
-  concentrates in a bucket;
+  follow its bytes. The key hashes the url, so no domain concentrates
+  in a bucket;
 * report passes aggregate on the cluster; what reaches the driver is
   bounded by buckets × categories, months, windows or top-N, never by
   hosts or urls;
@@ -90,14 +90,9 @@ def salted_repartition(df: DataFrame, cfg: PipelineConfig) -> DataFrame:
     n_buckets hash partitions, so a task writes the files of about one
     bucket. With AQE on, the rebalance merges small partitions and
     splits large ones at the advisory partition size, so the files a
-    bucket is written as follow its bytes. A stream has no AQE, and
-    hashing the bucket ids into n_buckets partitions would leave some
-    empty and give others several buckets, so there each bucket is
-    placed in its own partition by id. (perfbench's replay imports this
-    function by name.)"""
+    bucket is written as follow its bytes. (perfbench's replay imports
+    this function by name.)"""
     df = df.withColumn("bucket", bucket_col(cfg.n_buckets))
-    if df.isStreaming:
-        return df.repartitionById(cfg.n_buckets, "bucket")
     return df.hint("rebalance", cfg.n_buckets, "bucket")
 
 
@@ -176,7 +171,7 @@ def with_near_dup_flag(df: DataFrame, threshold: float = 0.8) -> DataFrame:
 
 def prepare_pages(pages: DataFrame, cfg: PipelineConfig) -> DataFrame:
     """First half of the row-level plan, shared by `curate` and
-    `streaming.curate_stream`: lookback and noindex filters, one scan
+    `streaming.run_stream_once`: lookback and noindex filters, one scan
     projection to (url, warc_ts, text, lang, extraction_ok), then the
     opt-in text repairs. The dedup flag goes between this and
     `finish_curation`, so it fingerprints repaired text."""

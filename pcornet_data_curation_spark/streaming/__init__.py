@@ -5,7 +5,4 @@ is an engine extension: the same row-level curation transforms applied
 over a file-source stream with exactly-once sinks.
 """
 
-from pcornet_data_curation_spark.streaming.curate_stream import (  # noqa: F401
-    curate_stream,
-    run_stream_once,
-)
+from pcornet_data_curation_spark.streaming.curate_stream import run_stream_once  # noqa: F401

@@ -1,69 +1,89 @@
-"""Streaming curation: the batch row-level plan over a Structured
-Streaming file source.
+"""Streaming curation: the batch row-level plan run on each micro-batch
+of a Structured Streaming file source (`foreachBatch`, where a
+micro-batch is a batch frame with AQE on): `prepare_pages`,
+`with_exact_dup_flag`, `finish_curation`. Only the cross-batch
+first-seen check is stream-specific.
 
-The stream runs the batch stage order: `plans.pipeline.prepare_pages`
-(lookback and noindex filters, scan projection, text repair), the dedup
-flag (here the stateful `streaming.stateful.stream_dedup_flag`), then
-`plans.pipeline.finish_curation` (rebalance by bucket, scoring,
-verdict, scrub, drop-mode keep fold). A stream runs without AQE, so
-there the bucket exchange places each bucket in its own partition by
-id: n_buckets scoring tasks per micro-batch, one bucket each. That
-exchange also keeps the stateful dedup's output from feeding the
-scoring UDF directly, which fails on Spark 4.1 (ClassCastException:
-GenericInternalRow cannot be cast to UnsafeRow). Checkpointing is
-Spark's own exactly-once file-sink checkpoint — the batch pipeline's
-manifest is not used here.
+Exact dedup: within a micro-batch the minimum url of each fingerprint
+survives (the batch rule); across micro-batches the earlier batch
+survives, since an emitted row is never rewritten. A row is also
+flagged if its fingerprint is in `<output>/stream_fingerprints`, a flat
+parquet directory of `(_fp long, batch long)` rows: each micro-batch
+appends one file with the fingerprints of its unflagged rows and
+probes only rows with `batch < batch_id`, so a replay never matches
+its own earlier attempt. The store grows with history (SCALE.md §7).
 
-Observability: the curated stream carries `observe()` metrics
-(records / kept / scrub_hits per micro-batch) — the streaming analog
-of the batch pipeline's verdict_summary — captured by a
-StreamingQueryListener and appended to <output>/stream_metrics as one
-driver-written parquet file per drain.
+Output: `<output>/stream_curated/batch_id=<id>`, written with dynamic
+partition overwrite, so a replay rewrites only its own partition;
+checkpoint `<output>/stream_checkpoint`. Each micro-batch's records /
+kept / scrub_hits come from a batch `Observation` and are appended to
+`<output>/stream_metrics`, one driver-written parquet file per drain.
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQueryListener
 
 from pcornet_data_curation_spark.config import PipelineConfig
 from pcornet_data_curation_spark.datagen.pages import PAGES_DDL
+from pcornet_data_curation_spark.operators.dedup import content_fp_col
 from pcornet_data_curation_spark.operators.normalize import arrow_schema, rows_table
-from pcornet_data_curation_spark.plans.pipeline import finish_curation, prepare_pages
+from pcornet_data_curation_spark.plans.pipeline import (
+    finish_curation,
+    prepare_pages,
+    with_exact_dup_flag,
+)
 from pcornet_data_curation_spark.sources.tables import append_small_table
-from pcornet_data_curation_spark.streaming.stateful import stream_dedup_flag
+from pcornet_data_curation_spark.streaming.neardup_stream import path_exists
 
-OBSERVATION_NAME = "curation"
 STREAM_METRICS_DDL = (
     "batch_id bigint, records bigint, kept bigint, scrub_hits bigint"
 )
+FINGERPRINT_DDL = "_fp long, batch long"
 
 
-def curate_stream(
+def _first_seen_flag(df: DataFrame, store: str, batch_id: int) -> DataFrame:
+    """`df` plus `exact_dup` and `_fp`: the batch rule within the
+    micro-batch, OR'd with membership of `_fp` in the store's rows from
+    earlier batches. The store is semi-joined to the micro-batch's
+    fingerprints first, so only matching store rows reach the distinct
+    (a distinct over a 10^6-row store cost about 1 s per micro-batch
+    more, 4 cores)."""
+    df = with_exact_dup_flag(df).withColumn("_fp", content_fp_col())
+    if not path_exists(df.sparkSession, store):
+        return df
+    seen = (
+        df.sparkSession.read.schema(FINGERPRINT_DDL)
+        .parquet(store)
+        .where(F.col("batch") < batch_id)
+        .join(df.select("_fp"), "_fp", "left_semi")
+        .select("_fp")
+        .distinct()
+        .withColumn("_seen", F.lit(True))
+    )
+    return (
+        df.join(seen, "_fp", "left")
+        .withColumn("exact_dup", F.col("exact_dup") | F.col("_seen").isNotNull())
+        .drop("_seen")
+    )
+
+
+def run_stream_once(
     spark: SparkSession, input_dir: str, cfg: PipelineConfig
-) -> DataFrame:
-    """readStream over a parquet directory of pages → curated stream
-    (same columns as the batch curated table), built from the batch
-    plan's two halves: `prepare_pages`, then the dedup flag, then
-    `finish_curation`.
+) -> str:
+    """Drain all available input once (Trigger.AvailableNow), one
+    micro-batch of at most 8 files at a time, into
+    `<output>/stream_curated` (same columns as the batch curated table,
+    plus the `batch_id` partition); returns that path.
 
-    cfg.dedup on a stream: the batch stage's corpus-wide groupBy+join
-    cannot run on an unbounded stream, so the flag is computed by the
-    stateful first-seen operator instead (stream_dedup_flag: survivor =
-    first arrival rather than the batch stage's global min url — see
-    its docstring); 'drop' folds it into keep in `finish_curation`, as
-    in batch. Near-dup mode stays batch-only: MinHash banding +
-    connected components need corpus-wide self-joins with no
-    bounded-state streaming equivalent.
-    """
+    Near-dup mode stays batch-only: MinHash banding + connected
+    components need corpus-wide self-joins (for streams, see
+    `streaming.neardup_stream`). The url blocklist pre-filter is not
+    wired into the stream."""
     if cfg.url_blocklist:
-        # the distinct-host suffix optimization is batch-only; a
-        # stream can apply operators.urlfilter.url_filter semantics via
-        # a stream-static join on exploded host suffixes, but that path
-        # is not wired — refuse loudly rather than silently skip
         raise ValueError(
             "url_blocklist pre-filter is batch-only; filter the source "
             "with operators.urlfilter.url_filter before streaming, or "
@@ -71,7 +91,7 @@ def curate_stream(
         )
     if cfg.dedup != "off" and cfg.dedup_method == "near":
         raise ValueError(
-            "dedup_method='near' is not wired into curate_stream (the "
+            "dedup_method='near' is not wired into run_stream_once (the "
             "batch operator's corpus-wide LSH banding + connected "
             "components has no unbounded-stream equivalent); use "
             "dedup_method='exact' here, and for streaming near-dup "
@@ -80,97 +100,65 @@ def curate_stream(
             "MinHash banding against a persisted signature store "
             "(recipe: SCALE.md 'Streaming near-dedup')"
         )
-    stream = (
+    out = os.path.join(cfg.output_root, "stream_curated")
+    legacy = os.path.join(out, "_spark_metadata")
+    if path_exists(spark, legacy):
+        raise ValueError(
+            f"{legacy} exists: this output root was written by the older "
+            "file-sink stream, whose dedup state cannot be carried over; "
+            "start the stream in a fresh output root"
+        )
+    store = os.path.join(cfg.output_root, "stream_fingerprints")
+    rows: list[tuple[int, int, int, int]] = []
+
+    def on_batch(pages: DataFrame, batch_id: int) -> None:
+        df = prepare_pages(pages, cfg)
+        if cfg.dedup != "off":
+            # persisted across the sink write and the store append
+            df = _first_seen_flag(df, store, batch_id).persist()
+        else:
+            df = df.withColumn("exact_dup", F.lit(False))
+        obs = Observation()
+        try:
+            (
+                finish_curation(df, cfg)
+                .observe(
+                    obs,
+                    F.count(F.lit(1)).alias("records"),
+                    F.sum(F.col("keep").cast("long")).alias("kept"),
+                    F.sum(F.col("scrub_hit").cast("long")).alias("scrub_hits"),
+                )
+                .withColumn("batch_id", F.lit(batch_id))
+                .write.mode("overwrite")
+                .option("partitionOverwriteMode", "dynamic")
+                .partitionBy("batch_id")
+                .parquet(out)
+            )
+            if cfg.dedup != "off":
+                (
+                    df.where(~F.col("exact_dup"))
+                    .select("_fp", F.lit(batch_id).cast("long").alias("batch"))
+                    .coalesce(1)
+                    .write.mode("append")
+                    .parquet(store)
+                )
+        finally:
+            df.unpersist()
+        m = obs.get
+        rows.append((batch_id, m["records"], m["kept"] or 0, m["scrub_hits"] or 0))
+
+    (
         spark.readStream.schema(PAGES_DDL)
         .option("maxFilesPerTrigger", 8)
         .parquet(input_dir)
+        .writeStream.foreachBatch(on_batch)
+        .option("checkpointLocation", os.path.join(cfg.output_root, "stream_checkpoint"))
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
     )
-    df = prepare_pages(stream, cfg)
-    if cfg.dedup != "off":
-        df = stream_dedup_flag(df)
-    else:
-        df = df.withColumn("exact_dup", F.lit(False))
-    return finish_curation(df, cfg)
-
-
-class _MetricsListener(StreamingQueryListener):
-    """Collects the observe() metrics of every micro-batch. Driver-side
-    list of one small row per batch — O(batches), never row data."""
-
-    def __init__(self) -> None:
-        self.rows: list[tuple[int, int, int, int]] = []
-        self.terminated = False
-
-    def onQueryStarted(self, event) -> None:  # noqa: N802
-        pass
-
-    def onQueryProgress(self, event) -> None:  # noqa: N802
-        om = event.progress.observedMetrics
-        if OBSERVATION_NAME in om:
-            m = om[OBSERVATION_NAME]
-            self.rows.append(
-                (
-                    event.progress.batchId,
-                    int(m["records"] or 0),
-                    int(m["kept"] or 0),
-                    int(m["scrub_hits"] or 0),
-                )
-            )
-
-    def onQueryIdle(self, event) -> None:  # noqa: N802
-        pass
-
-    def onQueryTerminated(self, event) -> None:  # noqa: N802
-        self.terminated = True
-
-
-def run_stream_once(
-    spark: SparkSession, input_dir: str, cfg: PipelineConfig
-) -> str:
-    """Drain all available input once (Trigger.AvailableNow) into a
-    parquet sink with an exactly-once checkpoint; returns sink path.
-    Per-micro-batch observe() metrics land in <output>/stream_metrics."""
-    out = os.path.join(cfg.output_root, "stream_curated")
-    ckpt = os.path.join(cfg.output_root, "stream_checkpoint")
-    observed = curate_stream(spark, input_dir, cfg).observe(
-        OBSERVATION_NAME,
-        F.count(F.lit(1)).alias("records"),
-        F.sum(F.col("keep").cast("long")).alias("kept"),
-        F.sum(F.col("scrub_hit").cast("long")).alias("scrub_hits"),
-    )
-    listener = _MetricsListener()
-    spark.streams.addListener(listener)
-    try:
-        q = (
-            observed.writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        # Python listener events are delivered ASYNCHRONOUSLY — progress
-        # rows can land after awaitTermination returns. Event order is
-        # guaranteed (progress before terminated), so waiting for the
-        # termination event means every batch's metrics have arrived.
-        import time as _time
-
-        deadline = _time.monotonic() + 30.0
-        while not listener.terminated and _time.monotonic() < deadline:
-            _time.sleep(0.1)
-        if not listener.terminated:
-            import logging
-
-            logging.getLogger(__name__).warning(
-                "stream_metrics may be INCOMPLETE: the listener's "
-                "termination event did not arrive within 30s of "
-                "awaitTermination; %d batch rows captured so far",
-                len(listener.rows),
-            )
-    finally:
-        spark.streams.removeListener(listener)
     append_small_table(
-        rows_table(listener.rows, arrow_schema(STREAM_METRICS_DDL)),
+        rows_table(rows, arrow_schema(STREAM_METRICS_DDL)),
         os.path.join(cfg.output_root, "stream_metrics"),
     )
     return out

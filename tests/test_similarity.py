@@ -187,16 +187,10 @@ def test_ivf_partitioned_table_prunes_scan(spark, tmp_path):
 
     from pyspark.sql import functions as F
 
-    from pcornet_data_curation_spark.operators.similarity import (
-        ivf_load,
-        ivf_probe_cells,
-        ivf_save,
-    )
+    from pcornet_data_curation_spark.operators.similarity import ivf_probe_cells
 
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    qpath = str(tmp_path / "quantizer.parquet")
-    ivf_save(ivf_fit(emb, n_centroids=8), qpath)
-    cents = ivf_load(qpath)  # the fit-once / reuse-everywhere lifecycle
+    cents = ivf_fit(emb, n_centroids=8)
     path = str(tmp_path / "ivf_store")
     with_ivf_cell(emb, cents).write.partitionBy("ivf_cell").parquet(path)
     store = spark.read.parquet(path)
@@ -221,27 +215,3 @@ def test_ivf_partitioned_table_prunes_scan(spark, tmp_path):
     # and the store exposes every cell, so the probe subset is strict
     all_cells = {r["ivf_cell"] for r in store.select("ivf_cell").distinct().collect()}
     assert len(all_cells) > 2
-
-
-def test_ivf_save_load_roundtrip(spark, tmp_path):
-    """A persisted quantizer reloads bit-identically and drives the
-    same cell assignments and top-k as the in-memory fit — the
-    fit-once / reuse-everywhere lifecycle a 10^12-vector corpus needs."""
-    import numpy as np
-
-    from pcornet_data_curation_spark.operators.similarity import (
-        ivf_fit,
-        ivf_load,
-        ivf_save,
-        with_ivf_cell,
-    )
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    cents = ivf_fit(emb, n_centroids=8)
-    path = str(tmp_path / "quantizer.parquet")
-    ivf_save(cents, path)
-    loaded = ivf_load(path)
-    assert np.array_equal(cents, loaded)
-    a = with_ivf_cell(emb, cents).select("vec_id", "ivf_cell").toPandas().sort_values("vec_id")
-    b = with_ivf_cell(emb, loaded).select("vec_id", "ivf_cell").toPandas().sort_values("vec_id")
-    assert a.reset_index(drop=True).equals(b.reset_index(drop=True))

@@ -1,9 +1,10 @@
 """Structured Streaming lift of the curation transforms: a drained
 stream must equal the batch pipeline's row-level output."""
 
+import datetime as dt
 import os
 
-from pyspark.sql import functions as F
+import pytest
 
 from pcornet_data_curation_spark.config import PipelineConfig
 from pcornet_data_curation_spark.datagen.pages import pages_df
@@ -34,14 +35,6 @@ def test_stream_matches_batch(spark, tmp_path):
         .reset_index(drop=True)
     )
     assert got.equals(want)
-    # a stream has no AQE: each bucket is scored and written by a task
-    # of its own, so every sink file holds exactly one bucket
-    per_file = (
-        spark.read.parquet(sink)
-        .groupBy(F.input_file_name())
-        .agg(F.countDistinct("bucket").alias("n"))
-    )
-    assert {r["n"] for r in per_file.collect()} == {1}
     # checkpoint exists → exactly-once restart metadata present
     assert os.path.isdir(os.path.join(cfg.output_root, "stream_checkpoint"))
 
@@ -66,9 +59,8 @@ def test_stream_matches_batch(spark, tmp_path):
 
 
 def _write_noindex_mojibake_pages(spark, indir):
-    """One parquet file (one micro-batch), one warc_ts (so the stream's
-    first-seen survivor is the batch stage's min url): a noindex page,
-    a clean page, a cp1252-mojibake page and its repaired twin."""
+    """One parquet file (one micro-batch): a noindex page, a clean page,
+    a cp1252-mojibake page and its repaired twin."""
     import datetime as dt
 
     t = dt.datetime(2026, 1, 1, 12, 0, 0)
@@ -108,8 +100,6 @@ def test_stream_metrics_observed_per_batch(spark, tmp_path):
     """observe() metrics: one row per micro-batch in stream_metrics,
     whose sums equal the sink's actual record/keep/scrub counts — the
     streaming analog of verdict_summary."""
-    import os
-
     indir = str(tmp_path / "pages_in")
     # 4 input files at maxFilesPerTrigger=8 -> at least one batch;
     # write in two chunks to encourage multiple batches
@@ -127,96 +117,56 @@ def test_stream_metrics_observed_per_batch(spark, tmp_path):
     # batch ids are unique (exactly-once accounting)
     assert metrics["batch_id"].is_unique
 
-    # exact dedup is now stream-supported (stateful first-seen,
-    # test_stream_curate_with_dedup_flag_and_drop); only NEAR-dup mode
-    # remains batch-only: clear error, not silent wrong data
-    import pytest as _pytest
-
-    from pcornet_data_curation_spark.streaming import curate_stream
-    with _pytest.raises(ValueError, match="stream_neardup_flag_batch"):
-        curate_stream(spark, indir, PipelineConfig(
+    # exact dedup runs on a stream (test_stream_curate_with_dedup_flag_and_drop);
+    # NEAR-dup mode and the url blocklist stay batch-only: a clear
+    # error before the stream starts, not silently wrong data
+    with pytest.raises(ValueError, match="stream_neardup_flag_batch"):
+        run_stream_once(spark, indir, PipelineConfig(
             output_root=str(tmp_path / "x"), dedup="flag", dedup_method="near"))
+    with pytest.raises(ValueError, match="url_blocklist"):
+        run_stream_once(spark, indir, PipelineConfig(
+            output_root=str(tmp_path / "x"), url_blocklist=str(tmp_path / "bl.txt")))
+
+
+DDL = "url string, warc_ts timestamp, html binary, text string, lang string"
+T0 = dt.datetime(2026, 1, 1, 12, 0, 0)
+BODY = ("genuinely substantive sentence " * 30).strip()
+# two micro-batches: /c repeats /a's content one batch later
+ROWS1 = [
+    ("https://ex.com/a", T0, None, BODY, "en"),
+    ("https://ex.com/b", T0, None, BODY + " variant two distinct", "en"),
+]
+ROWS2 = [
+    ("https://ex.com/c", T0, None, BODY, "en"),          # dup of /a, later batch
+    ("https://ex.com/d", T0, None, "tiny.", "en"),       # unique, fails rules
+]
+
+
+def _drain_batches(spark, tmp_path, batches, cfg):
+    """Append each row list as one input file and drain it with
+    run_stream_once on one output root: one micro-batch per list."""
+    indir = str(tmp_path / "in")
+    for rows in batches:
+        spark.createDataFrame(rows, DDL).coalesce(1).write.mode("append").parquet(indir)
+        sink = run_stream_once(spark, indir, cfg)
+    return indir, sink
 
 
 def test_stream_curate_with_dedup_flag_and_drop(spark, tmp_path):
-    """cfg.dedup wired into the stream (r3 task #8): the stateful
-    first-seen operator flags duplicate content across micro-batches;
-    'drop' additionally folds the flag into keep inside curate — the
-    batch stage's downstream semantics with a first-seen survivor."""
-    import datetime as dt
-    import time
-
-    import pytest
-    from pyspark.sql.streaming import StreamingQueryListener
-
+    """cfg.dedup on a stream: a fingerprint already stored by an earlier
+    micro-batch flags the later copy; 'drop' additionally folds the
+    flag into keep in finish_curation — the batch stage's downstream
+    semantics with an earlier-batch survivor."""
     from pcornet_data_curation_spark.operators.dedup import content_fp_col
-    from pcornet_data_curation_spark.streaming.curate_stream import curate_stream
-
-    t = dt.datetime(2026, 1, 1, 12, 0, 0)
-    body = ("genuinely substantive sentence " * 30).strip()
-    rows1 = [
-        (f"https://ex.com/a", t, None, body, "en"),
-        (f"https://ex.com/b", t, None, body + " variant two distinct", "en"),
-    ]
-    rows2 = [
-        (f"https://ex.com/c", t, None, body, "en"),          # dup of /a, later batch
-        (f"https://ex.com/d", t, None, "tiny.", "en"),       # unique, fails rules
-    ]
-    ddl = "url string, warc_ts timestamp, html binary, text string, lang string"
-    indir = str(tmp_path / "in")
-    out = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-
-    class StateRows(StreamingQueryListener):
-        """The dedup state's numRowsTotal of every micro-batch."""
-
-        def __init__(self):
-            self.rows, self.terminated = [], False
-
-        def onQueryStarted(self, event):
-            pass
-
-        def onQueryProgress(self, event):
-            self.rows += [op.numRowsTotal for op in event.progress.stateOperators]
-
-        def onQueryIdle(self, event):
-            pass
-
-        def onQueryTerminated(self, event):
-            self.terminated = True
-
-    def drain(rows, cfg):
-        spark.createDataFrame(rows, ddl).coalesce(1).write.mode("append").parquet(indir)
-        listener.terminated = False
-        q = (
-            curate_stream(spark, indir, cfg)
-            .writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-        # listener events arrive asynchronously; progress precedes
-        # termination
-        deadline = time.monotonic() + 30.0
-        while not listener.terminated and time.monotonic() < deadline:
-            time.sleep(0.1)
 
     cfg = PipelineConfig(output_root=str(tmp_path / "o"), n_buckets=4, dedup="drop")
-    listener = StateRows()
-    spark.streams.addListener(listener)
-    try:
-        drain(rows1, cfg)
-        drain(rows2, cfg)
-    finally:
-        spark.streams.removeListener(listener)
-    # one state row per distinct fingerprint: the stateful operator
-    # runs once per micro-batch
-    fps = spark.createDataFrame(rows1 + rows2, ddl).select(content_fp_col()).distinct()
-    assert listener.rows[-1] == fps.count()
+    _, sink = _drain_batches(spark, tmp_path, [ROWS1, ROWS2], cfg)
+    # the store holds each fingerprint seen so far
+    fps = spark.createDataFrame(ROWS1 + ROWS2, DDL).select(content_fp_col()).distinct()
+    store = spark.read.parquet(os.path.join(cfg.output_root, "stream_fingerprints"))
+    assert store.select("_fp").distinct().count() == fps.count()
 
-    got = spark.read.parquet(out).toPandas().set_index("url")
+    got = spark.read.parquet(sink).toPandas().set_index("url")
     assert not got.loc["https://ex.com/a", "exact_dup"]      # first seen survives
     assert got.loc["https://ex.com/c", "exact_dup"]          # cross-batch duplicate
     assert not got.loc["https://ex.com/b", "exact_dup"]
@@ -226,7 +176,7 @@ def test_stream_curate_with_dedup_flag_and_drop(spark, tmp_path):
     # for the same content (dedup never changes a survivor's keep)
     batch = (
         curate(
-            spark.createDataFrame(rows1 + rows2, ddl),
+            spark.createDataFrame(ROWS1 + ROWS2, DDL),
             PipelineConfig(output_root=str(tmp_path / "b"), n_buckets=4),
         )
         .toPandas()
@@ -234,13 +184,56 @@ def test_stream_curate_with_dedup_flag_and_drop(spark, tmp_path):
     )
     assert got.loc["https://ex.com/a", "keep"] == batch.loc["https://ex.com/a", "keep"]
 
-    # near-dup mode on a stream is refused loudly
-    with pytest.raises(ValueError, match="stream_neardup_flag_batch"):
-        curate_stream(
-            spark, indir,
-            PipelineConfig(output_root=str(tmp_path / "o2"), n_buckets=4,
-                           dedup="drop", dedup_method="near"),
-        )
+
+def test_stream_within_batch_survivor_is_min_url(spark, tmp_path):
+    """Within one micro-batch the batch rule picks the survivor: the
+    minimum url, whatever the arrival times."""
+    later = T0 + dt.timedelta(hours=1)
+    rows = [
+        ("https://ex.com/a", later, None, BODY, "en"),
+        ("https://ex.com/b", T0, None, BODY, "en"),
+    ]
+    cfg = PipelineConfig(output_root=str(tmp_path / "o"), n_buckets=4, dedup="flag")
+    _, sink = _drain_batches(spark, tmp_path, [rows], cfg)
+    got = spark.read.parquet(sink).toPandas().set_index("url")["exact_dup"]
+    assert got.to_dict() == {"https://ex.com/a": False, "https://ex.com/b": True}
+
+
+def test_stream_replayed_batch_rewrites_its_partition(spark, tmp_path):
+    """A micro-batch replayed after a lost commit rewrites its own
+    batch_id partition with the same rows and flags; it never matches
+    the fingerprints its earlier attempt stored."""
+    cfg = PipelineConfig(output_root=str(tmp_path / "o"), n_buckets=4, dedup="flag")
+    indir, sink = _drain_batches(spark, tmp_path, [ROWS1, ROWS2], cfg)
+    cols = ["url", "batch_id", "keep", "exact_dup", "scrubbed_text"]
+    before = spark.read.parquet(sink).select(*cols).orderBy("url").toPandas()
+
+    commits = os.path.join(cfg.output_root, "stream_checkpoint", "commits")
+    last = max(int(f) for f in os.listdir(commits) if f.isdigit())
+    for name in (str(last), f".{last}.crc"):
+        if os.path.exists(os.path.join(commits, name)):
+            os.remove(os.path.join(commits, name))
+    run_stream_once(spark, indir, cfg)
+
+    after = spark.read.parquet(sink).select(*cols).orderBy("url").toPandas()
+    assert after.equals(before)
+    assert after.set_index("url")["exact_dup"].to_dict() == {
+        "https://ex.com/a": False, "https://ex.com/b": False,
+        "https://ex.com/c": True, "https://ex.com/d": False,
+    }
+    # the replay ran: the last batch has a metrics row from each attempt
+    metrics = spark.read.parquet(os.path.join(cfg.output_root, "stream_metrics")).toPandas()
+    assert sorted(metrics["batch_id"]) == [0, last, last]
+
+
+def test_stream_refuses_a_file_sink_root(spark, tmp_path):
+    """An output root written by the older file-sink stream is refused
+    by path: its dedup state cannot move into the fingerprint store."""
+    cfg = PipelineConfig(output_root=str(tmp_path / "o"), n_buckets=4)
+    legacy = tmp_path / "o" / "stream_curated" / "_spark_metadata"
+    legacy.mkdir(parents=True)
+    with pytest.raises(ValueError, match="_spark_metadata"):
+        run_stream_once(spark, str(tmp_path / "in"), cfg)
 
 
 def test_stream_neardup_flag_batch_store(spark, tmp_path):

@@ -74,23 +74,6 @@ def test_fingerprint_normalization(spark):
     assert fp[1] == fp[2] == fp[3] != fp[4]
 
 
-def test_rolling_fingerprint_order_sensitive():
-    from pcornet_data_curation_spark.functions.hashing import (
-        hamming64,
-        rolling_fingerprint,
-    )
-
-    a = rolling_fingerprint("the quick brown fox")
-    b = rolling_fingerprint("the quick brown fox")
-    c = rolling_fingerprint("fox brown quick the")  # same words, reordered
-    assert a == b  # deterministic
-    assert a != c  # order-sensitive (content identity, not similarity)
-    assert rolling_fingerprint("") == 0 and rolling_fingerprint(None) == 0
-    # whitespace-normalization robustness
-    assert rolling_fingerprint("the  quick\tbrown\nfox") == a
-    assert hamming64(0b1011, 0b0010) == 2
-
-
 def test_bpe_token_count_behaviour(spark):
     from pcornet_data_curation_spark.operators.textanalysis import with_bpe_token_count
 
