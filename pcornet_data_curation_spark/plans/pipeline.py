@@ -3,8 +3,9 @@
 One heavy distributed pass per run:
 
   pages ──lookback/noindex filter, scan projection, text repair
-        ──dedup flag──▶ rebalance by url-hash bucket
-        ──score (one pandas-UDF pass)──▶ rule flags + verdict + scrub
+        ──dedup flag──▶ score (one pandas-UDF pass, on the scan's or
+        the dedup join's tasks)──▶ rule flags + verdict + scrub
+        ──curated projection──▶ rebalance by url-hash bucket
         ──▶ curated parquet, partitioned by url-hash bucket
              (dynamic partition overwrite ⇒ idempotent per bucket)
 
@@ -34,18 +35,20 @@ Scale design (100 TB / 10^12 docs):
   read only the narrow curated columns (column pruning + bucket
   partition pruning do the work);
 * the write's one exchange is a rebalance by the url-hash bucket into
-  n_buckets partitions: buckets give resume granularity, and AQE
-  merges small partitions and splits large ones at the advisory
-  partition size, so the tasks and files a bucket is written as
-  follow its bytes. The key hashes the url, so no domain concentrates
-  in a bucket;
+  n_buckets partitions, above scoring, so it carries the curated
+  columns and sizes only the write: buckets give resume granularity,
+  and AQE merges small partitions and splits large ones at the
+  advisory partition size, so the tasks and files a bucket is written
+  as follow its bytes. The key hashes the url, so no domain
+  concentrates in a bucket;
 * report passes aggregate on the cluster; what reaches the driver is
   bounded by buckets × categories, months, windows or top-N, never by
   hosts or urls;
 * resume filters pending buckets with the bucket predicate, pushed
-  into the scan's Filter below scoring: every scanned page is hashed
-  (the input is not bucketed), but finished buckets are never scored
-  or written; only the `curated` re-read prunes bucket directories.
+  into the scan's Filter below scoring and the rebalance: every
+  scanned page is hashed (the input is not bucketed), but finished
+  buckets are never scored, shuffled or written; only the `curated`
+  re-read prunes bucket directories.
 """
 
 from __future__ import annotations
@@ -229,10 +232,12 @@ def prepare_pages(pages: DataFrame, cfg: PipelineConfig) -> DataFrame:
 
 def finish_curation(df: DataFrame, cfg: PipelineConfig) -> DataFrame:
     """Second half of the row-level plan: `df` is `prepare_pages`'
-    output plus an exact_dup column. Rebalance by bucket, doc stats,
-    rule verdict and scrub, the drop-mode keep fold, and the curated
-    projection."""
-    df = salted_repartition(df, cfg)
+    output plus an exact_dup column. Doc stats, rule verdict and scrub,
+    the drop-mode keep fold, the curated projection, then the rebalance
+    by bucket. Scoring runs on the tasks of the stage that feeds it
+    (the scan's splits, or the dedup join's partitions), and the
+    rebalance sizes only the write; its exchange carries the curated
+    columns (`scrubbed_text`, not `text`)."""
     df = with_doc_stats(df)
     df = with_verdict(df, cfg.rule_overrides)
     flag_cols = [R.flag_name(r) for r in R.active_rules(cfg.rule_overrides)]
@@ -242,11 +247,11 @@ def finish_curation(df: DataFrame, cfg: PipelineConfig) -> DataFrame:
     # from the curated table (reports never need it again);
     # extraction_ok was derived at the scan (html never left stage 0)
     scrub_hit = ~F.col("scrubbed_text").eqNullSafe(F.col("text"))
-    return df.select(
+    curated = df.select(
         "url",
         "warc_ts",
         "lang",
-        "bucket",
+        bucket_col(cfg.n_buckets).alias("bucket"),  # 4th; rebalanced below
         *CURATED_STATS,
         *flag_cols,
         "keep",
@@ -255,6 +260,7 @@ def finish_curation(df: DataFrame, cfg: PipelineConfig) -> DataFrame:
         "exact_dup",
         "scrubbed_text",
     )
+    return salted_repartition(curated, cfg)
 
 
 def curate(pages: DataFrame, cfg: PipelineConfig) -> DataFrame:
@@ -262,10 +268,11 @@ def curate(pages: DataFrame, cfg: PipelineConfig) -> DataFrame:
     `prepare_pages`, the batch dedup flag, `finish_curation`."""
     df = prepare_pages(pages, cfg)
     if cfg.dedup != "off":
-        # global dedup BEFORE the bucket rebalance: the dedup-shuffle
-        # output feeds straight into the bucket exchange, and the
-        # survivor choice (min url) is a pure function of the full
-        # input, so a partial-bucket resume recomputes identical flags.
+        # global dedup BEFORE scoring: scoring runs on the dedup
+        # join's output (scored first, that join would carry text and
+        # scrubbed_text together), and the survivor choice (min url)
+        # is a pure function of the full input, so a partial-bucket
+        # resume recomputes identical flags.
         # 'flag' records exact_dup only; 'drop' also folds it into
         # keep. Default 'off': the F1-parity contract is per-url
         # verdicts, and dedup is a corpus-level decision the caller

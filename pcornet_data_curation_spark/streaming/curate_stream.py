@@ -16,14 +16,16 @@ its own earlier attempt. The store grows with history (SCALE.md §7).
 Output: `<output>/stream_curated/batch_id=<id>`, written with dynamic
 partition overwrite, so a replay rewrites only its own partition;
 checkpoint `<output>/stream_checkpoint`. Each micro-batch's records /
-kept / scrub_hits come from a batch `Observation` and are appended to
-`<output>/stream_metrics`, one driver-written parquet file per drain.
+kept / scrub_hits come from a batch `Observation` and land in
+`<output>/stream_metrics`, one driver-written row per batch id (a
+replayed batch replaces its row).
 """
 
 from __future__ import annotations
 
 import os
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
@@ -36,7 +38,7 @@ from pcornet_data_curation_spark.plans.pipeline import (
     prepare_pages,
     with_exact_dup_flag,
 )
-from pcornet_data_curation_spark.sources.tables import append_small_table
+from pcornet_data_curation_spark.sources.tables import write_small_table
 from pcornet_data_curation_spark.streaming.neardup_stream import path_exists
 
 STREAM_METRICS_DDL = (
@@ -157,8 +159,13 @@ def run_stream_once(
         .start()
         .awaitTermination()
     )
-    append_small_table(
-        rows_table(rows, arrow_schema(STREAM_METRICS_DDL)),
-        os.path.join(cfg.output_root, "stream_metrics"),
-    )
+    # a replayed batch_id replaces its earlier row: one row per batch,
+    # so the table's sums match the sink
+    path = os.path.join(cfg.output_root, "stream_metrics")
+    schema = arrow_schema(STREAM_METRICS_DDL)
+    if os.path.isdir(path):
+        ran = {r[0] for r in rows}
+        earlier = pq.read_table(path, schema=schema).to_pylist()
+        rows += [tuple(r.values()) for r in earlier if r["batch_id"] not in ran]
+    write_small_table(rows_table(sorted(rows), schema), path)
     return out

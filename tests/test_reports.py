@@ -308,3 +308,28 @@ def test_host_extraction_userinfo_with_ipv6_not_phantom(spark):
     df = spark.createDataFrame(rows, "url string, keep boolean")
     _, s = domain_tables(host_pass(df, top_n=5), top_n=5)
     assert s["hosts_n"] == 2 and s["null_host_n"] == 2  # real host + NULL
+
+
+def test_host_col_matches_lower_on_non_ascii(spark):
+    """`host_col` lowers ASCII hosts without `lower()` and sends every
+    other host through it: on mixed-case ASCII, German, Turkish and
+    Greek hosts, with port and userinfo variants, it equals `F.lower`
+    of the extracted raw host."""
+    from pcornet_data_curation_spark.operators.reports import AUTHORITY_RE, host_col
+
+    hosts = ["Cdn.Example.COM", "MÜNCHEN.de", "İSTANBUL.example", "ΣΟΦΙΑ.gr", "Straße.DE"]
+    urls = [
+        u
+        for h in hosts
+        for u in (f"https://{h}/a", f"HTTP://{h}:8080/b", f"https://User:Pw@{h}:443/c")
+    ] + ["https://[::1]/x", "not a url", None]
+    df = spark.createDataFrame([(u,) for u in urls], "url string")
+    authority = F.regexp_extract("url", AUTHORITY_RE, 1)
+    raw = F.regexp_extract(F.regexp_replace(authority, "^[^@]*@", ""), "^([^:\\[][^:]*)", 1)
+    got = df.select(
+        "url",
+        host_col(F.col("url")).alias("host"),
+        F.when(raw == "", None).otherwise(F.lower(raw)).alias("want"),
+    ).collect()
+    assert all(r["host"] == r["want"] for r in got), got
+    assert {r["host"] for r in got} >= {"cdn.example.com", "münchen.de", "σοφια.gr"}

@@ -98,21 +98,32 @@ def test_plan_shapes_pinned(spark):
     assert all("RoundRobinPartitioning" in e for e in exchanges), exchanges
     assert "DataFilters" in p or "Filter" in p.split("Exchange")[-1]
 
-    # resume: the pending-bucket predicate sits in the Filter below the
-    # bucket rebalance and the scoring UDF, so finished buckets are
-    # never shuffled or scored
+    # resume: the pending-bucket predicate sits in the scan's Filter
+    # below the scoring UDF, and the bucket rebalance is the plan's
+    # root above them, so finished buckets are never scored or
+    # shuffled; the rebalance carries the curated columns, not `text`
     from pcornet_data_curation_spark.plans.pipeline import curate
 
-    resume = curate(
-        pages_df(spark, 100, partitions=1), PipelineConfig(output_root="/tmp/unused")
-    ).where(F.col("bucket").isin([1, 5]))
-    lines = resume._jdf.queryExecution().optimizedPlan().toString().splitlines()
+    pages = pages_df(spark, 100, partitions=1)
+    resume = curate(pages, PipelineConfig(output_root="/tmp/unused")).where(
+        F.col("bucket").isin([1, 5])
+    )
+    plan = resume._jdf.queryExecution().optimizedPlan()
+    lines = plan.toString().splitlines()
     depth = {
         op: next(i for i, ln in enumerate(lines) if op in ln)
         for op in ("ArrowEvalPython", "RebalancePartitions", "IN (1,5)")
     }
-    assert depth["ArrowEvalPython"] < depth["RebalancePartitions"] < depth["IN (1,5)"]
+    assert depth["RebalancePartitions"] < depth["ArrowEvalPython"] < depth["IN (1,5)"]
     assert "Filter" in lines[depth["IN (1,5)"]]
+    assert plan.nodeName() == "RebalancePartitions"
+    rebalanced = list(plan.child().schema().fieldNames())
+    assert "text" not in rebalanced and "scrubbed_text" in rebalanced
+
+    # one scoring pass in every dedup mode
+    for kw in ({}, {"dedup": "flag"}, {"dedup": "flag", "dedup_method": "near"}):
+        df = curate(pages, PipelineConfig(output_root="/tmp/unused", **kw))
+        assert _plan(df).count("ArrowEvalPython") == 1, kw
 
     # minhash banding: the band self-join must NOT carry signatures.
     # At fixture scale the planner broadcasts the band join (no hash

@@ -221,9 +221,11 @@ def test_stream_replayed_batch_rewrites_its_partition(spark, tmp_path):
         "https://ex.com/a": False, "https://ex.com/b": False,
         "https://ex.com/c": True, "https://ex.com/d": False,
     }
-    # the replay ran: the last batch has a metrics row from each attempt
+    # the replay ran (its commit is back) and replaced its metrics row
+    assert os.path.exists(os.path.join(commits, str(last)))
     metrics = spark.read.parquet(os.path.join(cfg.output_root, "stream_metrics")).toPandas()
-    assert sorted(metrics["batch_id"]) == [0, last, last]
+    assert sorted(metrics["batch_id"]) == [0, last]
+    assert metrics["records"].sum() == len(after)
 
 
 def test_stream_refuses_a_file_sink_root(spark, tmp_path):
