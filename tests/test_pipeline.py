@@ -193,6 +193,71 @@ def test_lookback_filter(spark, outdir):
     assert oldest is None or oldest >= dt.datetime(2023, 1, 1)
 
 
+# every report of a run in which no page survives: all counts 0, sums
+# and extremes NULL (Spark `sum`/`min` over no rows), percentages 0.0
+EMPTY_RUN_REPORTS = {
+    "rule_summary": [],
+    "pages_tag": [
+        ("curated", "url", 0, 0, None, None, 0),
+        ("curated", "lang", 0, 0, None, None, 0),
+        ("curated", "scrubbed_text", 0, 0, None, 0, 0),
+    ],
+    "lang_dist": [
+        (c, i, 0, 0.0, 0)
+        for i, c in enumerate([
+            "en", "de", "fr", "es", "it", "pt", "nl",
+            "NULL or missing", "Values outside of CDM specifications",
+        ])
+    ],
+    "warc_ym_dist": [],
+    "tokens_by_keep": [],
+    "ppl_stats": [(0, None, None, None, None, None, None, None, None, None)],
+    "warc_minmax": [("warc_ts", 0, None, None, None, None, None)],
+    "verdict_summary": [(0, None, None)],
+    "url_unique": [(0, 0, 0)],
+    "scrub_summary": [(0, None, 0.0)],
+    "run_metadata": [
+        ("spark_version", None), ("run_date", "2026-01-01"), ("lookback_years", "10"),
+        ("lookback_cutoff", "2016-01-01"), ("n_buckets", "4"), ("output_root", None),
+    ],
+    "extraction_summary": [(0, None, 0.0)],
+    "dash_activity": [],
+    "referential_summary": [(0, None, None, None, None, None, None, 0.0)],
+    "domain_dist": [],
+    "domain_summary": [(0, None, 0, 0.0, 0.0)],
+    "dedup_summary": [("off", "n/a", 0, None, 0.0)],
+}
+
+
+def test_empty_run_reports(spark, outdir, capsys):
+    """A run in which no page survives the filters writes no curated
+    file; it still reads the store with the schema the plan writes,
+    produces every expected report and fires check 1.03."""
+    import json
+
+    from pcornet_data_curation_spark.__main__ import main
+    from pcornet_data_curation_spark.plans.pipeline import EXPECTED_REPORTS
+
+    cfg = PipelineConfig(output_root=outdir, n_buckets=4)
+    res = run_pipeline(spark, pages_df(spark, 20).limit(0), cfg)
+    assert res["stats"] == {"buckets_done": 4, "buckets_processed_now": 4, "rows": 0, "kept": 0}
+    assert sorted(os.listdir(res["reports"])) == sorted(EXPECTED_REPORTS)
+    for name, want in EMPTY_RUN_REPORTS.items():
+        table = pq.read_table(os.path.join(res["reports"], name))
+        rows = [tuple(r.values()) for r in table.to_pylist()]
+        if name == "run_metadata":  # engine version and output path vary
+            rows = [(k, None if k in ("spark_version", "output_root") else v) for k, v in rows]
+        assert rows == want, name
+    exc = pq.read_table(res["exceptions"]).to_pylist()
+    viability = [(e["observed"], e["exception"]) for e in exc if e["check_id"] == "1.03"]
+    assert viability == [(0.0, True)]
+
+    capsys.readouterr()
+    assert main(["check", "--output", outdir]) == 0
+    fired = json.loads(capsys.readouterr().out.strip().splitlines()[-1])["exceptions"]
+    assert "1.03" in {e["check_id"] for e in fired}
+
+
 def test_scrub_summary_and_completeness(spark, tmp_path):
     from pcornet_data_curation_spark.config import PipelineConfig
     from pcornet_data_curation_spark.datagen.pages import pages_df

@@ -267,3 +267,120 @@ def test_write_small_table_replaces_a_spark_table(spark, tmp_path):
     df = spark.read.parquet(path)
     assert df.schema.simpleString() == "struct<id:bigint>"
     assert sorted(r["id"] for r in df.collect()) == [7, 8]
+
+
+def _close(a, b) -> bool:
+    if isinstance(a, float) and isinstance(b, float):
+        return a == b or abs(a - b) <= 1e-12 * max(abs(a), abs(b))
+    return a == b
+
+
+def _rows_close(got: list[tuple], want: list[tuple]) -> bool:
+    key = lambda r: [(v is None, str(v)) for v in r]  # noqa: E731
+    got, want = sorted(got, key=key), sorted(want, key=key)
+    return len(got) == len(want) and all(
+        len(g) == len(w) and all(_close(x, y) for x, y in zip(g, w)) for g, w in zip(got, want)
+    )
+
+
+def test_tail_reports_match_registry_operators(spark, tmp_path):
+    """The tail's reports over a hand-built store equal the registry's
+    per-report operators (DuckDB-oracled, no code shared with the
+    passes). The store holds NULL url, lang, warc_ts, n_tokens, ppl,
+    scrubbed_text and keep values, which a pipeline run never writes
+    for `keep`; urls repeat, so per-bucket url distincts must add up."""
+    import datetime as dt
+    import random
+
+    import pyarrow.parquet as pq
+    from pyspark.sql import functions as F
+
+    from pcornet_data_curation_spark.config import PipelineConfig
+    from pcornet_data_curation_spark.operators import reports as rp
+    from pcornet_data_curation_spark.operators import rules as R
+    from pcornet_data_curation_spark.plans.checkpoint import bucket_col
+    from pcornet_data_curation_spark.plans.lineage import LineageTracker
+    from pcornet_data_curation_spark.plans.report_tail import LANG_VALUESET, run_report_tail
+
+    n_buckets = 4
+    cfg = PipelineConfig(output_root=str(tmp_path / "out"), n_buckets=n_buckets)
+    flag_cols = [R.flag_name(r) for r in R.active_rules(cfg.rule_overrides)]
+    rnd = random.Random(18)
+
+    def some(values, null_share=0.15):
+        return None if rnd.random() < null_share else rnd.choice(values)
+
+    stamps = [dt.datetime(y, m, 15, 6) for y in (1850, 2019, 2021, 2022, 2024, 2025, 2027)
+              for m in (1, 6, 11)]
+    rows = [
+        (
+            some([f"https://h{i % 7}.example.com/{i % 40}", f"ftp://x/{i % 5}", "no url"]),
+            some(["en", "de", "de-AT", "EN", "english", "fr"]),
+            some(stamps),
+            some(LANG_VALUESET + ["zz", "xx"]),
+            some(list(range(0, 400, 7))),
+            some([1.5, 2.25, 10.0, 55.5, 300.125, 1e4 / 3]),
+            some([True, False]),
+            rnd.random() < 0.3,
+            rnd.random() < 0.9,
+            rnd.random() < 0.1,
+            some([f"doc {i % 50}", "boilerplate"]),
+            *[rnd.random() < 0.2 for _ in flag_cols],
+        )
+        for i in range(400)
+    ]
+    ddl = (
+        "url string, lang string, warc_ts timestamp, lang_pred string, n_tokens bigint, "
+        "ppl double, keep boolean, scrub_hit boolean, extraction_ok boolean, "
+        "exact_dup boolean, scrubbed_text string, " + ", ".join(f"{c} boolean" for c in flag_cols)
+    )
+    rep = spark.createDataFrame(rows, ddl).withColumn("bucket", bucket_col(n_buckets))
+    assert rep.select("bucket").distinct().count() == n_buckets
+    run_report_tail(
+        spark, rep, cfg, Manifest.load_or_init(cfg.output_root, n_buckets), LineageTracker(),
+        None, list(range(n_buckets)),
+    )
+
+    def report(name):
+        table = pq.read_table(os.path.join(cfg.output_root, "reports", name))
+        return [tuple(r.values()) for r in table.to_pylist()]
+
+    def ref(df):
+        return [tuple(r) for r in df.collect()]
+
+    url_valid = F.col("url").rlike("^https?://[^ \\t\\n\\r\\f]+$")
+    lang_valid = F.col("lang").rlike("^[a-z]{2}(-[A-Za-z]{2})?$")
+    windows = rp.dash_windows(
+        cfg.run_date, [(f"last_{y}y", {"years": y}) for y in (1, 2, 3, 4, 5)]
+    )
+    want = {
+        "pages_tag": rp.tag_profile(
+            rep, ["url", "lang", "scrubbed_text"], "curated",
+            valid_exprs={"url": url_valid, "lang": lang_valid},
+        ),
+        "lang_dist": rp.n_pct(rep, "lang_pred", LANG_VALUESET, distinct_col="url"),
+        "tokens_by_keep": rp.cont_stats(rep, "n_tokens", group=["keep"]),
+        "ppl_stats": rp.cont_stats(rep, "ppl"),
+        "warc_minmax": rp.minmax_profile(rep, "warc_ts", future_after=cfg.run_date.isoformat()),
+        "dash_activity": rp.dash_window_counts(rep, "warc_ts", windows, "url"),
+    }
+    for name, df in want.items():
+        assert _rows_close(report(name), ref(df)), name
+    assert len(report("tokens_by_keep")) == 3  # true, false and NULL keep
+    assert len(report("dash_activity")) == 5
+
+    # referential_summary from one plain aggregation
+    tok, keep = F.col("n_tokens"), F.col("keep")
+    lang_pred = F.col("lang_pred")
+    (records, kept_null_scrub, null_url, nonvalueset, kept_mean, dropped_mean), = ref(rep.agg(
+        F.count(F.lit(1)),
+        F.sum((keep & F.col("scrubbed_text").isNull()).cast("long")),
+        F.sum(F.col("url").isNull().cast("long")),
+        F.sum((lang_pred.isNotNull() & ~lang_pred.isin(LANG_VALUESET)).cast("long")),
+        F.avg(F.when(keep, tok)),
+        F.avg(F.when(~keep, tok)),
+    ))
+    assert _rows_close(report("referential_summary"), [(
+        records, kept_null_scrub, null_url, nonvalueset, kept_mean, dropped_mean, 0,
+        dropped_mean / kept_mean,
+    )])
