@@ -30,9 +30,9 @@ from a window over the *aggregated* frame (bounded by |domain|), not a
 second scan.
 
 The pipeline's own reports do not call these per report: the last
-section holds its four exact passes (bucket_pass, global_pass,
-host_pass, percentile_pass) whose small results
-plans/report_tail.py turns into the same reports on the driver.
+section holds its three exact passes (bucket_pass, global_pass,
+host_pass) whose small results plans/report_tail.py turns into the
+same reports on the driver.
 """
 
 from __future__ import annotations
@@ -42,7 +42,6 @@ import string
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 NULL_CATEGORY = "NULL or missing"
 OVERFLOW_CATEGORY = "Values outside of CDM specifications"
@@ -556,26 +555,16 @@ def domain_dist(
 
 
 # ---------------------------------------------------------------------------
-# Reporting-tail passes: the pipeline's reports come from these few exact
-# aggregations over the curated table. Each brings a frame bounded by
-# buckets x categories / months / windows, or by top-N, to the driver
-# (Arrow, via toPandas), where the reports are assembled.
+# Reporting-tail passes: the pipeline's reports come from these three
+# exact aggregations over the curated table. Each brings a frame bounded
+# by buckets x categories / months / windows, or by top-N, to the
+# driver, where the reports are assembled.
 # ---------------------------------------------------------------------------
 
 
 def _collect(df: DataFrame) -> list[dict]:
-    """Rows of a small aggregate frame. pandas turns a NULL long into
-    NaN; a long is never NaN, so those become None again. (A NULL
-    double stays NaN: the passes only emit doubles whose NULL is
-    implied by a count of zero.)"""
-    longs = [
-        f.name for f in df.schema.fields if isinstance(f.dataType, (T.LongType, T.IntegerType))
-    ]
-    rows = df.toPandas().to_dict("records")
-    for r in rows:
-        for c in longs:
-            r[c] = None if r[c] is None or r[c] != r[c] else int(r[c])
-    return rows
+    """Rows of a small aggregate frame."""
+    return [r.asDict() for r in df.collect()]
 
 
 def floor_pct(n: int | None, total: int, digits: int = 2) -> float | None:
@@ -605,7 +594,11 @@ def bucket_pass(
     'lang' (the n_pct category of lang_pred), 'ym' (month of a plausible
     warc_ts), 'keep', 'window' (each trailing window containing
     warc_ts) and 'url_valid' (valid urls only). All groups carry the
-    same aggregates; the driver reads each from the dim it needs.
+    same aggregates; the driver reads each from the dim it needs, and
+    derives what another aggregate fixes: a column's NULLs are n minus
+    its count, the valid urls are the n of dim 'url_valid', the
+    off-valueset langs that of the lang dim's overflow key, and the
+    kept/dropped token sums those of the keep dim's keys.
 
     countDistinct(url) per group is exact across buckets: bucket is a
     hash of url, so a url lives in one bucket and the per-bucket counts
@@ -653,13 +646,9 @@ def bucket_pass(
         F.count(F.lit(1)).alias("n"),
         F.count(url).alias("url_n"),
         F.countDistinct(url).alias("url_distinct"),
-        nsum(url.isNull()).alias("url_null"),
-        F.sum(F.when(url_valid, 1).otherwise(0)).alias("url_valid_n"),
         F.count(lang).alias("lang_n"),
-        nsum(lang.isNull()).alias("lang_null"),
         F.sum(F.when(lang_valid, 1).otherwise(0)).alias("lang_valid_n"),
         F.count(text).alias("text_n"),
-        nsum(text.isNull()).alias("text_null"),
         *[nsum(F.col(c)).alias(c) for c in flag_cols],
         nsum(keep).alias("kept"),
         F.count(keep).alias("keep_n"),
@@ -667,28 +656,19 @@ def bucket_pass(
         nsum(~F.col("extraction_ok")).alias("mismatch_n"),
         nsum(F.col("exact_dup")).alias("dup_n"),
         F.count(ts).alias("ts_n"),
-        nsum(ts.isNull()).alias("ts_null"),
         F.date_format(F.min(ts), "yyyy_MM").alias("min_ym"),
         F.date_format(F.max(ts), "yyyy_MM").alias("max_ym"),
         nsum(ts < pre_1900).alias("implausible_n"),
         nsum(ts > run_ts).alias("future_n"),
         F.count(tok).alias("tok_n"),
-        nsum(tok.isNull()).alias("tok_null"),
         F.min(tok).alias("tok_min"),
         F.sum(tok).alias("tok_sum"),
         F.max(tok).alias("tok_max"),
         F.count(ppl).alias("ppl_n"),
-        nsum(ppl.isNull()).alias("ppl_null"),
         F.min(ppl).alias("ppl_min"),
         F.sum(ppl).alias("ppl_sum"),
         F.max(ppl).alias("ppl_max"),
         nsum(keep & text.isNull()).alias("kept_null_scrub_n"),
-        nsum(~F.col("lang_pred").isin(lang_valueset) & F.col("lang_pred").isNotNull())
-        .alias("lang_nonvalueset_n"),
-        F.sum(F.when(keep, tok)).alias("kept_tok_sum"),
-        F.count(F.when(keep, tok)).alias("kept_tok_n"),
-        F.sum(F.when(~keep, tok)).alias("drop_tok_sum"),
-        F.count(F.when(~keep, tok)).alias("drop_tok_n"),
         nsum(F.col("misplaced")).alias("misplaced"),
     ]
     exploded = rep.select("*", F.explode(dims).alias("_d")).select(
@@ -698,14 +678,25 @@ def bucket_pass(
 
 
 def global_pass(rep: DataFrame, lang_valid) -> dict:
-    """The distinct counts that do not add up across buckets (lang and
-    scrubbed_text are not functions of url), in one global aggregation."""
+    """The figures that do not add up across buckets, in one global
+    aggregation: the distinct counts of lang and scrubbed_text (not
+    functions of url), and the exact percentiles of ppl and of n_tokens
+    per keep value (`tok_p_<key>`, keyed like the bucket pass's keep
+    dim). Spark expands each row once for all of them."""
     lang = F.col("lang")
+    arr = ", ".join(repr(p) for p in DEFAULT_PCTS)
+    keep_where = {"true": "keep", "false": "NOT keep", None: "keep IS NULL"}
     return _collect(
         rep.agg(
             F.countDistinct(lang).alias("lang_distinct"),
             F.countDistinct(F.when(lang_valid, lang)).alias("lang_valid_distinct"),
             F.countDistinct("scrubbed_text").alias("text_distinct"),
+            *[
+                F.expr(f"percentile(n_tokens, array({arr})) FILTER (WHERE {where})")
+                .alias(f"tok_p_{key}")
+                for key, where in keep_where.items()
+            ],
+            F.expr(f"percentile(ppl, array({arr}))").alias("ppl_p"),
         )
     )[0]
 
@@ -771,20 +762,6 @@ def domain_tables(host_rows: list[dict], top_n: int = 20) -> tuple[list[tuple], 
         f"top{top_n}_share_pct": floor_pct(topn, records or 0, 4),
     }
     return dist, summary
-
-
-def percentile_pass(rep: DataFrame, pcts: tuple[float, ...] = DEFAULT_PCTS) -> list[dict]:
-    """Exact percentiles of n_tokens and ppl over GROUPING SETS ((keep),
-    ()) in one aggregation; `gid` is 0 for the per-keep rows and 1 for
-    the grand-total row."""
-    arr = ", ".join(repr(p) for p in pcts)
-    return _collect(
-        rep.groupingSets([["keep"], []], "keep").agg(
-            F.grouping_id().alias("gid"),
-            F.expr(f"percentile(n_tokens, array({arr}))").alias("tok_p"),
-            F.expr(f"percentile(ppl, array({arr}))").alias("ppl_p"),
-        )
-    )
 
 
 def url_filter_pass(flagged: DataFrame) -> dict:

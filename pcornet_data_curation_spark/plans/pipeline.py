@@ -14,7 +14,7 @@ dedup flag; the stream runs the same plan on each micro-batch, with a
 cross-batch fingerprint check added to the flag —
 streaming/curate_stream.py.)
 
-then the reporting tail (plans/report_tail.py): four exact aggregation
+then the reporting tail (plans/report_tail.py): three exact aggregation
 passes over the curated table, projected once, bring bucket- and
 category-sized results to the driver, which builds the per-partition
 conformance reports, the normalized metrics table, the threshold
@@ -28,7 +28,8 @@ the curated write; the tail's bucket pass counts each bucket this run
 wrote and marks it done in the manifest before the other passes run,
 so a run killed in between leaves those buckets pending for the resume
 to rewrite. The manifest's store-format guard means `curated` always
-has the schema `finish_curation` writes, and is read once per run.
+has the schema `finish_curation` writes; it is read once per run, with
+that schema, so a run that curated no row still reports.
 
 Scale design (100 TB / 10^12 docs):
 * the fact table is touched exactly once per run; the report passes

@@ -5,15 +5,16 @@ Mirrors the reference's split between the query run
 (data_curation_tables.sas) and the downstream normalization + EDC
 report (normalization.sas / edc_report.sas):
 
-* query run — four passes over the curated table, projected once
+* query run — three passes over the curated table, projected once
   (operators/reports.py): per (bucket, dim, key) additive counts, sums,
   min/max and countDistinct(url), and the rows stored outside their
   url's bucket (`checkpoint.bucket_col`, checked per row); the global
-  non-additive distincts; the top-N hosts plus totals; exact
-  percentiles over GROUPING SETS ((keep), ()) (plus the url
-  pre-filter's counts when it ran). Every frame brought to the driver
-  is bounded by buckets x categories, months, windows or top-N, never
-  by hosts or urls.
+  non-additive distincts and exact percentiles; the top-N hosts plus
+  totals (plus the url pre-filter's counts when it ran). Each figure
+  is computed once: what one aggregate fixes (a column's NULLs are n
+  minus its count) is derived here, not aggregated again. Every frame
+  brought to the driver is bounded by buckets x categories, months,
+  windows or top-N, never by hosts or urls.
 * marks — the bucket pass's dim 'all' rows are also each bucket's
   manifest mark (rows, kept): the buckets this run wrote are marked
   done right after that pass, so a bucket is counted once and is done
@@ -187,6 +188,12 @@ def _mean(rows: list[dict], c: str, n: str):
     return _sum(rows, c, n) / count if count else None
 
 
+def _nulls(rows: list[dict], n: str):
+    """Spark `sum(isnull(x))` of the partials, from `count(x)` in `n`:
+    count(*) - count(x), NULL when there is no row."""
+    return _count(rows, "n") - _count(rows, n) if rows else None
+
+
 def _pct_values(p) -> list:
     """The percentile array of a group (NULL when it had no values)."""
     return [None] * len(rp.DEFAULT_PCTS) if p is None else [float(x) for x in p]
@@ -205,9 +212,8 @@ def _months(lo: str, hi: str) -> list[str]:
 
 def build_reports(
     by_bucket: list[dict],
-    distincts: dict,
+    overall: dict,
     hosts: list[dict],
-    pcts: list[dict],
     url_counts: dict | None,
     cfg: PipelineConfig,
     flag_cols: list[str],
@@ -238,16 +244,17 @@ def build_reports(
         for c in flag_cols
     ]
 
-    url_valid_distinct = _count(dims.get("url_valid", []), "url_distinct")
+    url_valid = dims.get("url_valid", [])
     text_n = _count(every, "text_n")
     out["pages_tag"] = [
         ("curated", "url", _count(every, "url_n"), _count(every, "url_distinct"),
-         _sum(every, "url_null"), _sum(every, "url_valid_n"), url_valid_distinct),
-        ("curated", "lang", _count(every, "lang_n"), distincts["lang_distinct"],
-         _sum(every, "lang_null"), _sum(every, "lang_valid_n"),
-         distincts["lang_valid_distinct"]),
-        ("curated", "scrubbed_text", text_n, distincts["text_distinct"],
-         _sum(every, "text_null"), text_n, distincts["text_distinct"]),
+         _nulls(every, "url_n"), _count(url_valid, "n") if every else None,
+         _count(url_valid, "url_distinct")),
+        ("curated", "lang", _count(every, "lang_n"), overall["lang_distinct"],
+         _nulls(every, "lang_n"), _sum(every, "lang_valid_n"),
+         overall["lang_valid_distinct"]),
+        ("curated", "scrubbed_text", text_n, overall["text_distinct"],
+         _nulls(every, "text_n"), text_n, overall["text_distinct"]),
     ]
 
     langs = keyed("lang")
@@ -262,25 +269,24 @@ def build_reports(
     ym = {k: _count(v, "n") for k, v in keyed("ym").items()}
     out["warc_ym_dist"] = [(m, ym.get(m, 0)) for m in (_months(min(ym), max(ym)) if ym else [])]
 
-    tok_p = {(r["gid"], r["keep"]): r["tok_p"] for r in pcts}
-    ppl_p = next((r["ppl_p"] for r in pcts if r["gid"] == 1), None)
+    keeps = keyed("keep")
     keep_of = {"true": True, "false": False, None: None}
-    out["tokens_by_keep"] = []
-    for key, rows in sorted(keyed("keep").items(), key=lambda kv: (kv[0] is None, kv[0] or "")):
-        p = tok_p.get((0, keep_of[key]))
-        out["tokens_by_keep"].append((
-            keep_of[key], _count(rows, "tok_n"), _sum(rows, "tok_null"),
+    out["tokens_by_keep"] = [
+        (
+            keep_of[key], _count(rows, "tok_n"), _nulls(rows, "tok_n"),
             _min(rows, "tok_min", "tok_n"), _mean(rows, "tok_sum", "tok_n"),
-            _max(rows, "tok_max", "tok_n"), *_pct_values(p),
-        ))
+            _max(rows, "tok_max", "tok_n"), *_pct_values(overall[f"tok_p_{key}"]),
+        )
+        for key, rows in sorted(keeps.items(), key=lambda kv: (kv[0] is None, kv[0] or ""))
+    ]
     out["ppl_stats"] = [(
-        _count(every, "ppl_n"), _sum(every, "ppl_null"), _min(every, "ppl_min", "ppl_n"),
+        _count(every, "ppl_n"), _nulls(every, "ppl_n"), _min(every, "ppl_min", "ppl_n"),
         _mean(every, "ppl_sum", "ppl_n"), _max(every, "ppl_max", "ppl_n"),
-        *_pct_values(ppl_p),
+        *_pct_values(overall["ppl_p"]),
     )]
 
     out["warc_minmax"] = [(
-        "warc_ts", _count(every, "ts_n"), _sum(every, "ts_null"),
+        "warc_ts", _count(every, "ts_n"), _nulls(every, "ts_n"),
         _min(every, "min_ym", "ts_n"), _max(every, "max_ym", "ts_n"),
         _sum(every, "implausible_n"), _sum(every, "future_n"),
     )]
@@ -314,11 +320,12 @@ def build_reports(
     # orphan/integrity family (reference EDC orphan-record checks): kept
     # rows must carry text, a row lives in its url's bucket, dropped docs
     # averaging LONGER than kept ones suggests an inverted predicate
-    kept_mean = _mean(every, "kept_tok_sum", "kept_tok_n")
-    dropped_mean = _mean(every, "drop_tok_sum", "drop_tok_n")
+    kept_mean = _mean(keeps.get("true", []), "tok_sum", "tok_n")
+    dropped_mean = _mean(keeps.get("false", []), "tok_sum", "tok_n")
+    nonvalueset = _count(langs.get(rp.OVERFLOW_CATEGORY, []), "n") if every else None
     out["referential_summary"] = [(
-        records, _sum(every, "kept_null_scrub_n"), _sum(every, "url_null"),
-        _sum(every, "lang_nonvalueset_n"), kept_mean, dropped_mean, _sum(every, "misplaced"),
+        records, _sum(every, "kept_null_scrub_n"), _nulls(every, "url_n"),
+        nonvalueset, kept_mean, dropped_mean, _sum(every, "misplaced"),
         (dropped_mean or 0.0) / kept_mean if kept_mean is not None and kept_mean > 0 else 0.0,
     )]
 
@@ -405,11 +412,9 @@ def run_report_tail(
         manifest.mark_done(b, *counted.get(b, (0, 0)))
     manifest.save()
     with tracker.stage("report_global_pass"):
-        distincts = rp.global_pass(rep, lang_valid)
+        overall = rp.global_pass(rep, lang_valid)
     with tracker.stage("report_host_pass"):
         hosts = rp.host_pass(rep, DOMAIN_TOP_N)
-    with tracker.stage("report_percentile_pass"):
-        pcts = rp.percentile_pass(rep)
     url_counts = None
     if url_flagged is not None:
         with tracker.stage("report_url_filter_pass"):
@@ -417,7 +422,7 @@ def run_report_tail(
 
     with tracker.stage("report_build"):
         rows = build_reports(
-            by_bucket, distincts, hosts, pcts, url_counts, cfg,
+            by_bucket, overall, hosts, url_counts, cfg,
             flag_cols, windows, spark.version,
         )
         tables = {
