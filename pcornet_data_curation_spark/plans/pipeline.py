@@ -352,13 +352,15 @@ def run_pipeline(
                 )
 
         # ---- reporting over done + just-written buckets; the tail
-        # marks the pending ones done (plans/report_tail.py). The
-        # store's schema comes from plan analysis (no job): a run that
-        # curated no row leaves no parquet file to infer it from ----
-        schema = finish_curation(
+        # marks the pending ones done (plans/report_tail.py). The store
+        # is read with the schema of the plan that writes it, since a
+        # run that curated no row leaves no parquet file to infer it
+        # from: `df` is analysed already; otherwise finish_curation is
+        # analysed (no job) ----
+        written = df if pending else finish_curation(
             prepare_pages(pages, cfg).withColumn("exact_dup", F.lit(False)), cfg
-        ).schema
-        cur = spark.read.schema(schema).parquet(curated_path).where(
+        )
+        cur = spark.read.schema(written.schema).parquet(curated_path).where(
             F.col("bucket").isin(sorted(manifest.done_buckets() + pending))
         )
         paths = run_report_tail(spark, cur, cfg, manifest, tracker, url_flagged, pending)

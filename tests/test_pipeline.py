@@ -232,25 +232,28 @@ EMPTY_RUN_REPORTS = {
 def test_empty_run_reports(spark, outdir, capsys):
     """A run in which no page survives the filters writes no curated
     file; it still reads the store with the schema the plan writes,
-    produces every expected report and fires check 1.03."""
+    produces every expected report and fires check 1.03, and so does
+    the resume over that store, with nothing pending."""
     import json
 
     from pcornet_data_curation_spark.__main__ import main
     from pcornet_data_curation_spark.plans.pipeline import EXPECTED_REPORTS
 
     cfg = PipelineConfig(output_root=outdir, n_buckets=4)
-    res = run_pipeline(spark, pages_df(spark, 20).limit(0), cfg)
-    assert res["stats"] == {"buckets_done": 4, "buckets_processed_now": 4, "rows": 0, "kept": 0}
-    assert sorted(os.listdir(res["reports"])) == sorted(EXPECTED_REPORTS)
-    for name, want in EMPTY_RUN_REPORTS.items():
-        table = pq.read_table(os.path.join(res["reports"], name))
-        rows = [tuple(r.values()) for r in table.to_pylist()]
-        if name == "run_metadata":  # engine version and output path vary
-            rows = [(k, None if k in ("spark_version", "output_root") else v) for k, v in rows]
-        assert rows == want, name
-    exc = pq.read_table(res["exceptions"]).to_pylist()
-    viability = [(e["observed"], e["exception"]) for e in exc if e["check_id"] == "1.03"]
-    assert viability == [(0.0, True)]
+    for pending in (4, 0):
+        res = run_pipeline(spark, pages_df(spark, 20).limit(0), cfg)
+        stats = {"buckets_done": 4, "buckets_processed_now": pending, "rows": 0, "kept": 0}
+        assert res["stats"] == stats
+        assert sorted(os.listdir(res["reports"])) == sorted(EXPECTED_REPORTS)
+        for name, want in EMPTY_RUN_REPORTS.items():
+            table = pq.read_table(os.path.join(res["reports"], name))
+            rows = [tuple(r.values()) for r in table.to_pylist()]
+            if name == "run_metadata":  # engine version and output path vary
+                rows = [(k, None if k in ("spark_version", "output_root") else v) for k, v in rows]
+            assert rows == want, name
+        exc = pq.read_table(res["exceptions"]).to_pylist()
+        viability = [(e["observed"], e["exception"]) for e in exc if e["check_id"] == "1.03"]
+        assert viability == [(0.0, True)]
 
     capsys.readouterr()
     assert main(["check", "--output", outdir]) == 0
