@@ -352,15 +352,18 @@ def run_pipeline(
                 )
 
         # ---- reporting over done + just-written buckets; the tail
-        # marks the pending ones done (plans/report_tail.py). The store
-        # is read with the schema of the plan that writes it, since a
-        # run that curated no row leaves no parquet file to infer it
-        # from: `df` is analysed already; otherwise finish_curation is
-        # analysed (no job) ----
-        written = df if pending else finish_curation(
-            prepare_pages(pages, cfg).withColumn("exact_dup", F.lit(False)), cfg
-        )
-        cur = spark.read.schema(written.schema).parquet(curated_path).where(
+        # marks the pending ones done (plans/report_tail.py). A store
+        # that may hold no row has no parquet file to infer its schema
+        # from, so it is read with the schema of the plan that writes
+        # it: `df`'s is analysed already; for a store that holds no
+        # row, finish_curation is analysed (no job) ----
+        reader = spark.read
+        if pending:
+            reader = reader.schema(df.schema)
+        elif not any(v["rows"] for v in manifest.data["buckets"].values()):
+            prepared = prepare_pages(pages, cfg).withColumn("exact_dup", F.lit(False))
+            reader = reader.schema(finish_curation(prepared, cfg).schema)
+        cur = reader.parquet(curated_path).where(
             F.col("bucket").isin(sorted(manifest.done_buckets() + pending))
         )
         paths = run_report_tail(spark, cur, cfg, manifest, tracker, url_flagged, pending)
