@@ -28,8 +28,9 @@ the curated write; the tail's bucket pass counts each bucket this run
 wrote and marks it done in the manifest before the other passes run,
 so a run killed in between leaves those buckets pending for the resume
 to rewrite. The manifest's store-format guard means `curated` always
-has the schema `finish_curation` writes; it is read once per run, with
-that schema, so a run that curated no row still reports.
+has the schema `finish_curation` writes. It is read once per run, with
+that schema whenever the store may hold no row, so a run that curated
+no row still reports.
 
 Scale design (100 TB / 10^12 docs):
 * the fact table is touched exactly once per run; the report passes
